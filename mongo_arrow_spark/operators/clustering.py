@@ -38,6 +38,8 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mongo_arrow_spark.execution import materialize
+
 # int64 bounds for the JSON-literal fast path below: a quantized value
 # outside bigint range must take the expression-tree spelling (whose
 # lit().cast() raises loudly) rather than silently null out in from_json
@@ -115,7 +117,7 @@ def quantize_vec(col: Column | str, scale: int = 10_000) -> Column:
     )
 
 
-def _sq_dist(q: Column, centroid: list) -> Column:
+def sq_dist(q: Column, centroid: list) -> Column:
     """Integer squared L2 distance between a quantized vector column and
     a literal centroid — whole-stage codegen, no join."""
     lit = const_array([int(v) for v in centroid], "array<bigint>")
@@ -137,7 +139,7 @@ def _sq_dist(q: Column, centroid: list) -> Column:
 _MAX_LITERAL_CELLS = 65_536
 
 
-def _argmin_cluster(q: Column, centroids: list) -> Column:
+def argmin_cluster(q: Column, centroids: list) -> Column:
     """Index of the nearest centroid, ties to the lowest index (the
     struct array_min orders by (dist, idx) lexicographically). Refuses
     models above ``_MAX_LITERAL_CELLS`` literal cells — see note."""
@@ -149,7 +151,7 @@ def _argmin_cluster(q: Column, centroids: list) -> Column:
             "with IVF routing (ivf_pq_topk) and/or PQ subspaces (fit_pq) "
             "instead of one flat codebook"
         )
-    # one 2-D literal + transform instead of k separate _sq_dist trees:
+    # one 2-D literal + transform instead of k separate sq_dist trees:
     # same left-to-right integer folds and the same lexicographic
     # (dist, idx) min — only the plan-node count changes (k×d literal
     # nodes → 1), which at k=32..1024 was seconds of per-query analysis
@@ -201,8 +203,6 @@ def kmeans_fit(
     """
     if k < 1 or iters < 0:
         raise ValueError("k must be >= 1 and iters >= 0")
-    from pyspark import StorageLevel
-
     q = df.filter(
         F.col(vec_col).isNotNull()
         & F.forall(F.col(vec_col), lambda x: x.isNotNull())
@@ -213,7 +213,7 @@ def kmeans_fit(
     # iters+1 actions over q — uncached, each one would re-scan the
     # whole corpus at 100 TB. The cached form is (id, quantized vector)
     # only, never payloads; released before returning.
-    cached = q = q.persist(StorageLevel.MEMORY_AND_DISK)
+    cached = q = materialize(q)
     try:
         init_rows = (
             q.orderBy(F.md5(F.col("__id").cast("string")), F.col("__id"))
@@ -232,7 +232,7 @@ def kmeans_fit(
         q = q.filter(F.size("__q") == d)
         for _ in range(iters):
             assigned = q.withColumn(
-                "__c", _argmin_cluster(F.col("__q"), cents)
+                "__c", argmin_cluster(F.col("__q"), cents)
             )
             stats = assigned.groupBy("__c").agg(
                 F.count(F.lit(1)).alias("__n"),
@@ -277,7 +277,7 @@ def kmeans_assign(
     )
     return df.withColumn(
         out_col,
-        F.when(valid, _argmin_cluster(q, model.centroids)).cast("long"),
+        F.when(valid, argmin_cluster(q, model.centroids)).cast("long"),
     )
 
 

@@ -27,10 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# module knob for the stage-2d survivor checkpoint (True in production;
-# a knob so the A/B harness and tests can isolate its effect)
-_CHECKPOINT_SURVIVORS = True
-
+from mongo_arrow_spark.execution import materialize
 from mongo_arrow_spark.operators import dedup as dedup_ops
 from mongo_arrow_spark.operators import membership as membership_ops
 from mongo_arrow_spark.operators import quality as quality_ops
@@ -297,33 +294,21 @@ def curate(
         )
 
     # 2d. materialize the survivor frame ONCE before the whole-corpus
-    # stages (r15, the r14 verdict's curate item): the (quality gate +
-    # exact dedup) lineage above is consumed by up to three independent
-    # subtrees — the fuzzy stage's candidate pairs (via the
-    # connected-components checkpoint), decontamination's persisted
-    # posting base, and the output rows themselves — and without a cut
-    # each one re-evaluated the full upstream scan + regex gate + digest
-    # agg + join. A lazy persist makes the first consumer materialize
-    # it and every later consumer read the cached partitions (a scan,
-    # not a recompute). persist rather than localCheckpoint: the same
-    # single-materialization reuse, but lineage survives — at cluster
-    # scale an executor loss recomputes the lost partitions instead of
-    # killing the job (localCheckpoint truncates lineage; the
-    # connected-components edge checkpoint is bounded-size and keeps
-    # that trade, a corpus-sized survivor frame must not). The cost is
-    # survivor payloads on executor storage (MEMORY_AND_DISK) — at
-    # 100 TB one extra corpus-sized write in exchange for dropping up
-    # to two full pipeline re-evaluations. Gated on ≥2 of the heavy
-    # stages being enabled: the fuzzy stage alone re-reads `kept` only
-    # once (its pairs base is persisted internally), where the
-    # measured benefit is inside the noise (OPTIMIZATION_r15.md).
+    # stages (r15): the (quality gate + exact dedup) lineage above feeds
+    # up to three independent subtrees — the fuzzy stage's candidate
+    # pairs, decontamination's posting base and the output rows — and
+    # without a cut each one re-evaluates the upstream scan + regex gate
+    # + digest agg + join. persist rather than localCheckpoint: lineage
+    # survives, so an executor loss recomputes the lost partitions
+    # instead of killing the job. Gated on ≥2 heavy stages: the fuzzy
+    # stage alone re-reads `kept` once, where the measured benefit is
+    # inside the noise (OPTIMIZATION_r15.md). An enclosing
+    # execution.scope() releases it.
     _heavy_stages = (jaccard_threshold is not None) + (
         strip_spans_k is not None
     ) + (holdout is not None)
-    if _CHECKPOINT_SURVIVORS and _heavy_stages >= 2:
-        from pyspark import StorageLevel
-
-        kept = kept.persist(StorageLevel.MEMORY_AND_DISK)
+    if _heavy_stages >= 2:
+        kept = materialize(kept)
 
     # 3. fuzzy dedup — candidate pairs → components → min-id survivors
     if jaccard_threshold is not None:

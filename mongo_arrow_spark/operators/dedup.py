@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mongo_arrow_spark.execution import broadcast_budget, materialize
+from mongo_arrow_spark.operators.clustering import argmin_cluster, quantize_vec
 from mongo_arrow_spark.operators.text import bind, normalize_text, tokens
 
 
@@ -131,8 +133,6 @@ def ngram_jaccard_pairs(
     |A∩B|; |A∪B| = |A|+|B|-|A∩B|. Shuffles scale with posting-list mass,
     not docs² — cap with ``max_df`` on web-scale corpora.
     """
-    from pyspark import StorageLevel
-
     max_df = _resolve_max_df(df, max_df)
     # one shingle pass: posting list is built once, persisted (at corpus
     # scale use DISK-backed persist or a checkpoint table), and set sizes
@@ -148,7 +148,7 @@ def ngram_jaccard_pairs(
     base = df.select(
         F.col(id_col).alias("id"),
         F.transform(shingles(text_col, n), lambda s: F.xxhash64(s)).alias("sharr"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).transform(materialize)
     sizes = base.select("id", F.size("sharr").cast("long").alias("sz"))
     posts_all = base.select("id", F.explode("sharr").alias("sh"))
     posts = posts_all
@@ -256,8 +256,6 @@ def banded_jaccard_pairs(
     Deterministic in both engines: md5 hex + string MIN are identical in
     Spark and DuckDB, which is what lets the driver hash-grade the full
     output (unlike xxhash64-based MinHash)."""
-    from pyspark import StorageLevel
-
     # spread the signature computation: the md5-per-(shingle×band) work
     # is the dominant cost and runs BEFORE any shuffle, so a few input
     # splits (one, for a single local file) would serialize it on a few
@@ -276,7 +274,7 @@ def banded_jaccard_pairs(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
         .repartition(df.sparkSession.sparkContext.defaultParallelism)
         .select("id", shingles("__t", n).alias("sharr"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(materialize)
     )
     # all 2×bands per-shingle minima in ONE row-level projection, then
     # an explode of the slim (band, sig) structs (r14): the previous
@@ -373,7 +371,7 @@ def minhash_lsh_pairs(
     corpora where exact Jaccard's posting join is too heavy.
     """
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, id_col, text_col, n, num_hashes).cache()
+    sigs = materialize(minhash_signatures(df, id_col, text_col, n, num_hashes))
     band_keys = sigs.select(
         "id",
         F.explode(_band_key_structs(bands, rows_per_band)).alias("bk"),
@@ -548,9 +546,13 @@ def probe_neardup(
     # signatures feed both the band keys and the verification join —
     # cache so the 64-hash aggregate runs once per doc (the
     # minhash_lsh_pairs discipline)
-    bsigs = minhash_signatures(
-        batch, id_col, text_col, p["n"], p["num_hashes"], p["seed"]
-    ).select("id", _sig_with_bands(p["bands"], rows_per_band).alias("p")).cache()
+    bsigs = (
+        minhash_signatures(
+            batch, id_col, text_col, p["n"], p["num_hashes"], p["seed"]
+        )
+        .select("id", _sig_with_bands(p["bands"], rows_per_band).alias("p"))
+        .transform(materialize)
+    )
     # band keys carry IDS ONLY: the (band, bh) join shuffles ~24 B/row
     # instead of dragging both 64-long signatures through it (sig ×16
     # band duplication was the dominant shuffle mass); signatures join
@@ -650,7 +652,7 @@ def simhash_pairs(
     mask = (1 << bits_per_band) - 1
     sh = df.select(
         F.col(id_col).alias("id"), simhash(text_col, bits).alias("sh")
-    ).cache()
+    ).transform(materialize)
     keys = sh.select(
         "id",
         "sh",
@@ -939,34 +941,10 @@ def canonical_survivors(
     )
 
 
-# pre-filter broadcast budget: ~bytes per key in the built
-# LongHashedRelation (conservative) and the floor the gate applies even
-# when the session's autoBroadcastJoinThreshold is lowered/disabled —
-# module constants so tests can pin the fallback path with small data
+# pre-filter broadcast cost: ~bytes per key in the built
+# LongHashedRelation (conservative) — a module constant so tests can pin
+# the fallback path with small data
 _PREFILTER_KEY_BYTES = 48
-_PREFILTER_FLOOR_BYTES = 10 * 1024 * 1024
-
-_SIZE_SUFFIXES = {
-    "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20, "mb": 1 << 20,
-    "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40, "tb": 1 << 40,
-}
-
-
-def _size_conf_bytes(spark, key: str, default: int) -> int:
-    """A byte-size session conf as an int (plain bytes or a b/k/m/g/t
-    suffix, Spark's own accepted forms); non-positive or unparsable
-    values fall back to ``default``."""
-    try:
-        raw = str(spark.conf.get(key)).strip().lower()
-        for suf in sorted(_SIZE_SUFFIXES, key=len, reverse=True):
-            if raw.endswith(suf):
-                val = int(float(raw[: -len(suf)]) * _SIZE_SUFFIXES[suf])
-                break
-        else:
-            val = int(raw)
-    except Exception:
-        return default
-    return val if val > 0 else default
 
 
 def cross_jaccard_pairs(
@@ -1000,15 +978,13 @@ def cross_jaccard_pairs(
     is skipped and the plan falls back to the plain posting join, which
     handles any right size. Results are identical on both paths.
     """
-    from pyspark import StorageLevel
-
     def prep(df, side):
         return df.select(
             F.col(id_col).alias(f"id_{side}"),
             F.transform(shingles(text_col, n), lambda s: F.xxhash64(s)).alias(
                 "sharr"
             ),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        ).transform(materialize)
 
     if isinstance(max_df, float) and 0 < max_df < 1:
         # the df this caps is counted across BOTH corpora, so the
@@ -1033,25 +1009,18 @@ def cross_jaccard_pairs(
     # right prep frame (an exact upper bound on the distinct key count;
     # one cached-scan aggregate whose materialization the join below
     # needs anyway) must clear a key budget derived from the session's
-    # broadcast threshold. Oversized right corpora skip the pre-filter
+    # broadcast budget (execution.broadcast_budget: the default 10 MB
+    # admits ~2×10⁵ keys). Oversized right corpora skip the pre-filter
     # and take the plain posting join — same result, no OOM-able
-    # driver-side build.
+    # driver-side build. A NULL shingle array (NULL text) counts 0: its
+    # size() is NULL, or -1 under legacy sizeOfNull, and must not pull
+    # the bound down.
     n_rkeys_bound = rbase.agg(
-        F.sum(F.size("sharr")).cast("long")
+        F.sum(F.greatest(F.size("sharr"), F.lit(0))).cast("long")
     ).first()[0]
-    # ~48 bytes/key in the built LongHashedRelation is the conservative
-    # figure; the default 10 MB autoBroadcastJoinThreshold then admits
-    # ~2×10⁵ keys — scale with the session's configured threshold so a
-    # cluster that raised it admits proportionally larger holdouts
-    # (a disabled threshold, -1, keeps the 10 MB floor: the pre-filter
-    # is our own plan choice, not an auto-join decision)
-    thresh = _size_conf_bytes(
-        left.sparkSession, "spark.sql.autoBroadcastJoinThreshold",
-        _PREFILTER_FLOOR_BYTES,
-    )
     if n_rkeys_bound is not None and (
         n_rkeys_bound * _PREFILTER_KEY_BYTES
-        <= max(thresh, _PREFILTER_FLOOR_BYTES)
+        <= broadcast_budget(left.sparkSession)
     ):
         rkeys = rbase.select(F.explode("sharr").alias("sh")).distinct()
         lposts = lposts.join(F.broadcast(rkeys), "sh", "left_semi")
@@ -1201,9 +1170,7 @@ def semantic_dedup_pairs(
     from mongo_arrow_spark.operators.similarity import dot, normalize
 
     if kmeans_model is not None:
-        from mongo_arrow_spark.operators.clustering import _argmin_cluster, quantize_vec
-
-        cell = _argmin_cluster(
+        cell = argmin_cluster(
             quantize_vec(vec_col, kmeans_model.scale), kmeans_model.centroids
         )
     else:
@@ -1316,8 +1283,6 @@ def duplicate_spans(
     span; only duplicates shorter than ``k`` tokens are missed.
     ``max_df`` caps pathological fingerprints (boilerplate that appears
     everywhere) exactly like the Jaccard posting-list cap."""
-    from pyspark import StorageLevel
-
     max_df = _resolve_max_df(df, max_df)
     # tokenize + window-hash ONCE and persist the compact (id, pos, g)
     # table — it feeds both the count agg and the position join-back, and
@@ -1342,7 +1307,7 @@ def duplicate_spans(
         )
         .filter(F.length("g") > 0)
         .withColumn("g", F.xxhash64("g"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(materialize)
     )
 
     counts = grams.groupBy("g").agg(F.count("*").alias("n"))

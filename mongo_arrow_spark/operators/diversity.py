@@ -25,7 +25,7 @@ Scale design (100 TB posture):
 - Lineage grows by one projection (plus, grouped, one broadcast join)
   per step; ``rematerialize_every`` localCheckpoints the candidate frame
   so neither the plan nor the recompute cost grows quadratically in k
-  (the ``_prefix_offsets`` checkpoint discipline: GC-releasable, unlike
+  (the ``selection.prefix_join`` checkpoint discipline: GC-releasable, unlike
   an operator-internal persist).
 - k (and the group count G) are coordination-bounded: the driver holds
   the selected ids and one d-vector per group per step — the
@@ -45,9 +45,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mongo_arrow_spark.operators.clustering import (
-    _sq_dist,
     const_array,
     quantize_vec,
+    sq_dist,
 )
 
 
@@ -235,7 +235,7 @@ def kcenter_select(
         """dmin := least(dmin, dist to the group's NEW center) — global:
         literal center, pure projection; grouped: broadcast ≤G-row join."""
         if not grouped:
-            dist = _sq_dist(F.col("__q"), centers[None])
+            dist = sq_dist(F.col("__q"), centers[None])
             new = dist if first else F.least("__dmin", dist)
             return frame.withColumn("__dmin", new)
         g_t = frame.schema["__g"].dataType.simpleString()

@@ -46,6 +46,8 @@ from collections import Counter
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from mongo_arrow_spark.execution import spread
+
 __all__ = [
     "LANG_SAMPLES",
     "CONFUSABLE_GROUPS",
@@ -545,14 +547,9 @@ def identify_language(
     prof = F.broadcast(_profile_df(spark, profiles))
     # spread the trigram explode (r14): the per-row trigram build, the
     # ~600-way explode, the broadcast probe and the partial aggregation
-    # all run on the INPUT partitioning, so a few-split local input
-    # serializes the dominant stage on a few cores. similarity._spread
-    # is a no-op whenever the input already has >= defaultParallelism
-    # partitions — nothing is added on the 100 TB path, and the final
-    # per-doc aggregation is partitioning-independent.
-    from mongo_arrow_spark.operators.similarity import _spread
-
-    df = _spread(df)
+    # all run on the INPUT partitioning; the final per-doc aggregation
+    # is partitioning-independent
+    df = spread(df)
     # explode_outer + LEFT join: a document whose trigrams match no
     # profile row (or whose text is NULL/too short) keeps NULL-lang
     # rows that aggregate into a (0.0, 'und') candidate — no docs drop

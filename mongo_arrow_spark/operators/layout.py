@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mongo_arrow_spark.execution import partition_count
+
 
 def interleave_bits(cols: list, bits: int = 8) -> Column:
     """Morton interleave of already-quantized integer ranks: bit ``b`` of
@@ -124,10 +126,7 @@ def write_zordered(
     tests/test_layout.py's pruning measurement rather than asserted
     here."""
     keyed = zorder_key(df, cols, bits)
-    n = int(
-        num_files
-        or df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n = partition_count(df.sparkSession, num_files)
     (
         keyed.repartitionByRange(n, "zkey")
         .sortWithinPartitions("zkey")

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mongo_arrow_spark.operators.selection import grouped_prefix_join, prefix_join
 from mongo_arrow_spark.operators.text import token_count
 
 __all__ = [
@@ -318,7 +319,7 @@ def assign_token_shards(
     max-document of the budget (a long document overshooting a boundary
     delays the next shard's first start by the overshoot).
 
-    The running total is the ``selection._prefix_offsets`` distributed
+    The running total is the ``selection.prefix_join`` distributed
     prefix sum (range partition on the order → bounded per-partition
     subtotal collect → broadcast offsets → per-partition windows) — the
     exact global cumsum with NO single-task window, bit-identical to the
@@ -335,13 +336,6 @@ def assign_token_shards(
     """
     if tokens_per_shard < 1:
         raise ValueError("tokens_per_shard must be >= 1")
-    from mongo_arrow_spark.operators.selection import _prefix_offsets
-
-    spark = df.sparkSession
-    nparts = int(
-        num_partitions
-        or spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
     order = order_by or [
         _order_hash(id_col, "shard").asc(),
         F.col(id_col).asc(),
@@ -354,8 +348,8 @@ def assign_token_shards(
         ).cast("long"),
         F.lit(0).cast("long"),
     )
-    ranged, off = _prefix_offsets(
-        df.withColumn("n_tokens", tok), order, nparts, "n_tokens"
+    joined = prefix_join(
+        df.withColumn("n_tokens", tok), order, "n_tokens", num_partitions
     )
     w = (
         Window.partitionBy("__pid")
@@ -363,8 +357,7 @@ def assign_token_shards(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        ranged.join(F.broadcast(off), "__pid")
-        .withColumn(
+        joined.withColumn(
             "__cum", F.sum("n_tokens").over(w) + F.col("__off")
         )
         # exclusive prefix: the shard a document STARTS in
@@ -430,7 +423,7 @@ def bucket_batches(
     semantics per bucket).
 
     Scale shape: the GROUPED distributed prefix sum
-    (``selection._grouped_prefix_join``) — range partition on (bucket,
+    (``selection.grouped_prefix_join``) — range partition on (bucket,
     order), bounded per-(bucket, partition) offsets, parallel windows —
     so the one giant bucket every real corpus has (most documents are
     short) never serializes into one task, unlike a plain
@@ -446,12 +439,6 @@ def bucket_batches(
         raise ValueError("capacity must be >= 1")
     if bucket_col is None and bucket_width < 1:
         raise ValueError("bucket_width must be >= 1")
-    from mongo_arrow_spark.operators.selection import (
-        _grouped_prefix_join,
-        _nparts,
-    )
-
-    nparts = _nparts(df.sparkSession, num_partitions)
     tok = F.coalesce(
         (
             F.col(n_tokens_col) if n_tokens_col else token_count(text_col)
@@ -465,8 +452,8 @@ def bucket_batches(
         else F.expr(f"n_tokens div CAST({bucket_width} AS BIGINT)"),
     )
     order = [_order_hash(id_col, salt).asc(), F.col(id_col).asc()]
-    joined = _grouped_prefix_join(
-        staged, ["len_bucket"], order, nparts, "n_tokens"
+    joined = grouped_prefix_join(
+        staged, ["len_bucket"], order, "n_tokens", num_partitions
     )
     w = (
         Window.partitionBy("len_bucket", "__pid")

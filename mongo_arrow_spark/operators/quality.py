@@ -21,6 +21,7 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mongo_arrow_spark.execution import materialize
 from mongo_arrow_spark.operators.text import bind, tokens
 
 # --------------------------------------------------------------- repetition
@@ -813,8 +814,6 @@ def fit_token_logodds(
     tokens score the same smoothed default an OOV token does, exactly
     the hashing-trick/fasttext bucket semantics.
     """
-    from pyspark import StorageLevel
-
     toks = seed.select(
         F.col(label_col).cast("boolean").alias("__pos"),
         F.explode(tokens(text_col)).alias("w"),
@@ -825,7 +824,7 @@ def fit_token_logodds(
     agg = toks.groupBy("w").agg(
         F.sum(F.when(F.col("__pos"), 1).otherwise(0)).cast("double").alias("pc"),
         F.sum(F.when(F.col("__pos"), 0).otherwise(1)).cast("double").alias("nc"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).transform(materialize)
     tot = agg.agg(
         F.sum("pc").alias("p"),
         F.sum("nc").alias("n"),
@@ -850,7 +849,7 @@ def fit_token_logodds(
             F.log((F.col("pc") + F.lit(alpha)) / F.lit(p_denom))
             - F.log((F.col("nc") + F.lit(alpha)) / F.lit(n_denom))
         ).cast("double").alias("log_odds"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).transform(materialize)
     # materialize the MODEL cache and release the intermediate — a fit
     # leaves exactly one cached (vocab-sized) table behind, released by
     # model.unpersist(), instead of leaking one block per fit call
@@ -1025,8 +1024,6 @@ def fit_bucket_ratios(
             F.lit(is_target).alias("__t"),
         )
 
-    from pyspark import StorageLevel
-
     # both per-bucket counts come out of ONE aggregation over the tagged
     # union (sums of exact small doubles — bit-identical to the per-side
     # count casts); ≤ buckets rows, persisted so the single totals
@@ -1043,7 +1040,7 @@ def fit_bucket_ratios(
             .cast("double")
             .alias("rc"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(materialize)
     )
     row = counts.agg(F.sum("tc"), F.sum("rc")).first()
     t_tot = float(row[0] or 0.0)
@@ -1056,7 +1053,7 @@ def fit_bucket_ratios(
             F.log((F.col("tc") + F.lit(alpha)) / F.lit(t_denom))
             - F.log((F.col("rc") + F.lit(alpha)) / F.lit(r_denom))
         ).cast("double").alias("lr"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).transform(materialize)
     # materialize the model cache, release the union intermediate — a
     # fit leaves one ≤buckets-row cached table, freed by
     # model.unpersist()

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mongo_arrow_spark.execution import partition_count
 from mongo_arrow_spark.operators.text import token_count
 
 
@@ -102,17 +103,15 @@ def select_token_budget_per_group(
     WITHIN the group)."""
     if budget < 0:
         raise ValueError("budget must be >= 0")
-    spark = df.sparkSession
-    nparts = _nparts(spark, num_partitions)
     tok = (
         F.col(token_col).cast("long")
         if token_col
         else token_count(text_col).cast("long")
     )
     order = [F.col(score_col).desc(), F.col(id_col).asc()]
-    joined = _grouped_prefix_join(
-        df.withColumn("n_tokens", tok), [group_col], order, nparts,
-        "n_tokens",
+    joined = grouped_prefix_join(
+        df.withColumn("n_tokens", tok), [group_col], order, "n_tokens",
+        num_partitions,
     )
     w = (
         Window.partitionBy(group_col, "__pid")
@@ -155,7 +154,7 @@ def select_token_budget(
     1. ``repartitionByRange`` on the total order — Spark's range
        partitioner keeps partitions balanced and order-aligned (the
        same machinery a global ``orderBy`` uses); the partitioning is
-       materialized ONCE via localCheckpoint (see ``_prefix_offsets``).
+       materialized ONCE via localCheckpoint (see ``prefix_join``).
     2. Per-partition token subtotals: ``num_partitions`` rows, collected
        to the driver (bounded by the partition count, NOT the corpus)
        and turned into exclusive prefix offsets.
@@ -169,16 +168,14 @@ def select_token_budget(
     """
     if budget < 0:
         raise ValueError("budget must be >= 0")
-    spark = df.sparkSession
-    nparts = _nparts(spark, num_partitions)
     tok = (
         F.col(token_col).cast("long")
         if token_col
         else token_count(text_col).cast("long")
     )
     order = [F.col(score_col).desc(), F.col(id_col).asc()]
-    ranged, off = _prefix_offsets(
-        df.withColumn("n_tokens", tok), order, nparts, "n_tokens"
+    joined = prefix_join(
+        df.withColumn("n_tokens", tok), order, "n_tokens", num_partitions
     )
     w = (
         Window.partitionBy("__pid")
@@ -186,8 +183,7 @@ def select_token_budget(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        ranged.join(F.broadcast(off), "__pid")
-        .withColumn(
+        joined.withColumn(
             "cum_tokens", (F.sum("n_tokens").over(w) + F.col("__off")).cast("long")
         )
         .where(F.col("cum_tokens") <= budget)
@@ -195,33 +191,31 @@ def select_token_budget(
     )
 
 
-def _nparts(spark, num_partitions: int | None) -> int:
-    """Shared partition-count resolution for the prefix-sum family: the
-    caller's explicit value, else the session shuffle-partition conf."""
-    return int(
-        num_partitions
-        or spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-
-
-def _prefix_offsets(df: DataFrame, order_by: list, nparts: int, weight_col: str | None):
+def prefix_join(
+    df: DataFrame,
+    order_by: list,
+    weight_col: str | None = None,
+    num_partitions: int | None = None,
+) -> DataFrame:
     """Shared scaffold of the distributed prefix ops: range-partition on
-    the total order, materialize ONE fixed partitioning, and compute the
+    the total order, materialize ONE fixed partitioning, compute the
     exclusive per-partition prefix offsets (``weight_col=None`` counts
-    rows). Returns ``(ranged, offsets_df)``.
+    rows) and broadcast them back: returns the ranged frame with
+    ``__pid`` and ``__off`` attached.
 
     MUST materialize one partitioning: ``repartitionByRange`` SAMPLES
     its boundaries with a per-evaluation seed, so the offsets collect
     and the caller's final join would otherwise see slightly different
     partitionings and boundary rows get stale offsets (r8 fix, caught by
     the curriculum_rank sf0.1 gate). ``localCheckpoint`` rather than
-    ``persist``: a cache-manager pin from inside an operator can never
-    be released by the caller (unpersist on the derived result is a
-    no-op), while checkpoint blocks are freed by the ContextCleaner once
-    the returned frames are garbage-collected. No sortWithinPartitions —
+    ``persist``: a cache-manager pin from inside an operator is released
+    only by an enclosing ``execution.scope()`` (unpersist on the derived
+    result is a no-op), while checkpoint blocks are freed by the
+    ContextCleaner once the returned frames are garbage-collected. No sortWithinPartitions —
     the caller's partitioned window re-sorts anyway; __pid depends only
     on the range boundaries."""
     spark = df.sparkSession
+    nparts = partition_count(spark, num_partitions)
     ranged = (
         df.repartitionByRange(nparts, *order_by)
         .withColumn("__pid", F.spark_partition_id())
@@ -240,7 +234,8 @@ def _prefix_offsets(df: DataFrame, order_by: list, nparts: int, weight_col: str 
     for pid in range(nparts):
         offsets.append((pid, acc))
         acc += int(totals.get(pid, 0) or 0)
-    return ranged, spark.createDataFrame(offsets, "__pid int, __off long")
+    off = spark.createDataFrame(offsets, "__pid int, __off long")
+    return ranged.join(F.broadcast(off), "__pid")
 
 
 def _grouped_prefix_offsets(
@@ -264,11 +259,11 @@ def _grouped_prefix_offsets(
     the offsets are computed DISTRIBUTED with a per-group window over
     that tiny frame — no driver collect at all, and the per-group
     window serializes ≤ nparts boundary rows per group, never data.
-    Same materialize-once contract as ``_prefix_offsets`` (range
+    Same materialize-once contract as ``prefix_join`` (range
     boundaries are sampled per evaluation — localCheckpoint pins ONE
     partitioning). NULL group keys form their own group (SQL PARTITION
     BY semantics); the caller's join-back must be null-safe —
-    ``_grouped_prefix_join`` handles both."""
+    ``grouped_prefix_join`` handles both."""
     ranged = (
         df.repartitionByRange(
             nparts, *[F.col(g) for g in group_cols], *order_by
@@ -295,12 +290,12 @@ def _grouped_prefix_offsets(
     return ranged, off
 
 
-def _grouped_prefix_join(
+def grouped_prefix_join(
     df: DataFrame,
     group_cols: list[str],
     order_by: list,
-    nparts: int,
-    weight_col: str | None,
+    weight_col: str | None = None,
+    num_partitions: int | None = None,
 ) -> DataFrame:
     """``_grouped_prefix_offsets`` + the null-safe offsets join-back:
     returns the ranged frame with ``__pid`` and ``__off`` attached. The
@@ -309,7 +304,8 @@ def _grouped_prefix_join(
     every group is small and a plain ``Window.partitionBy(group)`` is
     the right tool instead of this machinery."""
     ranged, off = _grouped_prefix_offsets(
-        df, group_cols, order_by, nparts, weight_col
+        df, group_cols, order_by,
+        partition_count(df.sparkSession, num_partitions), weight_col,
     )
     renamed = off.select(
         *[F.col(g).alias(f"__g{i}") for i, g in enumerate(group_cols)],
@@ -341,9 +337,9 @@ def assign_group_rank(
     Bit-identical to ``row_number() OVER (PARTITION BY group ORDER BY
     …)`` at any partition count (pinned by the skew + invariance
     tests). ``order_by`` must be total within each group."""
-    spark = df.sparkSession
-    nparts = _nparts(spark, num_partitions)
-    joined = _grouped_prefix_join(df, group_cols, order_by, nparts, None)
+    joined = grouped_prefix_join(
+        df, group_cols, order_by, num_partitions=num_partitions
+    )
     w = Window.partitionBy(*group_cols, "__pid").orderBy(*order_by)
     return (
         joined.withColumn(
@@ -491,12 +487,9 @@ def assign_global_rank(
 
     ``order_by`` must be a TOTAL order (tie-break on a unique id), or
     ranks are nondeterministic under retries."""
-    spark = df.sparkSession
-    nparts = _nparts(spark, num_partitions)
-    ranged, off = _prefix_offsets(df, order_by, nparts, None)
     w = Window.partitionBy("__pid").orderBy(*order_by)
     return (
-        ranged.join(F.broadcast(off), "__pid")
+        prefix_join(df, order_by, num_partitions=num_partitions)
         .withColumn(
             rank_col, (F.row_number().over(w) + F.col("__off")).cast("long")
         )

@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mongo_arrow_spark.execution import materialize, spread
 from mongo_arrow_spark.operators.clustering import const_array
 
 
@@ -776,12 +777,10 @@ def fit_pq(
             for j in range(m)
         ],
     )
-    from pyspark import StorageLevel
-
     # persist the shared sliced frame ONCE: each subspace fit otherwise
     # re-scans the raw corpus to materialize its own projection — m full
     # scans where one suffices (the fit-stage persist discipline)
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    base = materialize(base)
     try:
         books = []
         for j in range(m):
@@ -810,10 +809,7 @@ def pq_encode(
     codegen projection (the m×k×dsub codebooks compile into the plan as
     literals, a few KB). Corrupt vectors (NULL / NULL element / wrong
     dim) get a NULL code array — the ``kmeans_assign`` contract."""
-    from mongo_arrow_spark.operators.clustering import (
-        _argmin_cluster,
-        quantize_vec,
-    )
+    from mongo_arrow_spark.operators.clustering import argmin_cluster, quantize_vec
 
     v = F.col(vec_col)
     dsub, m = model.dsub, model.m
@@ -825,7 +821,7 @@ def pq_encode(
     )
     codes = F.array(
         *[
-            _argmin_cluster(
+            argmin_cluster(
                 F.slice(q, j * dsub + 1, dsub), model.codebooks[j]
             ).cast("int")
             for j in range(m)
@@ -1146,57 +1142,6 @@ def _hn_side(
     )
 
 
-def _spread(df: DataFrame, rows_per_task: int = 1024) -> DataFrame:
-    """Round-robin repartition toward the session's default parallelism —
-    ONLY when the input has fewer partitions (r10), and only to as many
-    partitions as the estimated row count justifies (r15). The
-    corpus-sized map stages downstream (cell assignment, probe ranking,
-    candidate scoring, regex extraction) otherwise inherit the input's
-    partitioning, and a single-file local read runs them on one task.
-    At cluster scale the input partition count already exceeds
-    defaultParallelism, so this is a no-op — no shuffle is ever ADDED
-    on the 100 TB path.
-
-    Work-aware target (r15, the r14 verdict's top item): fanning a tiny
-    input all the way to defaultParallelism pessimizes the measured
-    configuration — each added partition pays per-task constants
-    (scheduling, codegen/regex setup, one more shuffle block to fetch),
-    and under host load wide waves of tiny tasks straggle (the driver
-    measured q_extract_links 0.37x / q_link_graph 0.42x from the r14
-    always-to-32 form; the quiet-window response curve is flat from ~4
-    partitions up and rises again past ~16 — plans/r15/exp_spread.py).
-    The target is ceil(est_rows / rows_per_task) clamped to
-    [1, defaultParallelism], with est_rows derived from the optimizer's
-    own size estimate (sizeInBytes / schema default row width — the
-    same proxy Spark's stats visitor uses). The estimate only needs to
-    be right on a log scale: a few thousand rows get a few partitions,
-    anything corpus-sized saturates to defaultParallelism, and when
-    stats are unavailable the fallback is the r14 posture (full
-    parallelism). Never spreads a frame whose estimate does not clear
-    rows_per_task — tiny frames stay where they are."""
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
-    nparts = df.rdd.getNumPartitions()
-    if nparts >= par:
-        return df
-    target = par
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        size = int(plan.stats().sizeInBytes())
-        width = sum(
-            int(f.dataType().defaultSize()) for f in plan.schema().fields()
-        )
-        est_rows = size // max(width, 1)
-        target = min(par, max(1, -(-est_rows // max(int(rows_per_task), 1))))
-    except Exception:
-        # stats unreadable (exotic plan/py4j surface) — keep the r14
-        # posture rather than silently serializing a corpus-sized stage
-        target = par
-    if target <= nparts:
-        return df
-    return df.repartition(target)
-
-
 def _hn_topk(pairs, k, max_qdot):
     """Shared scoring tail: integer qdot, semi-hard cut, per-anchor
     row_number <= k (WindowGroupLimit pre-cut shape)."""
@@ -1342,7 +1287,7 @@ def hard_negatives_ivf(
     (measured 51.5 s vs 340.8 s at ×10, same n_probe). Costs one count
     aggregate to size k. The 1024 cap keeps the compiled literal
     centroid table inside codegen budget (k × dim literals — the
-    ``clustering._argmin_cluster`` 64k guard rationale); past it, use
+    ``clustering.argmin_cluster`` 64k guard rationale); past it, use
     the persisted ``build_ivf_pq_index`` route, whose cells are a
     partition column instead of compiled literals.
 
@@ -1408,7 +1353,7 @@ def hard_negatives_ivf(
     self_mine = anchors is corpus
     if self_mine:
         base = (
-            _spread(
+            spread(
                 _hn_side(
                     corpus, id_col, vec_col, label_col, dim, scale,
                     "neg_id", "__bq", "__blbl", keep_vec=True,
@@ -1427,7 +1372,7 @@ def hard_negatives_ivf(
         ).drop("__sorted")
     else:
         corpus_side = (
-            _spread(
+            spread(
                 _hn_side(
                     corpus, id_col, vec_col, label_col, dim, scale,
                     "neg_id", "__bq", "__blbl", keep_vec=True,
@@ -1501,7 +1446,7 @@ def hard_negatives_ivf(
         )
     else:
         dstructs = _dist_structs("__v", centroids)
-        exploded = _spread(
+        exploded = spread(
             _hn_side(
                 anchors, id_col, vec_col, label_col, dim, scale,
                 "anchor_id", "__aq", "anchor_label", keep_vec=True,

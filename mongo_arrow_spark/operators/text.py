@@ -15,6 +15,8 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mongo_arrow_spark.execution import materialize
+
 TOKEN_SEP = " "
 
 
@@ -642,20 +644,18 @@ def fit_ngram_lm(
     TakeOrdered top-k cut that keeps the model broadcast-sized. Fit
     ONCE; ``score_ngram_lm`` scores any batch against the frozen model.
     """
-    from pyspark import StorageLevel
-
     toks = df.select(F.explode(tokens(text_col)).alias("w"))
     # distinct-token sized (≪ corpus); persisted so the unigram fit
     # scans the corpus ONCE — total, the vocab cut, and the unigram
     # table all derive from the cached counts instead of re-exploding
     counts = toks.groupBy("w").agg(
         F.count(F.lit(1)).cast("double").alias("c")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).transform(materialize)
     # ≤ vocab_size rows, evaluated 4× below (count, two semi-joins,
     # unigrams) — cache the cut itself too
     vocab = counts.orderBy(F.col("c").desc(), F.col("w")).limit(
         int(vocab_size)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).transform(materialize)
     # corpus token total == Σ counts — no second corpus scan
     total = float(counts.agg(F.sum("c")).first()[0] or 0.0)
     v = vocab.count()
@@ -690,12 +690,12 @@ def fit_ngram_lm(
         "p",
         "w",
         F.log(F.col("bc") / F.col("pc")).cast("double").alias("blp"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).transform(materialize)
     # materialize the two MODEL caches (≤ vocab/bigram rows) and release
     # the fit intermediates — a fit leaves exactly two cached tables
     # behind, freed together by model.unpersist(), instead of leaking
     # one counts + one vocab block per fit call
-    unigrams = unigrams.persist(StorageLevel.MEMORY_AND_DISK)
+    unigrams = materialize(unigrams)
     unigrams.count()
     bigrams.count()
     counts.unpersist()

@@ -39,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mongo_arrow_spark.execution import materialize, spread
 from mongo_arrow_spark.operators.text import tokens
 
 END_OF_WORD = "</w>"
@@ -104,25 +105,17 @@ def fit_bpe(
     reaches the driver. When the cap actually truncates the vocabulary
     a warning reports the dropped share (no silent caps).
     """
-    from pyspark import StorageLevel
-
     if num_merges < 1:
         raise ValueError("num_merges must be >= 1")
     # spread the word-count explode (r14): the split → explode →
-    # partial-agg stage inherits the input partitioning, so a
-    # single-split local input serialized the dominant scan on one
-    # core. similarity._spread is a no-op whenever the input already
-    # has >= defaultParallelism partitions — nothing is added on the
-    # 100 TB path (the langid/dedup precedent).
-    from mongo_arrow_spark.operators.similarity import _spread
-
+    # partial-agg stage inherits the input partitioning
     counts = (
-        _spread(df.select(F.col(text_col)))
+        spread(df.select(F.col(text_col)))
         .select(F.explode(tokens(text_col)).alias("w"))
         .where(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(materialize)
     )
     top = (
         counts.orderBy(F.col("c").desc(), F.col("w"))

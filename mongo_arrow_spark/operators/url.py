@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mongo_arrow_spark.execution import spread
+
 __all__ = [
     "TRACKING_PARAM_RE",
     "DEFAULT_MULTI_SUFFIXES",
@@ -575,15 +577,10 @@ def link_host_edges(
     pre-shuffle of the input rows — page payloads included — fans the
     regex-heavy extraction out first; at crawl scale the input already
     has more splits than cores and no pre-shuffle happens."""
-    # spread the extraction (r14; work-aware r15): the regex-heavy link
-    # extraction runs BEFORE the one aggregation shuffle and inherits
-    # the input partitioning, so a few-split local input serialized it
-    # on a few cores. similarity._spread is a no-op whenever the input
-    # already has >= defaultParallelism partitions — nothing added at
-    # scale — and sizes the fan-out to the estimated row count.
-    from mongo_arrow_spark.operators.similarity import _spread
-
-    df = _spread(df)
+    # spread the extraction (r14): the regex-heavy link extraction runs
+    # BEFORE the one aggregation shuffle and inherits the input
+    # partitioning
+    df = spread(df)
     edges = df.select(
         url_host(base_url_col).alias("src_host"),
         F.explode(extract_links(html_col, base_url_col)).alias("link"),
@@ -824,12 +821,9 @@ def crawl_frontier(
     rows, payloads included) so the extraction parallelizes; at crawl
     scale the input already has more splits than cores and no
     pre-shuffle happens."""
-    # spread the extraction (r14; work-aware r15): same guard as
-    # link_host_edges — the per-page extraction + canonicalization
-    # dominate and run before the distinct's exchange; no-op at scale.
-    from mongo_arrow_spark.operators.similarity import _spread
-
-    df = _spread(df)
+    # spread the extraction (r14): the per-page extraction +
+    # canonicalization dominate and run before the distinct's exchange
+    df = spread(df)
     links = df.select(
         F.explode(extract_links(html_col, url_col)).alias("url")
     )
@@ -980,15 +974,10 @@ def dedup_by_canonical(
     # group); pages with no declaration key on their own canonical URL
     # spread the keyed projection (r14): the canonical-target extracts,
     # reference resolution, canonicalization and row digest are the
-    # dominant per-row cost and run BEFORE the one shuffle, so a
-    # few-split input (one, for a single local file) would serialize
-    # them on a few cores. similarity._spread is a no-op whenever the
-    # input already has >= defaultParallelism partitions — no shuffle
-    # is ever added on the 100 TB path.
-    from mongo_arrow_spark.operators.similarity import _spread
+    # dominant per-row cost and run BEFORE the one shuffle
     from mongo_arrow_spark.operators.text import bind
 
-    df = _spread(df)
+    df = spread(df)
     # expression-tree discipline (r14): canonicalize_url references its
     # argument ~8 times, and feeding it the composed
     # resolve(canonical_target(payload)) tree inlined that regex-heavy

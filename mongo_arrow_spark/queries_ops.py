@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from mongo_arrow_spark.execution import materialize, spread
 from mongo_arrow_spark.operators import dedup, multimodal, packing, profile, quality, similarity, text
 from mongo_arrow_spark.queries import _t, query
 
@@ -148,7 +149,7 @@ def q_neardup_ingest_gate(spark, sf_dir):
     # the index is an ARTIFACT — in production it is parquet on disk; the
     # probe references it twice (band keys + signature join), so an
     # unmaterialized index recomputes corpus signatures per reference
-    idx = dedup.build_lsh_index(corpus).cache()
+    idx = materialize(dedup.build_lsh_index(corpus))
     return (
         dedup.probe_neardup(batch, idx, threshold=0.3)
         .select(
@@ -3159,12 +3160,9 @@ def _link_fixture(docs, with_next: bool = False):
     oracles enumerate exactly five classes) adds an ABSOLUTE link to
     doc_id+1's own page URL: an already-crawled target for every doc
     but the last, so the frontier's anti-join has real work."""
-    from mongo_arrow_spark.operators.similarity import _spread
-
     # spread BEFORE constructing the page (r14): only the 8-byte ids
-    # cross the exchange and every consumer's regex-heavy extraction
-    # runs at session parallelism instead of on the local single split
-    docs = _spread(docs.select("doc_id"))
+    # cross the exchange
+    docs = spread(docs.select("doc_id"))
     did = F.col("doc_id").cast("string")
     url = F.concat(
         F.lit("https://host"),
@@ -3724,11 +3722,9 @@ def q_extract_links_base(spark, sf_dir):
         F.lit(".example.com/sec"), (F.col("doc_id") % 3).cast("string"),
         F.lit("/page"), did, F.lit(".html"),
     )
-    from mongo_arrow_spark.operators.similarity import _spread
-
     # spread BEFORE constructing the fixture (r14): only the ids cross
-    # the exchange; the extraction regexes run at session parallelism
-    fx = _spread(docs.select("doc_id")).select(
+    # the exchange
+    fx = spread(docs.select("doc_id")).select(
         "doc_id", payload.alias("payload"), url.alias("url")
     )
     return fx.select(
@@ -3919,14 +3915,11 @@ def q_extract_meta(spark, sf_dir):
         ).otherwise(""),
         F.lit("</head><body>b</body></html>"),
     )
-    from mongo_arrow_spark.operators.similarity import _spread
-
     # spread BEFORE constructing the payload (r14): only the 8-byte ids
-    # cross the exchange and the regex extraction runs at session
-    # parallelism instead of on the local single split; no-op at scale
+    # cross the exchange
     m = html_meta(payload)
     return (
-        _spread(docs.select("doc_id"))
+        spread(docs.select("doc_id"))
         .select(
             "doc_id",
             m["title"].alias("title"),

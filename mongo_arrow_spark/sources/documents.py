@@ -1255,7 +1255,6 @@ class DocumentsWriter(DataSourceArrowWriter):
         self.schema = schema
         self.path = options.get("path")
         self.exclude_none = str(options.get("excludenone", "false")).lower() == "true"
-        self.overwrite = overwrite
         self.max_bytes = int(options.get("maxbytes", WRITE_MAX_BYTES))
         self.max_docs = int(options.get("maxdocs", WRITE_MAX_DOCS))
         self.preserialized = (
@@ -1313,6 +1312,17 @@ class DocumentsWriter(DataSourceArrowWriter):
                 raise SchemaError(f"partitionBy columns not in schema: {missing}")
             if len(self.partition_by) == len(schema.fields):
                 raise SchemaError("partitionBy cannot cover every column")
+        if overwrite and self.path:
+            # the writer is built on the driver before any write task
+            # runs: drop the previous write's part files (hive
+            # subdirectories included) and its _SUCCESS marker; other
+            # files under the path are not ours and stay
+            for root, _dirs, names in os.walk(self.path):
+                for name in names:
+                    if name.startswith("part-") or (
+                        root == self.path and name == "_SUCCESS"
+                    ):
+                        os.remove(os.path.join(root, name))
 
     def write(self, iterator) -> _WriteResult:
         import numpy as np

@@ -5,8 +5,9 @@ import pytest
 
 from mongo_arrow_spark.battery import ORACLES, QUERIES
 from mongo_arrow_spark.compare import compare, duckdb_connect
+from mongo_arrow_spark.execution import scope
 
-from conftest import SF_DIR
+from conftest import SF_DIR, cache_entries
 
 
 @pytest.fixture(scope="module")
@@ -16,7 +17,12 @@ def con():
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_match(spark, con, name, tables):
-    result = compare(QUERIES[name](spark, SF_DIR), con, ORACLES[name])
+    # run inside an execution scope: whatever the query's operators
+    # materialize must be released with it
+    baseline = cache_entries(spark)
+    with scope():
+        result = compare(QUERIES[name](spark, SF_DIR), con, ORACLES[name])
+    assert cache_entries(spark) == baseline, f"{name} left cached frames"
     assert result["count_match"], f"{name} rows: {result['rows']}"
     assert result["cols_match"], (
         f"{name} cols: {result['spark_cols']} vs {result['duck_cols']}"

@@ -153,6 +153,25 @@ def test_write_preserialized_roundtrip_alltypes(spark, tmp_path):
     assert list(r["arr"]) == [1, 2] and r["st"]["x"] == 7 and r["n"] is None
 
 
+def test_write_overwrite_replaces_previous_output(spark, tmp_path):
+    """mode="overwrite" replaces what an earlier write left at the path:
+    two overwrites read back one copy of the rows, not two."""
+    from mongo_arrow_spark.api import write
+
+    register(spark)
+    df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "i long, s string")
+    out = str(tmp_path / "ow")
+    for _ in range(2):
+        res = write(df, out, format="documents", mode="overwrite", spark=spark)
+        assert res.inserted_count == 3
+    back = spark.read.format("documents").load(out)
+    assert sorted(map(tuple, back.select("i", "s").collect())) == [
+        (1, "a"), (2, "b"), (3, "c"),
+    ]
+    with open(os.path.join(out, "_SUCCESS")) as fh:
+        assert fh.read() == "3"
+
+
 def test_write_preserialized_roll_caps(spark, tmp_path):
     """The vectorized path still honors the byte/doc roll caps: every part
     file stays under maxBytes and maxDocs, nothing dropped or duplicated."""

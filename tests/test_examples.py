@@ -5,110 +5,49 @@ bit-identical replay) and a regression in versioning/decontaminate/
 novelty composition fails it loudly. Run as a real subprocess so it
 proves the example works exactly as a user would invoke it.
 
-r15 (suite-wall item): the four subprocesses LAUNCH at module import —
-i.e. during collection, minutes before this module's tests execute —
-and the tests only JOIN and assert. Each example still runs exactly as
-a user would invoke it (same argv, cwd, interpreter); the ~5 minutes
-of example wall time now overlaps the rest of the suite instead of
-serializing after it, which is most of what kept the full run outside
-the driver's verify window."""
+The four subprocesses start when collection ends (the ``subprocess_gate``
+marker, tests/conftest.py) and overlap the rest of the suite; the tests
+only join and assert."""
 
 import os
-import subprocess
 import sys
-import tempfile
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+import pytest
 
-_EXAMPLES = (
-    "version_decontam.py",
-    "storage_tour.py",
-    "crawl_tour.py",
-    "contract_workflow.py",
-)
+from conftest import REPO, SF_DIR
 
 
-def _launch(script: str):
-    out = tempfile.NamedTemporaryFile(
-        mode="w+", suffix=f"_{script}.out", delete=False
+def _example(script: str):
+    return pytest.mark.subprocess_gate(
+        [sys.executable, os.path.join(REPO, "examples", script), SF_DIR]
     )
-    proc = subprocess.Popen(
-        [
-            sys.executable,
-            os.path.join(REPO, "examples", script),
-            "/root/testdata/sf0.001",
-        ],
-        stdout=out,
-        stderr=subprocess.STDOUT,
-        text=True,
-        cwd=REPO,
-    )
-    return proc, out
 
 
-_PROCS = {s: _launch(s) for s in _EXAMPLES}
+@_example("version_decontam.py")
+def test_version_decontam_example_runs(gate_output):
+    assert "reproducibility: v1 gate replayed" in gate_output
 
 
-def _reap():
-    # collection-only / deselected runs never call _join: kill whatever
-    # is still running and drop the temp files so nothing leaks past
-    # the pytest process
-    for proc, out in _PROCS.values():
-        if proc.poll() is None:
-            proc.kill()
-        proc.wait()
-        out.close()
-        try:
-            os.unlink(out.name)
-        except OSError:
-            pass
-
-
-import atexit
-
-atexit.register(_reap)
-
-
-def _join(script: str) -> str:
-    proc, out = _PROCS[script]
-    try:
-        rc = proc.wait(timeout=600)
-    except subprocess.TimeoutExpired:
-        proc.kill()
-        proc.wait()
-        rc = -9
-    out.flush()
-    with open(out.name) as fh:
-        text = fh.read()
-    os.unlink(out.name)
-    assert rc == 0, f"example {script} failed\noutput:\n{text[-4000:]}"
-    return text
-
-
-def test_version_decontam_example_runs():
-    assert "reproducibility: v1 gate replayed" in _join("version_decontam.py")
-
-
-def test_storage_tour_example_runs():
+@_example("storage_tour.py")
+def test_storage_tour_example_runs(gate_output):
     """The storage tour demonstrates the content-addressed store,
     gated versioned releases (r10: the expectations contract refusing
     a NULL-payload release), and time travel — as a real subprocess."""
-    text = _join("storage_tour.py")
-    assert "gate refused a bad release" in text
-    assert "time travel" in text
+    assert "gate refused a bad release" in gate_output
+    assert "time travel" in gate_output
 
 
-def test_crawl_tour_example_runs():
+@_example("crawl_tour.py")
+def test_crawl_tour_example_runs(gate_output):
     """Archive → warc source → HTML extraction → screen → contract-
     gated release, as a real subprocess (r10)."""
-    text = _join("crawl_tour.py")
-    assert "after exact dedup: 500" in text
-    assert "release v1 committed: 500 rows" in text
+    assert "after exact dedup: 500" in gate_output
+    assert "release v1 committed: 500 rows" in gate_output
 
 
-def test_contract_workflow_example_runs():
+@_example("contract_workflow.py")
+def test_contract_workflow_example_runs(gate_output):
     """Deequ's suggest → human-trim → gate loop plus the release card's
     contract audit trail (r11), as a real subprocess."""
-    text = _join("contract_workflow.py")
-    assert "gate refused a broken release" in text
-    assert "shipped UNGATED" in text
+    assert "gate refused a broken release" in gate_output
+    assert "shipped UNGATED" in gate_output

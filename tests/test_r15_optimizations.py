@@ -1,10 +1,8 @@
 """Focused pins for the r15 optimization internals: the
-canonical-survivors min_by carry, the decontaminate pre-filter's
-broadcast gate, and the curate survivor checkpoint — each changed an
-operator's plan shape, so its result contract is pinned here."""
-
-import pytest
-from pyspark.sql import functions as F
+canonical-survivors min_by carry and the decontaminate pre-filter's
+broadcast gate — each changed an operator's plan shape, so its result
+contract is pinned here. (The curate survivor persist is pinned in
+test_execution.py.)"""
 
 from mongo_arrow_spark.operators import dedup
 
@@ -44,77 +42,34 @@ def test_canonical_survivors_min_by_winner_semantics(spark):
     assert "min_by" in plan
 
 
-def test_cross_jaccard_prefilter_gate_fallback_identical(spark):
+def test_cross_jaccard_prefilter_gate_fallback_identical(spark, monkeypatch):
     """An oversized right side must SKIP the broadcast pre-filter (r15
     ADVICE fix: never force-broadcast an unbounded key set) and produce
-    identical pairs through the plain posting join."""
+    identical pairs through the plain posting join — also when the right
+    side holds a NULL-text row, whose NULL shingle array counts 0 in the
+    gate's key bound."""
     left = spark.createDataFrame(
         [(i, f"w{i} x{i} common tail words here", ) for i in range(30)],
         "doc_id long, text string",
     )
-    right = spark.createDataFrame(
-        [(100, "common tail words here extra"), (101, "nothing shared at all")],
-        "doc_id long, text string",
-    )
+    rows = [(100, "common tail words here extra"), (101, "nothing shared at all")]
+    for right_rows in (rows, rows + [(102, None)]):
+        right = spark.createDataFrame(right_rows, "doc_id long, text string")
 
-    def run():
-        return sorted(
-            map(
-                tuple,
-                dedup.cross_jaccard_pairs(
-                    left, right, threshold=0.1, max_df=1000
-                ).collect(),
+        def run():
+            return sorted(
+                map(
+                    tuple,
+                    dedup.cross_jaccard_pairs(
+                        left, right, threshold=0.1, max_df=1000
+                    ).collect(),
+                )
             )
-        )
 
-    with_filter = run()
-    orig_floor = dedup._PREFILTER_FLOOR_BYTES
-    orig_key = dedup._PREFILTER_KEY_BYTES
-    try:
-        # force the gate shut: any right side now exceeds the budget
-        dedup._PREFILTER_FLOOR_BYTES = 0
-        dedup._PREFILTER_KEY_BYTES = 1 << 40
-        without_filter = run()
-    finally:
-        dedup._PREFILTER_FLOOR_BYTES = orig_floor
-        dedup._PREFILTER_KEY_BYTES = orig_key
-    assert with_filter == without_filter
-
-
-def test_curate_survivor_checkpoint_result_identical(spark):
-    """The stage-2d lazy localCheckpoint is a pure materialization
-    point: curate output must be bit-identical with the knob on and
-    off."""
-    from mongo_arrow_spark.operators import curate as curate_mod
-
-    # six near-dup families (same i%6 → ~0.85 jaccard: fuzzy clusters
-    # them, and families containing a holdout doc get decontaminated);
-    # a unique suffix keeps exact dedup a no-op and texts distinct
-    docs = spark.createDataFrame(
-        [
-            (i, " ".join(f"g{i % 6}w{j}" for j in range(22)) + f" uniq{i}")
-            for i in range(60)
-        ],
-        "doc_id long, text string",
-    )
-    holdout = docs.filter(F.col("doc_id") % 10 == 0)
-    corpus = docs.filter(F.col("doc_id") % 10 != 0)
-
-    def run():
-        out = curate_mod.curate(
-            corpus, holdout, jaccard_threshold=0.3, max_df=100
-        )
-        return sorted(
-            map(tuple, out.select("doc_id", "split", F.md5("text")).collect())
-        )
-
-    orig = curate_mod._CHECKPOINT_SURVIVORS
-    try:
-        curate_mod._CHECKPOINT_SURVIVORS = True
-        with_ckpt = run()
-        curate_mod._CHECKPOINT_SURVIVORS = False
-        without_ckpt = run()
-    finally:
-        curate_mod._CHECKPOINT_SURVIVORS = orig
-    assert with_ckpt == without_ckpt
-    assert with_ckpt  # non-degenerate fixture
+        with_filter = run()
+        with monkeypatch.context() as m:
+            # force the gate shut: any right side now exceeds the budget
+            m.setattr(dedup, "_PREFILTER_KEY_BYTES", 1 << 40)
+            without_filter = run()
+        assert with_filter == without_filter
+        assert with_filter  # non-degenerate: the shared tail pairs up

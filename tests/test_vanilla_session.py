@@ -17,8 +17,9 @@ Any future conf dependency fails here instead of in the driver's gate.
 from __future__ import annotations
 
 import os
-import subprocess
 import sys
+
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -133,61 +134,11 @@ REPRESENTATIVES = [
 ]
 
 
-# r15 (suite-wall item): launch the subprocess at module import — i.e.
-# during collection, minutes before this test executes — and only JOIN
-# in the test. The gate runs the identical script either way; its
-# ~2 minutes of local[2] wall time now overlap the rest of the suite.
-def _launch():
-    import tempfile
-
-    out = tempfile.NamedTemporaryFile(
-        mode="w+", suffix="_vanilla.out", delete=False
-    )
-    script = _SCRIPT.format(repo=REPO, names=REPRESENTATIVES)
-    proc = subprocess.Popen(
-        [sys.executable, "-c", script],
-        stdout=out,
-        stderr=subprocess.STDOUT,
-        text=True,
-        cwd=REPO,
-    )
-    return proc, out
-
-
-_PROC = _launch()
-
-
-def _reap():
-    # collection-only / deselected runs never join: kill + reap + drop
-    # the temp file so nothing leaks past the pytest process
-    proc, out = _PROC
-    if proc.poll() is None:
-        proc.kill()
-    proc.wait()
-    out.close()
-    try:
-        os.unlink(out.name)
-    except OSError:
-        pass
-
-
-import atexit
-
-atexit.register(_reap)
-
-
-def test_graded_queries_under_vanilla_session():
-    proc, out = _PROC
-    try:
-        rc = proc.wait(timeout=600)
-    except subprocess.TimeoutExpired:
-        proc.kill()
-        proc.wait()
-        rc = -9
-    out.flush()
-    with open(out.name) as fh:
-        text = fh.read()
-    os.unlink(out.name)
-    assert rc == 0 and "VANILLA_GATE_PASS" in text, (
-        f"vanilla-session gate failed\noutput:\n{text[-6000:]}"
-    )
+# started when collection ends and joined here (the ``subprocess_gate``
+# marker, tests/conftest.py): its ~2 minutes of local[2] wall time
+# overlap the rest of the suite
+@pytest.mark.subprocess_gate(
+    [sys.executable, "-c", _SCRIPT.format(repo=REPO, names=REPRESENTATIVES)]
+)
+def test_graded_queries_under_vanilla_session(gate_output):
+    assert "VANILLA_GATE_PASS" in gate_output, gate_output[-6000:]
