@@ -32,7 +32,7 @@ def spread(df: DataFrame, rows_per_task: int = 1024) -> DataFrame:
     constants, so the target is ceil(est_rows / rows_per_task) clamped
     to [1, defaultParallelism], est_rows being the optimizer's
     sizeInBytes over the schema's default row width (right on a log
-    scale is enough; plans/r15/exp_spread.py has the response curve).
+    scale is enough; OPTIMIZATION_r15.md records the response curve).
     Unreadable stats fall back to full parallelism."""
     sc = df.sparkSession.sparkContext
     par = sc.defaultParallelism
@@ -61,10 +61,7 @@ def partition_count(spark, num_partitions: int | None = None) -> int:
     """Range-partition count of the distributed prefix sums (and of
     ``layout.write_zordered``'s files): the caller's explicit value,
     else the session shuffle-partition conf."""
-    return int(
-        num_partitions
-        or spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    return int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def broadcast_budget(spark) -> int:

@@ -5,11 +5,24 @@ the same code scales to a multi-executor cluster: AQE on (runtime re-plan,
 skew-join splitting, partition coalescing), Arrow transfer on (every
 pandas/UDF boundary is Arrow-batched), shuffle partitions sized to the
 parallelism rather than the 200 default.
+
+Sizing rule (``master_cores``): the session's cores come from its
+master — ``local[N]``, ``local[*]``, ``local`` — and otherwise from
+``SPARK_GRAFT_CPUS`` or the CPUs this process may use. The shuffle
+partition count defaults to those cores, so a shuffle stage runs one
+wave of tasks. The driver heap defaults to half the host's physical
+memory, at most 16 GB.
+
+The codegen cache holds 1000 generated classes, not Spark's 100: one
+warm ``curate()`` pass compiles ~119, and an LRU cache smaller than the
+classes a pass cycles through never hits, so every pass recompiled them
+all (Janino, then the JIT again).
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -28,6 +41,24 @@ TABLES = (
     "embeddings",
 )
 
+_LOCAL_MASTER = re.compile(r"local(?:\[(\d+|\*)(?:,\s*\d+)?\])?")
+
+
+def master_cores(master: str | None = None) -> int:
+    """Cores a session on ``master`` runs tasks on: ``local[N]`` (also
+    ``local[N,F]``) is N, ``local[*]`` the CPUs this process may use,
+    ``local`` 1; any other master, or none, ``SPARK_GRAFT_CPUS``, else
+    the CPUs this process may use."""
+    m = _LOCAL_MASTER.fullmatch(master or "")
+    if m is None:
+        return int(
+            os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+        )
+    n = m.group(1)
+    if n is None:
+        return 1
+    return len(os.sched_getaffinity(0)) if n == "*" else int(n)
+
 
 def get_spark(
     app_name: str = "mongo_arrow_spark",
@@ -35,11 +66,20 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    master = master or f"local[{master_cores()}]"
+    # driver heap: half the physical memory, at most 16 GB — G1 grows the
+    # heap toward its cap, and a 16 GB cap on a 15 GB host met the OOM killer
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap_mb = min(16 * 1024, phys // 2 // 2**20)
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+        .master(master)
+        .config(
+            "spark.sql.shuffle.partitions",
+            str(shuffle_partitions or master_cores(master)),
+        )
+        # one warm curate() pass compiles ~119 classes; Spark's default keeps 100
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -60,7 +100,10 @@ def get_spark(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{heap_mb}m",
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

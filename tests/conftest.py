@@ -8,7 +8,7 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from mongo_arrow_spark.session import get_spark, load_tables
+from mongo_arrow_spark.session import get_spark, load_tables, master_cores
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -21,12 +21,12 @@ def spark():
     # cores vs 55.6 s at 8 — the same 8-vs-32 overhead floor the bench's
     # scaling block shows at sf0.1). The bench and the driver keep
     # local[$SPARK_GRAFT_CPUS]; this touches only pytest.
-    cpus = min(int(os.environ.get("SPARK_GRAFT_CPUS", "32")), 8)
-    # a 4 GB heap, not get_spark's 16 GB default: the sf0.001 suite's
-    # live data is small, but G1 grows the heap toward its cap, and
-    # test_curate alone took the JVM to 11-14 GB RSS, enough for the OOM
-    # killer on a 15 GB, 4-vCPU host; at 4 GB it peaks at 5 GB in the
-    # same wall time
+    cpus = min(master_cores(), 8)
+    # a 4 GB heap, below get_spark's default (half the host's memory,
+    # at most 16 GB): the sf0.001 suite's live data is small, but G1
+    # grows the heap toward its cap — with a 16 GB cap test_curate alone
+    # took the JVM to 11-14 GB RSS on a 15 GB, 4-vCPU host; at 4 GB it
+    # peaks at 5 GB in the same wall time
     s = get_spark(
         "mongo_arrow_spark_tests",
         master=f"local[{cpus}]",

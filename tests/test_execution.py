@@ -64,16 +64,11 @@ def test_broadcast_budget_reads_spark_parsed_threshold(spark):
         spark.conf.set(key, prev)
 
 
-def test_curate_inside_scope_releases_cache_same_rows(spark):
-    """curate persists its survivor frame (and dedup its shingle bases);
-    run and collected inside ``execution.scope()`` it leaves the
-    CacheManager as it found it, and the lazy result re-collected after
-    the release (recomputed from lineage) returns the same rows."""
-    from mongo_arrow_spark.operators import curate as curate_mod
-
-    # six near-dup families (same i%6 → ~0.85 jaccard: fuzzy clusters
-    # them, and families containing a holdout doc get decontaminated);
-    # a unique suffix keeps exact dedup a no-op and texts distinct
+def _curate_inputs(spark):
+    """Six near-dup families (same i%6 → ~0.85 jaccard: fuzzy clusters
+    them, and families containing a holdout doc get decontaminated); a
+    unique suffix keeps exact dedup a no-op and texts distinct. Returns
+    (corpus, holdout)."""
     docs = spark.createDataFrame(
         [
             (i, " ".join(f"g{i % 6}w{j}" for j in range(22)) + f" uniq{i}")
@@ -81,19 +76,45 @@ def test_curate_inside_scope_releases_cache_same_rows(spark):
         ],
         "doc_id long, text string",
     )
-    holdout = docs.filter(F.col("doc_id") % 10 == 0)
-    corpus = docs.filter(F.col("doc_id") % 10 != 0)
+    held_out = F.col("doc_id") % 10 == 0
+    return docs.filter(~held_out), docs.filter(held_out)
 
-    def rows(out):
-        return sorted(
-            map(tuple, out.select("doc_id", "split", F.md5("text")).collect())
-        )
 
+def _rows(out):
+    return sorted(map(tuple, out.select("doc_id", "split", F.md5("text")).collect()))
+
+
+def test_curate_inside_scope_releases_cache_same_rows(spark):
+    """curate persists its survivor frame (and dedup its shingle bases);
+    run and collected inside ``execution.scope()`` it leaves the
+    CacheManager as it found it, and the lazy result re-collected after
+    the release (recomputed from lineage) returns the same rows."""
+    from mongo_arrow_spark.operators import curate as curate_mod
+
+    corpus, holdout = _curate_inputs(spark)
     baseline = cache_entries(spark)
     with execution.scope():
         out = curate_mod.curate(corpus, holdout, jaccard_threshold=0.3)
-        inside = rows(out)
+        inside = _rows(out)
         assert cache_entries(spark) > baseline  # the survivor persist ran
     assert cache_entries(spark) == baseline
     assert inside  # non-degenerate fixture
-    assert rows(out) == inside
+    assert _rows(out) == inside
+
+
+def test_curate_second_call_hits_codegen_cache(spark):
+    """The session's codegen cache holds a whole curate pass: the second
+    identical call finds its generated classes cached. With Spark's
+    100-entry default an LRU cache cycling through more classes than it
+    holds never hits, and the second call compiled 83 classes again."""
+    from mongo_arrow_spark.operators import curate as curate_mod
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    corpus, holdout = _curate_inputs(spark)
+    compiled = []
+    for _ in range(2):
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        with execution.scope():
+            assert _rows(curate_mod.curate(corpus, holdout, jaccard_threshold=0.3))
+        compiled.append(metrics.METRIC_COMPILATION_TIME().getCount() - before)
+    assert compiled[1] <= 10, compiled
