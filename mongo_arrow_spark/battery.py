@@ -515,7 +515,7 @@ _DEMOTED = [
     # q_link_graph, q_sniff_mime, q_robots_gate, q_crawl_frontier,
     # q_sitemap_frontier, q_canonical_dedup (promoted AFTER the r14
     # positional-id fix the verdict gated it on: the survivor join is
-    # now a content-keyed min_by struct-carry, no
+    # now a content-keyed survivor pick, no
     # monotonically_increasing_id anywhere in the plan), and
     # q_fetch_schedule — enter the graded 50 from their
     # three-scale-green parked-oracle history (COVERAGE.md §r13; each

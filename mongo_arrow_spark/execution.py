@@ -78,10 +78,13 @@ def materialize(df: DataFrame) -> DataFrame:
     """Persist ``df`` at MEMORY_AND_DISK (lazily: the first action that
     reads it fills the cache) and register it with the innermost open
     ``scope()`` of this thread, which releases it on exit. Outside any
-    scope the frame stays cached until the caller unpersists it."""
+    scope the frame stays cached until the caller unpersists it. A plan
+    some other caller already cached is reused and not registered: the
+    scope must not release a cache entry it did not create."""
+    fresh = df.storageLevel == StorageLevel.NONE
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     held = getattr(_scopes, "stack", None)
-    if held:
+    if held and fresh:
         held[-1].append(df)
     return df
 

@@ -14,12 +14,13 @@ bucket agg, the component propagation, the decontamination anti-join).
 
 Shuffle census at 100 TB (why the stage ORDER is what it is): quality
 filtering is free and typically drops 30–60 % of raw web text, so it runs
-first and every downstream shuffle moves only survivors; exact dedup
-shuffles 24-byte (digest, id) pairs, never payloads; fuzzy dedup (banded
-default) shuffles a fixed ``fuzzy_bands`` signature rows per doc —
+first and every downstream shuffle moves only survivors; URL and exact
+dedup each shuffle once by a 16-byte digest, carrying the rows that
+survive the map-side pre-cut (one per digest per input partition —
+``selection.cap_per_group``), so each reads its input once; fuzzy dedup
+shuffles a fixed ``fuzzy_bands`` banded-signature rows per doc —
 independent of shingle document frequency — and decontamination shuffles
 8-byte hashed shingle keys; the final split+chunk pass is map-only.
-Payload bytes cross the wire zero times.
 """
 
 from __future__ import annotations
@@ -43,9 +44,10 @@ def curate(
     text_col: str = "text",
     # URL tier (r11; None disables — see operators/url.py): runs FIRST,
     # the CCNet/C4/RefinedWeb order — canonical-URL dedup drops
-    # refetches payload-free (16-byte digest shuffle, text never moves),
-    # then an optional per-registered-domain cap bounds source
-    # dominance before any text-side work happens at all
+    # refetches in one shuffle keyed by a 16-byte URL digest (rows are
+    # pre-cut map-side to one per digest per partition), then an
+    # optional per-registered-domain cap bounds source dominance before
+    # any text-side work happens at all
     url_col: str | None = None,
     url_domain_cap_n: int | None = None,
     # quality gate (Gopher-style bounds; see quality.gopher_quality_flags)
@@ -68,17 +70,14 @@ def curate(
     paragraph_sep: str = r"\n{2,}",
     paragraph_join_sep: str = "\n\n",
     paragraph_normalized: bool = False,
-    # fuzzy dedup (None threshold disables the fuzzy stage).
-    # fuzzy_candidates picks the candidate generator: "banded" (default —
-    # md5-banded MinHash buckets, shuffle = fuzzy_bands rows/doc
-    # independent of shingle document frequency, the 100 TB shape) or
-    # "posting" (the exact inverted-index self-join — full recall below
-    # max_df, but shuffle ∝ Σdf² so the cap sheds recall at scale; the
-    # opt-in recall dial for bounded corpora)
+    # fuzzy dedup (None threshold disables the fuzzy stage): md5-banded
+    # MinHash buckets, shuffle = fuzzy_bands rows/doc independent of
+    # shingle document frequency (the 100 TB shape)
     jaccard_n: int = 3,
     jaccard_threshold: float | None = 0.3,
-    fuzzy_candidates: str = "banded",
     fuzzy_bands: int = 16,
+    # shingle document-frequency cap of the span-strip and decontaminate
+    # posting joins (see dedup._resolve_max_df)
     max_df: int | None = 1000,
     # exact duplicate-substring stripping (Lee et al.; None disables)
     strip_spans_k: int | None = None,
@@ -255,7 +254,7 @@ def curate(
             ),
         )
 
-    # 2. exact dedup — digest+id shuffle only
+    # 2. exact dedup — one digest-keyed shuffle of the pre-cut survivors
     kept = _tap("exact_dedup", dedup_ops.exact_dedup(kept, id_col, text_col))
 
     # 2b. standing-corpus Bloom gate — drop rows whose payload already
@@ -278,7 +277,7 @@ def curate(
         )
 
     # 2c. cross-corpus paragraph dedup — first-occurrence winners over
-    # md5 digests (partial-agg min-struct, survivors-only reassembly);
+    # md5 digests (cap_per_group pick, survivors-only reassembly);
     # documents whose every paragraph already appeared elsewhere drop out
     if paragraph_dedup:
         kept = _tap(
@@ -298,43 +297,31 @@ def curate(
     # up to three independent subtrees — the fuzzy stage's candidate
     # pairs, decontamination's posting base and the output rows — and
     # without a cut each one re-evaluates the upstream scan + regex gate
-    # + digest agg + join. persist rather than localCheckpoint: lineage
-    # survives, so an executor loss recomputes the lost partitions
-    # instead of killing the job. Gated on ≥2 heavy stages: the fuzzy
-    # stage alone re-reads `kept` once, where the measured benefit is
-    # inside the noise (OPTIMIZATION_r15.md). An enclosing
-    # execution.scope() releases it.
+    # + the dedup picks' shuffles. persist rather than localCheckpoint:
+    # lineage survives, so an executor loss recomputes the lost
+    # partitions instead of killing the job. Gated on ≥2 heavy stages:
+    # the fuzzy stage alone re-reads `kept` once, where the measured
+    # benefit is inside the noise (OPTIMIZATION_r15.md). An enclosing
+    # execution.scope() releases it. The dedup picks leave the rows
+    # partitioned by their digest while every later stage joins them on
+    # the id, so they are persisted id-partitioned: one exchange here
+    # instead of one per join.
     _heavy_stages = (jaccard_threshold is not None) + (
         strip_spans_k is not None
     ) + (holdout is not None)
     if _heavy_stages >= 2:
-        kept = materialize(kept)
+        kept = materialize(kept.repartition(id_col))
 
     # 3. fuzzy dedup — candidate pairs → components → min-id survivors
     if jaccard_threshold is not None:
-        if fuzzy_candidates == "banded":
-            pairs = dedup_ops.banded_jaccard_pairs(
-                kept,
-                id_col=id_col,
-                text_col=text_col,
-                n=jaccard_n,
-                threshold=jaccard_threshold,
-                bands=fuzzy_bands,
-            )
-        elif fuzzy_candidates == "posting":
-            pairs = dedup_ops.ngram_jaccard_pairs(
-                kept,
-                id_col=id_col,
-                text_col=text_col,
-                n=jaccard_n,
-                threshold=jaccard_threshold,
-                max_df=max_df,
-            )
-        else:
-            raise ValueError(
-                f"fuzzy_candidates must be 'banded' or 'posting', "
-                f"got {fuzzy_candidates!r}"
-            )
+        pairs = dedup_ops.banded_jaccard_pairs(
+            kept,
+            id_col=id_col,
+            text_col=text_col,
+            n=jaccard_n,
+            threshold=jaccard_threshold,
+            bands=fuzzy_bands,
+        )
         comps = dedup_ops.connected_components(pairs)
         kept = _tap("fuzzy_dedup", dedup_ops.dedup_survivors(kept, comps, id_col))
 
@@ -425,16 +412,13 @@ def curate(
     # signals without calibration; a single outlier signal can't
     # dominate the way raw-value averaging lets it
     if ensemble_cols:
-        kept = selection_ops.ensemble_rank(
+        kept = select_with_models(
             kept,
-            list(ensemble_cols),
-            weights=ensemble_weights,
+            ensemble_cols=ensemble_cols,
+            ensemble_weights=ensemble_weights,
+            ensemble_top_n=ensemble_top_n,
             id_col=id_col,
-            keep_ranks=False,
         )
-        if ensemble_top_n is not None:
-            kept = kept.filter(F.col("ens_rank") <= int(ensemble_top_n))
-        kept = kept.drop("__wsum", "ens_rank")
         _tap("ensemble", kept)
 
     # 4d. token-budget cut — the final size gate: rank survivors by

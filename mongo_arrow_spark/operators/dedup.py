@@ -2,7 +2,10 @@
 embedding-cosine near-dup.
 
 Scale design notes (the part that matters at 100 TB):
-- Exact dedup is one hash-shuffle on a 16-byte digest, never on the payload.
+- Exact dedup is one hash shuffle keyed by a 16-byte digest. The
+  surviving rows travel with it, pre-cut map-side to one row per digest
+  per input partition (``selection.cap_per_group``), so the input is
+  read once; ``exact_dedup_stats`` alone shuffles digests only.
 - Jaccard/minhash candidate generation goes through an inverted index on
   shingles; ``max_df`` caps posting-list length so a stop-shingle can't
   produce a quadratic join blow-up (classic skew kill-switch).
@@ -18,6 +21,7 @@ from pyspark.sql import functions as F
 
 from mongo_arrow_spark.execution import broadcast_budget, materialize
 from mongo_arrow_spark.operators.clustering import argmin_cluster, quantize_vec
+from mongo_arrow_spark.operators.selection import cap_per_group
 from mongo_arrow_spark.operators.text import bind, normalize_text, tokens
 
 
@@ -52,11 +56,15 @@ def exact_dedup(
     normalized: bool = False,
 ) -> DataFrame:
     """Keep exactly one row (min id) per distinct payload
-    (``normalized=True``: per distinct CCNet-normalized payload)."""
-    keep = exact_dedup_stats(df, id_col, text_col, normalized).select(
-        F.col("keep_id").alias(id_col)
+    (``normalized=True``: per distinct CCNet-normalized payload).
+    NULL-id rows never survive: they are dropped before the pick."""
+    key = (
+        normalize_text(F.col(text_col)) if normalized else F.col(text_col)
     )
-    return df.join(keep, id_col, "left_semi")
+    keyed = df.where(F.col(id_col).isNotNull()).withColumn(
+        "__digest", F.md5(key)
+    )
+    return cap_per_group(keyed, "__digest", 1, id_col=id_col).drop("__digest")
 
 
 def shingles(col: Column | str, n: int = 3) -> Column:
@@ -95,27 +103,6 @@ def _resolve_max_df(df: DataFrame, max_df):
     if isinstance(max_df, float) and 0 < max_df < 1:
         return max(int(df.count() * max_df), 2)
     return max_df
-
-
-def _posting_list(
-    df: DataFrame, id_col: str, text_col: str, n: int, max_df: int | float | None
-) -> DataFrame:
-    """Inverted index rows (shingle, id). ``max_df`` drops shingles present
-    in more than that many docs — the skew cap for the self-join; a float
-    in (0, 1) caps at that fraction of the corpus (see _resolve_max_df)."""
-    max_df = _resolve_max_df(df, max_df)
-    posts = df.select(
-        F.col(id_col).alias("id"), F.explode(shingles(text_col, n)).alias("sh")
-    )
-    if max_df is not None:
-        hot = (
-            posts.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("sh")
-        )
-        posts = posts.join(F.broadcast(hot), "sh", "left_anti")
-    return posts
 
 
 def ngram_jaccard_pairs(
@@ -898,47 +885,28 @@ def canonical_survivors(
     quality duplicate, not the arbitrary min-id one (e.g. the canonical
     page among mirror copies).
 
-    Plan (r15 — the ``dedup_by_canonical`` min_by shape, one shuffle, no
-    join-back): per-component winners come from ONE ``min_by(row,
-    struct(-score, id))`` aggregation that carries the winning row
-    itself. Partial aggregation keeps one candidate row per component
-    per input partition, so clustered payloads cross the wire once per
-    (partition, component) — and only CLUSTERED rows enter the shuffle
-    at all; rows that never appeared in a candidate pair pass through
-    map-side. The former join-back re-evaluated the clustered lineage a
-    second time and shuffled it again by the component key. Ordering is
-    unchanged (min over ``(-score, id)``), so the winner per component
-    is identical; ids are assumed unique per row (the engine-wide id
-    contract) — the old join-back form would have kept every duplicate
-    of a winning id where this keeps the single best row.
-    NULL-score note (unchanged semantics, r14 and r15 agree,
-    parity-pinned in tests/test_r15_optimizations.py): struct ordering
-    sorts a NULL field first, so a NULL-score row outranks every scored
-    row in its component — coalesce the score upstream if NULLs should
-    lose instead. Output: ``df``'s columns.
+    Plan: one left join on the id tags each row with its component,
+    then ``selection.cap_per_group`` keeps one row per group ordered by
+    ``(-score, id)``. A row outside every component is its own group
+    (keyed by its id), so it always survives; the input and the
+    components are each read and joined once, and every row crosses
+    the pick's shuffle, pre-cut map-side. Ids must be unique and
+    non-NULL (the id contract in ``cap_per_group``). NULL-score note:
+    the ascending order sorts NULL first, so a NULL-score row outranks
+    every scored row in its component — coalesce the score upstream if
+    NULLs should lose instead. Output: ``df``'s columns.
     """
     marked = df.join(
         components.withColumnsRenamed({"id": id_col}), id_col, "left"
+    ).withColumn(
+        "__solo", F.when(F.col("component").isNull(), F.col(id_col))
     )
-    clustered = marked.where(F.col("component").isNotNull())
-    winners = (
-        clustered.groupBy("component")
-        .agg(
-            F.min_by(
-                F.struct(*[F.col(c) for c in df.columns]),
-                F.struct(
-                    (-F.col(score_col)).alias("ns"),
-                    F.col(id_col).alias("i"),
-                ),
-            ).alias("__w")
-        )
-        .select("__w.*")
-    )
-    return (
-        marked.where(F.col("component").isNull())
-        .drop("component")
-        .unionByName(winners)
-    )
+    return cap_per_group(
+        marked,
+        ["component", "__solo"],
+        1,
+        order_by=[-F.col(score_col), F.col(id_col)],
+    ).select(df.columns)
 
 
 # pre-filter broadcast cost: ~bytes per key in the built
@@ -1412,12 +1380,12 @@ def dedup_paragraphs(
     serial numbers still collides; the raw form of the WINNING
     occurrence is what survives.
 
-    100 TB plan shape: paragraphs explode once; the winner per digest is
-    a partial-aggregating groupBy ``min(struct(id, pos))`` over 16-byte
-    digests — map-side combine absorbs hot paragraphs (the skew case a
-    window-function row_number would serialize into one task). Survivor
-    keys semi-join back (ids only, never text), then one reassembly
-    shuffle carries surviving paragraph payloads. No driver state, no
+    100 TB plan shape: paragraphs explode once; the winner per 16-byte
+    digest is ``selection.cap_per_group`` ordered by ``(id, pos)`` —
+    its Partial WindowGroupLimit pre-cuts every input partition to one
+    row per digest, which absorbs hot paragraphs before the shuffle.
+    The winning paragraphs travel with that shuffle, then one
+    reassembly shuffle groups them by document. No driver state, no
     broadcast of corpus-proportional tables.
     """
     from mongo_arrow_spark.operators.text import (
@@ -1427,14 +1395,12 @@ def dedup_paragraphs(
 
     pars = split_segments(df, id_col, text_col, sep)
     key = normalize_text(F.col("__seg")) if normalized else F.col("__seg")
-    keyed = pars.withColumn("__digest", F.md5(key))
-    winners = keyed.groupBy("__digest").agg(
-        F.min(F.struct(F.col("__id"), F.col("__pos"))).alias("__w")
-    )
-    keep_keys = winners.select(
-        F.col("__w.__id").alias("__id"), F.col("__w.__pos").alias("__pos")
-    )
-    kept = pars.join(keep_keys, ["__id", "__pos"], "left_semi")
+    kept = cap_per_group(
+        pars.withColumn("__digest", F.md5(key)),
+        "__digest",
+        1,
+        order_by=[F.col("__id"), F.col("__pos")],
+    ).drop("__digest")
     return reassemble_segments(df, kept, id_col, text_col, join_sep, drop_empty)
 
 

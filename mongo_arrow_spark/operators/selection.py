@@ -17,7 +17,8 @@ Design notes (100 TB posture):
   every partition in parallel. Result is identical to the single-task
   ``SUM() OVER (ORDER BY ...)`` — the oracle — at any partition count.
 - ``cap_per_group`` is one hash shuffle on the group key plus a
-  rank-within-group cut; heavy-hitter groups are the skew hazard and the
+  rank-within-group cut; with ``n=1`` it is also every dedup operator's
+  survivor pick. Heavy-hitter groups are the skew hazard and the
   docstring says what to do about them.
 
 No reference counterpart: mongo-arrow delegates server-side selection to
@@ -36,19 +37,27 @@ from mongo_arrow_spark.operators.text import token_count
 
 def cap_per_group(
     df: DataFrame,
-    group_col: str,
+    group_col: str | list[str],
     n: int,
     order_by: list[Column] | None = None,
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Keep at most ``n`` rows per group — the RefinedWeb/C4-style
-    per-domain cap (no single source may dominate the corpus).
+    per-domain cap (no single source may dominate the corpus), and with
+    ``n=1`` the package's one survivor pick: every dedup operator keeps
+    its best row per key through this call.
 
-    ``order_by`` decides WHICH rows survive (defaults to ``id_col``
-    ascending — deterministic, oracle-stable); pass e.g.
+    ``group_col`` is one column name or a list of them. ``order_by``
+    decides WHICH rows survive (defaults to ``id_col`` ascending —
+    deterministic, oracle-stable); pass e.g.
     ``[F.desc("quality"), F.asc("doc_id")]`` to keep the best-scoring
-    documents per domain. The order must be total (tie-break on a
-    unique id) or survivors are nondeterministic under retries.
+    documents per domain. The id contract, stated once for every
+    caller: the order must be total — end it on a unique id — because
+    rows that tie on the whole order are interchangeable and the cut
+    picks an arbitrary one of them (under retries, possibly a
+    different one). Ascending sorts put NULLs first, so a NULL id or
+    NULL score ranks ahead of every value unless the caller filters or
+    coalesces it.
 
     Scale shape: because the cut is expressed declaratively
     (``row_number() <= n``), Catalyst's InferWindowGroupLimit rewrites
@@ -57,6 +66,8 @@ def cap_per_group(
     top-``n`` per group map-side, so the one hash shuffle on
     ``group_col`` moves at most ``n × groups`` rows per input
     partition, never the corpus (the plan gate pins the Partial stage).
+    The surviving rows travel whole: payload columns cross the wire
+    once, in the same pass that picks them, and the input is read once.
     That also defuses most heavy-hitter skew: a group that dominates
     the input still arrives at its reduce task pre-cut to
     ``n × input_partitions`` rows. NULL group keys form their own group

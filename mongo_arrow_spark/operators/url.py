@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mongo_arrow_spark.execution import spread
+from mongo_arrow_spark.operators.selection import cap_per_group
 
 __all__ = [
     "TRACKING_PARAM_RE",
@@ -296,17 +297,15 @@ def url_dedup(
 ) -> DataFrame:
     """Keep one row (min ``id_col``) per CANONICAL URL — the crawl
     pipeline's first dedup stage, run before any content comparison.
-    Composition of :func:`canonicalize_url` with the exact-dedup
-    groupBy: shuffles (md5(canonical_url), id) pairs only — payloads
-    never move."""
-    key = F.md5(canonicalize_url(F.col(url_col), **canon_kwargs))
-    keep = (
-        df.select(key.alias("__k"), F.col(id_col))
-        .groupBy("__k")
-        .agg(F.min(id_col).alias(id_col))
-        .drop("__k")
+    Composition of :func:`canonicalize_url` with the exact-dedup pick
+    (:func:`selection.cap_per_group` on md5(canonical_url)): one
+    shuffle keyed by the digest, carrying the rows that survive the
+    map-side pre-cut, so the input is read once. NULL-id rows never
+    survive: they are dropped before the pick."""
+    keyed = df.where(F.col(id_col).isNotNull()).withColumn(
+        "__k", F.md5(canonicalize_url(F.col(url_col), **canon_kwargs))
     )
-    return df.join(keep, id_col, "left_semi")
+    return cap_per_group(keyed, "__k", 1, id_col=id_col).drop("__k")
 
 
 def cap_per_domain(
@@ -322,8 +321,6 @@ def cap_per_domain(
     domain extraction feeding :func:`selection.cap_per_group`'s
     partial-WindowGroupLimit cut — a heavy domain arrives at its
     reduce task already pre-cut per input partition."""
-    from mongo_arrow_spark.operators.selection import cap_per_group
-
     tagged = df.withColumn(
         "__dom", registered_domain(url_host(F.col(url_col)), suffixes)
     )
@@ -958,11 +955,11 @@ def dedup_by_canonical(
     one, consistent with the exact-duplicate contract.
 
     Scale shape: the canonical key is a map-side projection; the one
-    shuffle is a ``min_by`` groupBy carrying (key, order-struct, row)
-    — partial aggregation keeps one candidate row per key per input
-    partition, so payloads cross the wire once per (partition, key),
-    and there is NO join-back. The survivor key is pure row CONTENT
-    (canonical target + full-row digest) — never
+    shuffle is :func:`selection.cap_per_group` on the key, ordered by
+    the order struct — its Partial WindowGroupLimit keeps one candidate
+    row per key per input partition, so payloads cross the wire once
+    per (partition, key), and there is NO join-back. The survivor key
+    is pure row CONTENT (canonical target + full-row digest) — never
     ``monotonically_increasing_id``, whose positional ids can diverge
     between join branches / task retries after an upstream shuffle
     (the engine-wide discipline documented in membership.py; the r13
@@ -994,26 +991,26 @@ def dedup_by_canonical(
     canon = bind(
         F.coalesce(target, F.col(url_col)), lambda x: canonicalize_url(x)
     )
-    row = F.struct(*[F.col(c) for c in df.columns])
+    cols = df.columns
     # deterministic content digest: the NULL-key group key and the
     # final ordering tiebreaker (to_json serializes every SQL type,
     # binary as base64 — rows that still tie are bit-identical)
-    digest = F.md5(F.to_json(row))
+    digest = F.md5(F.to_json(F.struct(*cols)))
     staged = df.select(
-        row.alias("__row"),
+        "*",
         canon.alias("__k1c"),
         canonicalize_url(F.col(url_col)).alias("__cu"),
         digest.alias("__d"),
-        F.col(url_col).alias("__u"),
     )
     order = F.struct(
         F.coalesce(
             (F.col("__cu") != F.col("__k1c")).cast("int"), F.lit(1)
         ).alias("not_self"),
-        F.coalesce(F.col("__u").cast("string"), F.lit("")).alias("u"),
+        F.coalesce(F.col(url_col).cast("string"), F.lit("")).alias("u"),
         F.col("__d").alias("d"),
     )
     keyed = staged.select(
+        *cols,
         F.col("__k1c").alias("__k1"),
         # NULL-key rows get their own content-keyed group; a separate
         # key COLUMN (not a sentinel prefix on __k1) so no real URL
@@ -1022,12 +1019,10 @@ def dedup_by_canonical(
         .otherwise(F.lit(""))
         .alias("__k2"),
         order.alias("__ord"),
-        F.col("__row"),
     )
-    pick = keyed.groupBy("__k1", "__k2").agg(
-        F.min_by("__row", "__ord").alias("__pick")
-    )
-    return pick.select("__pick.*")
+    return cap_per_group(
+        keyed, ["__k1", "__k2"], 1, order_by=[F.col("__ord")]
+    ).select(cols)
 
 
 def schedule_fetches(

@@ -31,7 +31,7 @@ class PlanReport(NamedTuple):
     take_ordered: int  # TakeOrderedAndProject (top-k, never a full sort)
     codegen_spans: int  # codegen regions ('*(n)'; 0 until AQE finalizes)
     python_evals: int  # Batch/ArrowEvalPython, MapInPandas, FlatMapGroupsInPandas
-    file_scans: int
+    file_scans: int  # source scans (FileScan and DSv2 BatchScan nodes)
     pushed_filter_scans: int  # FileScans carrying PushedFilters: [non-empty]
 
     @property
@@ -64,8 +64,11 @@ def plan_report(df: DataFrame) -> PlanReport:
     plan — the same signals the repo's own plan gates pin; they identify
     plan SHAPE (what kind of work happens), not cost."""
     p = plan_string(df)
+    # DSv1 file sources print "FileScan parquet ..."; DSv2 sources,
+    # the engine's Python ``documents``/``warc`` readers included,
+    # print "BatchScan <name>[...]"
     scans = re.findall(r"FileScan \w+ [^\n]*", p) + re.findall(
-        r"PythonScan[^\n]*", p
+        r"BatchScan \w+[^\n]*", p
     )
     pushed = [
         s

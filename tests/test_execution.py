@@ -40,6 +40,8 @@ def test_scope_releases_what_it_materialized(spark):
     outer = execution.materialize(spark.range(5))  # outside any scope
     with execution.scope():
         a = execution.materialize(spark.range(10))
+        # a plan cached outside the scope is reused, not released
+        execution.materialize(spark.range(5))
         with execution.scope():
             execution.materialize(spark.range(20))
             assert cache_entries(spark) == baseline + 3

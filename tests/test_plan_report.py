@@ -112,3 +112,33 @@ def test_exchange_variants_counted_and_no_aqe_double_count(spark, docs):
     assert after == before
     # codegen '*(n)' markers only exist once AQE finalizes the plan
     assert plan_report(agg).codegen_spans >= 1
+
+
+def test_crawl_dedup_chain_scans_its_source_once(spark, tmp_path):
+    """``file_scans`` counts the engine's own Python data sources
+    (printed as ``BatchScan warc[...]``), and the crawl dedup chain
+    ``exact_dedup(url_dedup(<warc read>))`` reads its source once: each
+    stage picks its survivors in the pass that shuffles them, with no
+    aggregate-then-semi-join that would evaluate its input twice."""
+    from mongo_arrow_spark.operators.dedup import exact_dedup
+    from mongo_arrow_spark.operators.url import url_dedup
+    from mongo_arrow_spark.sources.warc import build_warc_record, register_warc
+
+    p = tmp_path / "crawl.warc"
+    with open(p, "wb") as fh:
+        for i in range(12):
+            fh.write(build_warc_record(
+                f"<urn:mas:{i}>", f"https://h{i % 3}.example/p/{i % 5}",
+                f"<p>body {i % 4}</p>".encode(),
+            ))
+    register_warc(spark)
+    raw = spark.read.format("warc").load(str(p))
+    docs = raw.select(
+        F.regexp_extract("record_id", r"urn:mas:(\d+)", 1)
+        .cast("bigint").alias("doc_id"),
+        F.col("target_uri").alias("url"),
+        F.col("payload").cast("string").alias("text"),
+    )
+    out = exact_dedup(url_dedup(docs, "url"))
+    assert plan_report(out).file_scans == 1
+    assert out.count() == 4  # one survivor per distinct body

@@ -528,9 +528,9 @@ def test_hard_negatives_ivf_plan_cell_equijoin_only(spark, tables):
 
 def test_url_tier_scale_budget(spark, tables):
     """URL tier plan budget: canonical-dedup is ONE exchange (the
-    digest groupBy) plus the semi-join back; the domain cap stays one
-    hash exchange with the Partial WindowGroupLimit pre-cut and no
-    Python eval anywhere."""
+    digest-keyed survivor pick, pre-cut by a Partial WindowGroupLimit);
+    the domain cap stays one hash exchange with the same pre-cut, and
+    there is no Python eval anywhere."""
     from mongo_arrow_spark.operators import url as U
     from mongo_arrow_spark.plans import assert_scale_safe, plan_string
 
@@ -540,10 +540,11 @@ def test_url_tier_scale_budget(spark, tables):
         "doc_id long, url string",
     )
     deduped = U.url_dedup(df, "url")
-    r = assert_scale_safe(
-        deduped, forbid_cartesian=True, require_python_free=True,
-        forbid_global_sort=True,
+    assert_scale_safe(
+        deduped, max_exchanges=1, forbid_cartesian=True,
+        require_python_free=True, forbid_global_sort=True,
     )
+    assert "WindowGroupLimit" in plan_string(deduped)
     capped = U.cap_per_domain(df, "url", n=3)
     assert_scale_safe(
         capped, forbid_cartesian=True, require_python_free=True,

@@ -171,6 +171,79 @@ def test_canonical_survivors_keeps_best_scored(spark):
     assert a == b
 
 
+def test_canonical_survivors_winner_semantics(spark):
+    """The survivor pick keeps the winners the earlier argmax+join-back
+    and min_by forms picked: highest score, ties to min id, NULL-score
+    components still yield exactly one winner, unclustered rows pass
+    through. The plan picks through cap_per_group's WindowGroupLimit
+    and joins the components frame once."""
+    import re
+
+    from mongo_arrow_spark.plans import plan_string
+
+    df = spark.createDataFrame(
+        [
+            (1, 10, "a"), (2, 30, "b"), (3, 30, "c"),  # tie on 30 → id 2
+            (4, 5, "d"),                                # never in a pair
+            (5, None, "e"), (6, None, "f"),             # NULL scores
+            (7, 50, "g"), (8, 7, "h"),
+            (9, 9, "i"), (10, None, "j"),               # mixed NULL/scored:
+            # the ascending order sorts NULL first, so the NULL row
+            # wins — every earlier form behaved identically, pinned so
+            # nobody "fixes" one form
+        ],
+        "doc_id long, score long, text string",
+    )
+    comps = spark.createDataFrame(
+        [(1, 1), (2, 1), (3, 1), (5, 5), (6, 5), (7, 7), (8, 7),
+         (9, 9), (10, 9)],
+        "id long, component long",
+    )
+    out = dedup.canonical_survivors(df, comps, score_col="score")
+    assert out.columns == df.columns
+    rows = sorted(map(tuple, out.collect()))
+    assert rows == [
+        (2, 30, "b"), (4, 5, "d"), (5, None, "e"), (7, 50, "g"),
+        (10, None, "j"),
+    ]
+    plan = plan_string(out)
+    assert "WindowGroupLimit" in plan
+    assert len(re.findall(r"\w+Join ", plan)) == 1
+
+
+def test_cross_jaccard_prefilter_gate_fallback_identical(spark, monkeypatch):
+    """An oversized right side must SKIP the broadcast pre-filter (never
+    force-broadcast an unbounded key set) and produce identical pairs
+    through the plain posting join — also when the right side holds a
+    NULL-text row, whose NULL shingle array counts 0 in the gate's key
+    bound."""
+    left = spark.createDataFrame(
+        [(i, f"w{i} x{i} common tail words here", ) for i in range(30)],
+        "doc_id long, text string",
+    )
+    rows = [(100, "common tail words here extra"), (101, "nothing shared at all")]
+    for right_rows in (rows, rows + [(102, None)]):
+        right = spark.createDataFrame(right_rows, "doc_id long, text string")
+
+        def run():
+            return sorted(
+                map(
+                    tuple,
+                    dedup.cross_jaccard_pairs(
+                        left, right, threshold=0.1, max_df=1000
+                    ).collect(),
+                )
+            )
+
+        with_filter = run()
+        with monkeypatch.context() as m:
+            # force the gate shut: any right side now exceeds the budget
+            m.setattr(dedup, "_PREFILTER_KEY_BYTES", 1 << 40)
+            without_filter = run()
+        assert with_filter == without_filter
+        assert with_filter  # non-degenerate: the shared tail pairs up
+
+
 def test_decontaminate_planted(spark):
     shared = " ".join(f"w{i}" for i in range(30))
     train = spark.createDataFrame(
@@ -916,6 +989,20 @@ def test_exact_dedup_normalized_collapses_mirror_copies(spark):
     norm = exact_dedup(df, normalized=True)
     assert plain.count() == 3  # raw bytes differ
     assert {r["doc_id"] for r in norm.collect()} == {1, 3}  # min-id wins
+
+
+def test_exact_dedup_null_id_never_survives(spark):
+    """NULL ids never survive: in a duplicate pair (NULL, 5) id 5
+    survives, and a NULL-id row with no duplicate is dropped."""
+    from mongo_arrow_spark.operators.dedup import exact_dedup
+
+    df = spark.createDataFrame(
+        [(None, "dup"), (5, "dup"), (None, "alone"), (7, "other")],
+        "doc_id long, text string",
+    )
+    assert sorted(map(tuple, exact_dedup(df).collect())) == [
+        (5, "dup"), (7, "other"),
+    ]
 
 
 def test_normalize_text_preserves_non_latin_scripts(spark):

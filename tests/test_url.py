@@ -117,6 +117,9 @@ def test_url_dedup_collapses_variants(spark):
         (3, "http://example.com/b"),
         (4, "http://example.com/b#frag"),  # same canonical as 3
         (5, "https://example.com/b"),  # scheme differs: distinct
+        # NULL ids never survive: 5 wins its pair, a lone NULL id drops
+        (None, "https://example.com/b#x"),
+        (None, "https://example.com/alone"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, url string")
     kept = sorted(
@@ -995,7 +998,7 @@ def test_canonical_dedup_post_shuffle_stability(spark):
     assert got1 == [(i, f"https://h{i % 7}.example.com/art/{i}")
                     for i in range(40)]
     assert got1 == got2
-    # and the plan is join-free: one hash aggregate carries the row
+    # and the plan is join-free: one window pick carries the row
     assert "Join" not in plan
 
 
