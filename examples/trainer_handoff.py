@@ -72,12 +72,12 @@ def main() -> None:
         weights=[1, 2],
         keep_ranks=False,
     ).withColumn("quality", -F.col("ens_rank"))
-    per_lang = selection.select_token_budget_per_group(
+    per_lang = selection.select_token_budget(
         scored,
         int(total) // 6,
-        "lang",
         score_col="quality",
         token_col="n_bpe_tokens",
+        group_col="lang",
     ).drop("n_tokens", "cum_tokens")
     chosen = selection.select_token_budget(
         per_lang,

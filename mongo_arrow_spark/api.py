@@ -443,7 +443,7 @@ def _as_dataframe(tabular, spark) -> DataFrame:
     if isinstance(tabular, pa.Table):
         return spark.createDataFrame(tabular.to_pandas())
     if isinstance(tabular, pd.DataFrame):
-        return spark.createDataFrame(tabular)
+        return _from_pandas(tabular, spark)
     if isinstance(tabular, dict):  # dict of ndarrays (reference api.py:602)
         return spark.createDataFrame(pd.DataFrame(tabular))
     try:
@@ -454,6 +454,42 @@ def _as_dataframe(tabular, spark) -> DataFrame:
     except ImportError:
         pass
     raise MQLTranslationError(f"unsupported tabular type: {type(tabular)}")
+
+
+def _from_pandas(pdf, spark) -> DataFrame:
+    """The inverse of ``_bson_dtype_frame``: each BSON extension column
+    becomes its physical Spark value — ObjectId → its 12 bytes, Code →
+    string, Binary → bytes, Decimal128 → its 16-byte BID — tagged with
+    the ``bson_types`` metadata that reads it back as the same dtype."""
+    from mongo_arrow_spark import pandas_types as pt
+    from mongo_arrow_spark.bson_types import METADATA_KEY
+
+    tagged = {}
+    for name, dtype in pdf.dtypes.items():
+        if isinstance(dtype, pt.PandasObjectId):
+            conv, typ, tag = (lambda v: v.binary), "binary", "objectid"
+        elif isinstance(dtype, pt.PandasCode):
+            conv, typ, tag = str, "string", "code"
+        elif isinstance(dtype, pt.PandasBinary):
+            conv, typ, tag = bytes, "binary", f"binary[{dtype.subtype}]"
+        elif isinstance(dtype, pt.PandasDecimal128):
+            conv, typ, tag = (lambda v: v.bid), "binary", "decimal128[bid]"
+        else:
+            continue
+        tagged[name] = (typ, tag)
+        col = pdf[name]
+        pdf = pdf.assign(
+            **{name: [None if na else conv(v) for v, na in zip(col, col.isna())]}
+        )
+    df = spark.createDataFrame(pdf)
+    if not tagged:
+        return df
+    return df.withColumns(
+        {
+            name: F.col(name).cast(typ).alias(name, metadata={METADATA_KEY: tag})
+            for name, (typ, tag) in tagged.items()
+        }
+    )
 
 
 def create_view(

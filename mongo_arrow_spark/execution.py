@@ -58,9 +58,9 @@ def spread(df: DataFrame, rows_per_task: int = 1024) -> DataFrame:
 
 
 def partition_count(spark, num_partitions: int | None = None) -> int:
-    """Range-partition count of the distributed prefix sums (and of
-    ``layout.write_zordered``'s files): the caller's explicit value,
-    else the session shuffle-partition conf."""
+    """Range-partition count: the session shuffle-partition conf, which
+    is all ``selection.running_total`` (every exact prefix op) reads;
+    ``layout.write_zordered`` passes its explicit file count instead."""
     return int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
 

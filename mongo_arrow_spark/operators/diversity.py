@@ -25,8 +25,8 @@ Scale design (100 TB posture):
 - Lineage grows by one projection (plus, grouped, one broadcast join)
   per step; ``rematerialize_every`` localCheckpoints the candidate frame
   so neither the plan nor the recompute cost grows quadratically in k
-  (the ``selection.prefix_join`` checkpoint discipline: GC-releasable, unlike
-  an operator-internal persist).
+  (the ``selection.running_total`` checkpoint discipline: GC-releasable,
+  unlike an operator-internal persist).
 - k (and the group count G) are coordination-bounded: the driver holds
   the selected ids and one d-vector per group per step — the
   ``kmeans_fit`` collect contract. The corpus itself never moves: the

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from mongo_arrow_spark.operators.selection import grouped_prefix_join, prefix_join
+from mongo_arrow_spark.operators.selection import running_total
 from mongo_arrow_spark.operators.text import token_count
 
 __all__ = [
@@ -306,7 +306,6 @@ def assign_token_shards(
     text_col: str = "text",
     n_tokens_col: str | None = None,
     shard_col: str = "shard",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Token-BALANCED shard assignment: shard ``i`` holds the documents
     whose exclusive running token total lands in
@@ -319,13 +318,13 @@ def assign_token_shards(
     max-document of the budget (a long document overshooting a boundary
     delays the next shard's first start by the overshoot).
 
-    The running total is the ``selection.prefix_join`` distributed
-    prefix sum (range partition on the order → bounded per-partition
-    subtotal collect → broadcast offsets → per-partition windows) — the
-    exact global cumsum with NO single-task window, bit-identical to the
-    one-task ``SUM() OVER (ORDER BY …)`` the oracle runs. A document
-    never splits: the shard boundary falls between documents (pack first
-    with ``pack_sequences`` when sequence-exact budgets matter).
+    The running total is ``selection.running_total`` (range partition
+    on the order → bounded per-partition subtotal collect → broadcast
+    offsets → per-partition windows) — the exact global cumsum with NO
+    single-task window, bit-identical to the one-task ``SUM() OVER
+    (ORDER BY …)`` the oracle runs. A document never splits: the shard
+    boundary falls between documents (pack first with
+    ``pack_sequences`` when sequence-exact budgets matter).
 
     Returns the input plus ``n_tokens`` and ``shard`` (0-based). NULL
     text — and a NULL precomputed ``n_tokens_col`` — counts 0 tokens
@@ -340,25 +339,13 @@ def assign_token_shards(
         _order_hash(id_col, "shard").asc(),
         F.col(id_col).asc(),
     ]
-    tok = F.coalesce(
-        (
-            F.col(n_tokens_col)
-            if n_tokens_col
-            else token_count(text_col)
-        ).cast("long"),
-        F.lit(0).cast("long"),
-    )
-    joined = prefix_join(
-        df.withColumn("n_tokens", tok), order, "n_tokens", num_partitions
-    )
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    tok = F.col(n_tokens_col) if n_tokens_col else token_count(text_col)
     return (
-        joined.withColumn(
-            "__cum", F.sum("n_tokens").over(w) + F.col("__off")
+        running_total(
+            df.withColumn("n_tokens", tok.cast("long")),
+            order,
+            "n_tokens",
+            out_col="__cum",
         )
         # exclusive prefix: the shard a document STARTS in
         .withColumn(
@@ -367,7 +354,7 @@ def assign_token_shards(
                 f"(__cum - n_tokens) div CAST({tokens_per_shard} AS BIGINT)"
             ).cast("long"),
         )
-        .drop("__pid", "__off", "__cum")
+        .drop("__cum")
     )
 
 
@@ -409,7 +396,6 @@ def bucket_batches(
     n_tokens_col: str | None = None,
     salt: str = "batch",
     batch_col: str = "batch_id",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Length-bucketed dynamic batching (the fairseq/NeMo
     ``--max-tokens`` scheme): documents are grouped into LENGTH buckets
@@ -422,13 +408,12 @@ def bucket_batches(
     the batch boundary falls between documents, ``assign_token_shards``
     semantics per bucket).
 
-    Scale shape: the GROUPED distributed prefix sum
-    (``selection.grouped_prefix_join``) — range partition on (bucket,
-    order), bounded per-(bucket, partition) offsets, parallel windows —
-    so the one giant bucket every real corpus has (most documents are
-    short) never serializes into one task, unlike a plain
-    ``Window.partitionBy(bucket)``. Bit-identical to the one-task
-    per-bucket window at any partition count.
+    Scale shape: the grouped ``selection.running_total`` — range
+    partition on (bucket, order), bounded per-(bucket, partition)
+    offsets, parallel windows — so the one giant bucket every real
+    corpus has (most documents are short) never serializes into one
+    task, unlike a plain ``Window.partitionBy(bucket)``. Bit-identical
+    to the one-task per-bucket window at any partition count.
 
     Returns the input plus ``n_tokens``, ``len_bucket`` and
     ``batch_col`` (0-based WITHIN the bucket — the global batch key is
@@ -452,23 +437,13 @@ def bucket_batches(
         else F.expr(f"n_tokens div CAST({bucket_width} AS BIGINT)"),
     )
     order = [_order_hash(id_col, salt).asc(), F.col(id_col).asc()]
-    joined = grouped_prefix_join(
-        staged, ["len_bucket"], order, "n_tokens", num_partitions
-    )
-    w = (
-        Window.partitionBy("len_bucket", "__pid")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     return (
-        joined.withColumn(
-            "__cum", F.sum("n_tokens").over(w) + F.col("__off")
-        )
+        running_total(staged, order, "n_tokens", ["len_bucket"], "__cum")
         .withColumn(
             batch_col,
             F.expr(
                 f"(__cum - n_tokens) div CAST({capacity} AS BIGINT)"
             ).cast("long"),
         )
-        .drop("__pid", "__off", "__cum")
+        .drop("__cum")
     )

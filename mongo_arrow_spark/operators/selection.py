@@ -1,21 +1,27 @@
-"""Corpus selection operators: token-budget selection and per-group caps.
+"""Corpus selection operators: token budgets, ranks, caps and mixes.
 
 The last mile of a training-data pipeline: after scoring (quality /
-classifier / LM tiers) the corpus must be CUT — "take the best N billion
-tokens", "at most K documents per domain". Both ops here are pure
-DataFrame plans with exact SQL oracles, and both are designed around the
-one hazard a naive spelling hits at 100 TB: a global ``Window.orderBy``
-with no ``partitionBy`` collapses the whole corpus into ONE task.
+classifier / LM tiers) the corpus must be CUT and ORDERED — "take the
+best N billion tokens", "at most K documents per domain", "curriculum
+rank", "2 parts web to 1 part code". Every op here is a pure DataFrame
+plan with an exact SQL oracle, designed around the one hazard a naive
+spelling hits at 100 TB: a global ``Window.orderBy`` with no
+``partitionBy`` collapses the whole corpus into ONE task, and a
+``Window.partitionBy(group)`` streams a heavy-hitter group through one.
 
 Design notes (100 TB posture):
 
-- ``select_token_budget`` computes an exact global running token total
-  with the classic two-pass distributed prefix sum: range-partition on
-  the total order, per-partition subtotal (one row per partition,
-  collected — bounded by the partition count), broadcast the exclusive
-  prefix offsets back, then a per-partition window cumsum that runs
-  every partition in parallel. Result is identical to the single-task
-  ``SUM() OVER (ORDER BY ...)`` — the oracle — at any partition count.
+- ``running_total`` is the one exact prefix machinery — the classic
+  two-pass distributed prefix sum, global or per group: range-partition
+  on ``(group…, order…)``, per-(group, partition) subtotals (bounded by
+  partitions + groups, collected), broadcast the exclusive offsets
+  back, then a per-partition window that runs every partition in
+  parallel. ``select_token_budget`` (weighted by tokens), ``assign_rank``
+  (unweighted: the row number), ``upsample_to_mix``,
+  ``interleave_sources``, ``ensemble_rank`` and packing's token shards
+  and length-bucketed batches all run on it; each is identical to the
+  single-task ``SUM() / row_number() OVER (...)`` oracle at any
+  partition count.
 - ``cap_per_group`` is one hash shuffle on the group key plus a
   rank-within-group cut; with ``n=1`` it is also every dedup operator's
   survivor pick. Heavy-hitter groups are the skew hazard and the
@@ -30,6 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from mongo_arrow_spark.execution import partition_count
 from mongo_arrow_spark.operators.text import token_count
@@ -84,61 +91,6 @@ def cap_per_group(
     )
 
 
-def select_token_budget_per_group(
-    df: DataFrame,
-    budget: int,
-    group_col: str,
-    score_col: str = "quality",
-    token_col: str | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Per-group token budgets: within EACH ``group_col`` value, keep the
-    best-scoring prefix whose running token total stays ≤ ``budget`` —
-    "2 B tokens per language", the stratified form of
-    ``select_token_budget``.
-
-    Scale shape: the GROUPED distributed prefix sum (``_grouped_prefix_
-    offsets``): range-partition on ``(group, order)``, per-(group,
-    partition) subtotals reduced to exclusive offsets over a tiny
-    boundary frame, then a per-(group, partition) window cumsum — so a
-    heavy-hitter group (English ≈ 90 % of a multilingual corpus) spans
-    MANY range partitions and its cumsum runs in parallel, where a plain
-    ``Window.partitionBy(group)`` would stream the whole group through
-    one task (r8 verdict fix; the "inherent to an exact per-group
-    prefix" claim the old docstring made was wrong — this is the same
-    machinery ``select_token_budget`` already used globally). Result is
-    bit-identical to the one-task-per-group window at any partition
-    count. Output adds ``n_tokens`` and ``cum_tokens`` (running total
-    WITHIN the group)."""
-    if budget < 0:
-        raise ValueError("budget must be >= 0")
-    tok = (
-        F.col(token_col).cast("long")
-        if token_col
-        else token_count(text_col).cast("long")
-    )
-    order = [F.col(score_col).desc(), F.col(id_col).asc()]
-    joined = grouped_prefix_join(
-        df.withColumn("n_tokens", tok), [group_col], order, "n_tokens",
-        num_partitions,
-    )
-    w = (
-        Window.partitionBy(group_col, "__pid")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        joined.withColumn(
-            "cum_tokens",
-            (F.sum("n_tokens").over(w) + F.col("__off")).cast("long"),
-        )
-        .where(F.col("cum_tokens") <= budget)
-        .drop("__pid", "__off")
-    )
-
-
 def select_token_budget(
     df: DataFrame,
     budget: int,
@@ -146,218 +98,144 @@ def select_token_budget(
     token_col: str | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_partitions: int | None = None,
+    group_col: str | None = None,
 ) -> DataFrame:
     """Greedy token-budget selection: rank documents by ``score_col``
     descending (ties broken by ``id_col`` ascending — a total order)
     and keep the prefix whose running token total stays ≤ ``budget``.
-    "Give me the best 2 B tokens" as one DataFrame plan.
+    "Give me the best 2 B tokens" as one DataFrame plan; with
+    ``group_col`` the budget applies WITHIN each group ("2 B tokens per
+    language").
 
     Output: the surviving rows plus ``n_tokens`` (per-doc count, from
-    ``token_col`` if given else whitespace ``token_count(text_col)``)
-    and ``cum_tokens`` (exact global running total, this row included).
-    A document that would push the total past the budget is excluded,
-    as is everything after it — standard greedy prefix semantics,
-    equivalent to ``SUM(tok) OVER (ORDER BY score DESC, id)`` ≤ budget.
-
-    Scale shape — exact global cumsum WITHOUT a one-task global window:
-
-    1. ``repartitionByRange`` on the total order — Spark's range
-       partitioner keeps partitions balanced and order-aligned (the
-       same machinery a global ``orderBy`` uses); the partitioning is
-       materialized ONCE via localCheckpoint (see ``prefix_join``).
-    2. Per-partition token subtotals: ``num_partitions`` rows, collected
-       to the driver (bounded by the partition count, NOT the corpus)
-       and turned into exclusive prefix offsets.
-    3. Broadcast the offsets back; each partition adds its offset to a
-       window cumsum partitioned BY PARTITION ID — every partition
-       computes in parallel, no single-task stage anywhere.
-
-    The result is bit-identical to the naive global window at any
-    partition count (range boundaries only move rows between tasks;
-    the total order, and therefore every prefix sum, is unchanged).
-    """
+    ``token_col`` if given else whitespace ``token_count(text_col)``;
+    NULL counts 0) and ``cum_tokens`` (exact running total, this row
+    included, within the group when grouped). A document that would
+    push the total past the budget is excluded, as is everything after
+    it — standard greedy prefix semantics, equivalent to ``SUM(tok)
+    OVER ([PARTITION BY group] ORDER BY score DESC, id)`` ≤ budget. The
+    running total is ``running_total``: no one-task window, and a
+    heavy-hitter group spans many tasks."""
     if budget < 0:
         raise ValueError("budget must be >= 0")
-    tok = (
-        F.col(token_col).cast("long")
-        if token_col
-        else token_count(text_col).cast("long")
-    )
-    order = [F.col(score_col).desc(), F.col(id_col).asc()]
-    joined = prefix_join(
-        df.withColumn("n_tokens", tok), order, "n_tokens", num_partitions
-    )
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        joined.withColumn(
-            "cum_tokens", (F.sum("n_tokens").over(w) + F.col("__off")).cast("long")
-        )
-        .where(F.col("cum_tokens") <= budget)
-        .drop("__pid", "__off")
-    )
+    tok = F.col(token_col) if token_col else token_count(text_col)
+    return running_total(
+        df.withColumn("n_tokens", tok.cast("long")),
+        [F.col(score_col).desc(), F.col(id_col).asc()],
+        "n_tokens",
+        [group_col] if group_col else (),
+        "cum_tokens",
+    ).where(F.col("cum_tokens") <= budget)
 
 
-def prefix_join(
+def running_total(
     df: DataFrame,
     order_by: list,
     weight_col: str | None = None,
-    num_partitions: int | None = None,
+    group_cols: list[str] | tuple = (),
+    out_col: str = "running_total",
 ) -> DataFrame:
-    """Shared scaffold of the distributed prefix ops: range-partition on
-    the total order, materialize ONE fixed partitioning, compute the
-    exclusive per-partition prefix offsets (``weight_col=None`` counts
-    rows) and broadcast them back: returns the ranged frame with
-    ``__pid`` and ``__off`` attached.
+    """The package's one exact prefix machinery: adds ``out_col``, the
+    inclusive running sum of ``weight_col`` over ``order_by`` (within
+    each ``group_cols`` group), or with ``weight_col=None`` the 1-based
+    row number — the rank. Bit-identical to ``SUM(w) OVER ([PARTITION
+    BY group] ORDER BY …)`` / ``row_number()`` at any partition count;
+    ``order_by`` must be total (within each group) and the weight
+    integral. A NULL weight counts 0 and the row is kept
+    (``weight_col`` is rewritten so).
 
-    MUST materialize one partitioning: ``repartitionByRange`` SAMPLES
-    its boundaries with a per-evaluation seed, so the offsets collect
-    and the caller's final join would otherwise see slightly different
-    partitionings and boundary rows get stale offsets (r8 fix, caught by
-    the curriculum_rank sf0.1 gate). ``localCheckpoint`` rather than
-    ``persist``: a cache-manager pin from inside an operator is released
-    only by an enclosing ``execution.scope()`` (unpersist on the derived
-    result is a no-op), while checkpoint blocks are freed by the
-    ContextCleaner once the returned frames are garbage-collected. No sortWithinPartitions —
-    the caller's partitioned window re-sorts anyway; __pid depends only
-    on the range boundaries."""
+    Scale shape — no one-task window, for the whole corpus or for a
+    heavy-hitter group (English ≈ 90 % of a multilingual corpus):
+
+    1. ``repartitionByRange`` on ``(group…, order…)`` into
+       ``partition_count`` partitions: the group keys lead, so each
+       group occupies a CONTIGUOUS run of range partitions and a large
+       group spans many of them.
+    2. Per-(group, partition) subtotals, collected to the driver: at
+       most ``nparts + n_groups − 1`` rows (contiguity bounds the
+       group/partition overlaps by cuts + groups), turned into exclusive
+       per-group offsets. A window over the subtotals would need an
+       ``Exchange SinglePartition`` in the ungrouped case.
+    3. The offsets broadcast back (null-safe: a NULL group key is a
+       group, SQL ``PARTITION BY`` semantics); a window partitioned by
+       (group, partition id) adds each partition's offset, every
+       partition in parallel.
+
+    The partitioning is materialized ONCE: ``repartitionByRange``
+    SAMPLES its boundaries with a per-evaluation seed, so the subtotal
+    collect and the final join would otherwise see different
+    partitionings and boundary rows get stale offsets. ``localCheckpoint``
+    rather than ``persist``: a cache-manager pin from inside an operator
+    is released only by an enclosing ``execution.scope()``, while
+    checkpoint blocks are freed by the ContextCleaner once the returned
+    frames are garbage-collected. For group cardinalities in the
+    millions every group is small and ``Window.partitionBy(group)`` is
+    the right tool instead."""
     spark = df.sparkSession
-    nparts = partition_count(spark, num_partitions)
-    ranged = (
-        df.repartitionByRange(nparts, *order_by)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    agg = (
-        F.sum(weight_col).alias("s")
-        if weight_col
-        else F.count("*").alias("s")
-    )
-    totals = {
-        r["__pid"]: r["s"]
-        for r in ranged.groupBy("__pid").agg(agg).collect()
-    }
-    offsets, acc = [], 0
-    for pid in range(nparts):
-        offsets.append((pid, acc))
-        acc += int(totals.get(pid, 0) or 0)
-    off = spark.createDataFrame(offsets, "__pid int, __off long")
-    return ranged.join(F.broadcast(off), "__pid")
-
-
-def _grouped_prefix_offsets(
-    df: DataFrame,
-    group_cols: list[str],
-    order_by: list,
-    nparts: int,
-    weight_col: str | None,
-):
-    """The GROUP dimension of the distributed prefix machinery (r8
-    verdict fix): range-partition on ``(group…, order…)`` — the group
-    keys lead, so each group occupies a CONTIGUOUS run of range
-    partitions and a heavy-hitter group spans many of them — then
-    reduce per-(group, partition) subtotals to exclusive per-group
-    prefix offsets. Returns ``(ranged, offsets_df)`` where offsets
-    carry ``(group…, __pid, __off)``.
-
-    The subtotal frame has at most ``nparts + n_groups − 1`` rows (a
-    group/partition pair exists only where a group overlaps a
-    partition, and contiguity bounds the overlaps by cuts + groups), so
-    the offsets are computed DISTRIBUTED with a per-group window over
-    that tiny frame — no driver collect at all, and the per-group
-    window serializes ≤ nparts boundary rows per group, never data.
-    Same materialize-once contract as ``prefix_join`` (range
-    boundaries are sampled per evaluation — localCheckpoint pins ONE
-    partitioning). NULL group keys form their own group (SQL PARTITION
-    BY semantics); the caller's join-back must be null-safe —
-    ``grouped_prefix_join`` handles both."""
+    groups = list(group_cols)
+    if weight_col:
+        df = df.withColumn(weight_col, F.coalesce(F.col(weight_col), F.lit(0)))
     ranged = (
         df.repartitionByRange(
-            nparts, *[F.col(g) for g in group_cols], *order_by
+            partition_count(spark), *[F.col(g) for g in groups], *order_by
         )
         .withColumn("__pid", F.spark_partition_id())
         .localCheckpoint(eager=True)
     )
-    agg = (
-        F.sum(weight_col).alias("s")
-        if weight_col
-        else F.count("*").alias("s")
+    sub = ranged.groupBy(*groups, "__pid").agg(
+        (F.sum(weight_col) if weight_col else F.count("*")).alias("s")
     )
-    sub = ranged.groupBy(*group_cols, "__pid").agg(agg)
-    w = (
-        Window.partitionBy(*group_cols)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    acc: dict = {}
+    offsets = []
+    for r in sorted(sub.collect(), key=lambda r: r["__pid"]):
+        key = tuple(r[g] for g in groups)
+        base = acc.get(key, 0)
+        offsets.append((*key, r["__pid"], base))
+        acc[key] = base + r["s"]
+    gkeys = [f"__g{i}" for i in range(len(groups))]
+    schema = T.StructType(
+        [T.StructField(k, df.schema[g].dataType) for k, g in zip(gkeys, groups)]
+        + [
+            T.StructField("__opid", T.IntegerType()),
+            T.StructField("__off", T.LongType()),
+        ]
     )
-    off = sub.select(
-        *group_cols,
-        "__pid",
-        F.coalesce(F.sum("s").over(w), F.lit(0)).cast("long").alias("__off"),
-    )
-    return ranged, off
-
-
-def grouped_prefix_join(
-    df: DataFrame,
-    group_cols: list[str],
-    order_by: list,
-    weight_col: str | None = None,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """``_grouped_prefix_offsets`` + the null-safe offsets join-back:
-    returns the ranged frame with ``__pid`` and ``__off`` attached. The
-    offsets side is broadcast — ≤ nparts + n_groups − 1 rows; for
-    group cardinalities where that broadcast would matter (millions),
-    every group is small and a plain ``Window.partitionBy(group)`` is
-    the right tool instead of this machinery."""
-    ranged, off = _grouped_prefix_offsets(
-        df, group_cols, order_by,
-        partition_count(df.sparkSession, num_partitions), weight_col,
-    )
-    renamed = off.select(
-        *[F.col(g).alias(f"__g{i}") for i, g in enumerate(group_cols)],
-        F.col("__pid").alias("__opid"),
-        "__off",
-    )
-    cond = ranged["__pid"] == renamed["__opid"]
-    for i, g in enumerate(group_cols):
-        # eqNullSafe: a NULL group key is a real group — a plain equi
-        # condition would drop its rows from the result (r8 review
-        # class (a))
-        cond = cond & ranged[g].eqNullSafe(renamed[f"__g{i}"])
-    return ranged.join(F.broadcast(renamed), cond).drop(
-        "__opid", *[f"__g{i}" for i in range(len(group_cols))]
-    )
-
-
-def assign_group_rank(
-    df: DataFrame,
-    group_cols: list[str],
-    order_by: list,
-    rank_col: str = "rank",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Exact 1-based rank WITHIN each group over a total order, without
-    serializing any group into one task — the grouped twin of
-    ``assign_global_rank`` and the shared base of ``upsample_to_mix``'s
-    fractional cut and ``interleave_sources``' per-source positions.
-    Bit-identical to ``row_number() OVER (PARTITION BY group ORDER BY
-    …)`` at any partition count (pinned by the skew + invariance
-    tests). ``order_by`` must be total within each group."""
-    joined = grouped_prefix_join(
-        df, group_cols, order_by, num_partitions=num_partitions
-    )
-    w = Window.partitionBy(*group_cols, "__pid").orderBy(*order_by)
-    return (
-        joined.withColumn(
-            rank_col, (F.row_number().over(w) + F.col("__off")).cast("long")
+    off = spark.createDataFrame(offsets, schema)
+    cond = ranged["__pid"] == off["__opid"]
+    for g, k in zip(groups, gkeys):
+        cond = cond & ranged[g].eqNullSafe(off[k])
+    w = Window.partitionBy(*groups, "__pid").orderBy(*order_by)
+    running = (
+        F.sum(weight_col).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-        .drop("__pid", "__off")
+        if weight_col
+        else F.row_number().over(w)
     )
+    return (
+        ranged.join(F.broadcast(off), cond)
+        .withColumn(out_col, (running + F.col("__off")).cast("long"))
+        .drop("__pid", "__opid", "__off", *gkeys)
+    )
+
+
+def assign_rank(
+    df: DataFrame,
+    order_by: list[Column],
+    rank_col: str = "rank",
+    group_cols: list[str] | tuple = (),
+) -> DataFrame:
+    """Exact 1-based rank over a total order, within each ``group_cols``
+    group (or globally) — the trainer-facing ordering primitive:
+    curriculum schedules (``order_by=[difficulty.asc(), id.asc()]``),
+    resumable shard assignment (``rank // shard_size``), deterministic
+    replay cursors, and the per-source positions of
+    ``interleave_sources`` / the fractional cut of ``upsample_to_mix``.
+    ``running_total`` with no weight: bit-identical to ``row_number()
+    OVER ([PARTITION BY group] ORDER BY …)`` at any partition count,
+    without a one-task window. ``order_by`` must be TOTAL (tie-break on
+    a unique id), or ranks are nondeterministic under retries."""
+    return running_total(df, order_by, group_cols=group_cols, out_col=rank_col)
 
 
 def temperature_weights(
@@ -413,10 +291,10 @@ def upsample_to_mix(
     per-domain (repeats, remainder) — bounded coordination; the
     expansion is a map-only ``explode(sequence(...))`` sized per domain
     via a literal map (no join), and the fractional cut is the grouped
-    distributed prefix rank (``assign_group_rank``) — a dominant domain
-    (English ≈ 90 %) spans many range partitions and ranks in parallel
-    instead of streaming through one task (r8 verdict fix). The corpus
-    payload is read once and shuffles only for that ranged rank."""
+    ``assign_rank`` — a dominant domain (English ≈ 90 %) spans many
+    range partitions and ranks in parallel instead of streaming through
+    one task. The corpus payload is read once and shuffles only for
+    that ranged rank."""
     if n_total <= 0:
         raise ValueError("n_total must be positive")
     if not weights or any(w <= 0 for w in weights.values()):
@@ -457,14 +335,14 @@ def upsample_to_mix(
         *[F.lit(x) for k, (_f, rem) in plan.items() for x in (k, rem)]
     )
     base = df.filter(F.col(key_col).isin(list(plan)))
-    ranked = assign_group_rank(
+    ranked = assign_rank(
         base.withColumn(
             "__h",
             F.md5(F.concat_ws(":", F.lit(salt), F.col(id_col).cast("string"))),
         ),
-        [key_col],
         [F.col("__h").asc(), F.col(id_col).asc()],
-        rank_col="__rank",
+        "__rank",
+        [key_col],
     ).drop("__h")
     n_copies = full_map[F.col(key_col)] + F.when(
         F.col("__rank") <= rem_map[F.col(key_col)], 1
@@ -477,37 +355,6 @@ def upsample_to_mix(
     return ranked.withColumn(epoch_col, F.explode(epochs)).drop("__rank")
 
 
-def assign_global_rank(
-    df: DataFrame,
-    order_by: list[Column],
-    rank_col: str = "rank",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Exact global 1-based rank over an arbitrary total order, WITHOUT
-    a one-task global window — the trainer-facing ordering primitive:
-    curriculum schedules (``order_by=[difficulty.asc(), id.asc()]``),
-    resumable shard assignment (``rank // shard_size``), deterministic
-    replay cursors.
-
-    Same machinery as ``select_token_budget`` with a token of 1:
-    range-partition on the order, count per partition (``nparts`` rows
-    collected — bounded by partition count, never the corpus),
-    broadcast the exclusive offsets, per-partition ``row_number`` adds
-    its offset — every partition ranks in parallel, bit-identical to
-    ``row_number() OVER (ORDER BY ...)`` at any partition count.
-
-    ``order_by`` must be a TOTAL order (tie-break on a unique id), or
-    ranks are nondeterministic under retries."""
-    w = Window.partitionBy("__pid").orderBy(*order_by)
-    return (
-        prefix_join(df, order_by, num_partitions=num_partitions)
-        .withColumn(
-            rank_col, (F.row_number().over(w) + F.col("__off")).cast("long")
-        )
-        .drop("__pid", "__off")
-    )
-
-
 def interleave_sources(
     df: DataFrame,
     weights: dict,
@@ -515,7 +362,6 @@ def interleave_sources(
     id_col: str = "doc_id",
     order_by: list | None = None,
     rank_col: str = "train_order",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Deterministic stride-scheduled interleave of weighted sources
     into ONE training order: source s with integer weight w_s emits its
@@ -538,13 +384,12 @@ def interleave_sources(
     code: 1}). The input must not already carry ``pos``/``vt``/the
     rank column (loud error — they are documented outputs).
 
-    Plan: per-source positions come from the GROUPED distributed
-    prefix rank (``assign_group_rank`` — a dominant source spans many
-    range partitions and ranks in parallel, where a
-    ``Window.partitionBy(source)`` would stream the whole source
-    through one task; r8 verdict fix), a map-only vt projection, then
-    ``assign_global_rank``'s distributed prefix rank over (vt, source,
-    pos) — no one-task window anywhere. Returns the input plus ``pos``
+    Plan: per-source positions come from the grouped ``assign_rank``
+    (a dominant source spans many range partitions and ranks in
+    parallel, where a ``Window.partitionBy(source)`` would stream the
+    whole source through one task), a map-only vt projection, then the
+    global ``assign_rank`` over (vt, source, pos) — no one-task window
+    anywhere. Returns the input plus ``pos``
     (within-source), ``vt``, and ``rank_col`` (1-based global order).
     """
     import math as _math
@@ -575,23 +420,14 @@ def interleave_sources(
         ]
     )
     staged = (
-        assign_group_rank(
-            kept,
-            [source_col],
-            order,
-            rank_col="pos",
-            num_partitions=num_partitions,
-        )
+        assign_rank(kept, order, "pos", [source_col])
         .withColumn("pos", F.col("pos") - 1)
         .withColumn("__s", s_map[src].cast("long"))
         .withColumn("vt", (F.col("pos") + 1).cast("long") * F.col("__s"))
         .drop("__s")
     )
-    return assign_global_rank(
-        staged,
-        [F.col("vt").asc(), src.asc(), F.col("pos").asc()],
-        rank_col=rank_col,
-        num_partitions=num_partitions,
+    return assign_rank(
+        staged, [F.col("vt").asc(), src.asc(), F.col("pos").asc()], rank_col
     )
 
 
@@ -602,7 +438,6 @@ def ensemble_rank(
     id_col: str = "doc_id",
     rank_col: str = "ens_rank",
     keep_ranks: bool = True,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Rank-fusion quality ensemble (the FineWeb/RefinedWeb practice of
     combining several imperfect quality signals): each score column gets
@@ -618,7 +453,7 @@ def ensemble_rank(
 
     Scale shape (r10, verdict #5): every ranking pass runs over a SLIM
     ``(id, key)`` projection, never the widening payload frame — each of
-    the ``len(score_cols) + 1`` ``assign_global_rank`` passes is a
+    the ``len(score_cols) + 1`` ``assign_rank`` passes is a
     distributed prefix rank (range partition → bounded per-partition
     counts → parallel windows, never a one-task global window), and each
     pass's internal ``localCheckpoint`` now materializes two columns
@@ -673,11 +508,8 @@ def ensemble_rank(
     slim = df.select(id_col, *score_cols).localCheckpoint(eager=True)
 
     def _rank_one(c: str, rn: str):
-        return assign_global_rank(
-            slim.select(id_col, c),
-            [F.col(c).desc(), F.col(id_col).asc()],
-            rank_col=rn,
-            num_partitions=num_partitions,
+        return assign_rank(
+            slim.select(id_col, c), [F.col(c).desc(), F.col(id_col).asc()], rn
         ).select(id_col, rn)
 
     if len(score_cols) > 1:
@@ -703,11 +535,8 @@ def ensemble_rank(
         term = F.col(rn) * F.lit(wt)
         wsum = term if wsum is None else wsum + term
     fused = fused.withColumn("__wsum", wsum.cast("long"))
-    fused = assign_global_rank(
-        fused,
-        [F.col("__wsum").asc(), F.col(id_col).asc()],
-        rank_col=rank_col,
-        num_partitions=num_partitions,
+    fused = assign_rank(
+        fused, [F.col("__wsum").asc(), F.col(id_col).asc()], rank_col
     )
     if not keep_ranks:
         fused = fused.drop(*rank_names)

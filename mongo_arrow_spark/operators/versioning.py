@@ -315,7 +315,7 @@ def write_version(
     else:
         # materialize ONCE: cur feeds the diff join, the added write and
         # the n_rows count; j feeds the added AND removed writes — the
-        # selection.prefix_join checkpoint discipline, or each action re-folds
+        # selection.running_total checkpoint discipline, or each action re-folds
         # the whole prior chain (r9 review fix)
         cur = cur.localCheckpoint(eager=True)
         prev = read_version(spark, path, versions[-1]["version"])

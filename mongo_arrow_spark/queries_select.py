@@ -154,8 +154,9 @@ def q_tok_bpe_stats(spark, sf_dir):
 def q_budget_per_group(spark, sf_dir):
     """Per-language token budgets (r8): within each language keep the
     best-scoring prefix under 4 000 tokens — the stratified budget cut.
-    One hash shuffle on the group key; each group's cumsum window runs
-    in parallel. Exact window-cumsum oracle."""
+    The grouped running total: a dominant language spans many range
+    partitions and its cumsum runs in parallel. Exact window-cumsum
+    oracle."""
     from mongo_arrow_spark.operators.text import stopword_hits
 
     docs = _t(spark, sf_dir, "documents").select(
@@ -164,8 +165,8 @@ def q_budget_per_group(spark, sf_dir):
         "text",
         stopword_hits("text", _STOPWORDS).cast("long").alias("sw"),
     )
-    out = selection.select_token_budget_per_group(
-        docs, 4000, "lang", score_col="sw", id_col="doc_id"
+    out = selection.select_token_budget(
+        docs, 4000, score_col="sw", id_col="doc_id", group_col="lang"
     )
     return out.select(
         "doc_id", "lang", "sw", "n_tokens", "cum_tokens"
@@ -580,7 +581,7 @@ def q_curriculum_rank(spark, sf_dir):
         .cast("long")
         .alias("score"),
     )
-    return selection.assign_global_rank(
+    return selection.assign_rank(
         scored, [F.col("score").asc(), F.col("doc_id").asc()], rank_col="rank"
     )
 

@@ -2,6 +2,7 @@ import os
 import subprocess
 import sys
 import tempfile
+from contextlib import contextmanager
 
 import pytest
 
@@ -56,6 +57,25 @@ def duck():
                 f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')"
             )
     return con
+
+
+@contextmanager
+def shuffle_partitions(spark, n: int, extra: dict | None = None):
+    """Run the block with ``spark.sql.shuffle.partitions`` set to ``n`` —
+    the range-partition count of every exact prefix op — and any
+    ``extra`` SQL confs; the previous values come back on exit."""
+    conf = {"spark.sql.shuffle.partitions": str(n), **(extra or {})}
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def cache_entries(spark) -> int:

@@ -4,6 +4,7 @@ public names."""
 
 import ast
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -32,6 +33,37 @@ def test_no_cross_module_private_imports():
                     for a in node.names
                     if a.name.startswith("_")
                 ]
+    assert not bad, bad
+
+
+def test_prefix_machinery_only_in_selection():
+    """Exact running totals and ranks go through
+    ``selection.running_total``: no other operator module partitions a
+    window by the range-partition id ``__pid`` or reads the exclusive
+    offset column ``__off``."""
+    bad = []
+    for f in sorted(os.listdir(OPERATORS)):
+        if not f.endswith(".py") or f == "selection.py":
+            continue
+        with open(os.path.join(OPERATORS, f)) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "partitionBy"
+                and any(
+                    isinstance(a, ast.Constant) and a.value == "__pid"
+                    for a in node.args
+                )
+            ):
+                bad.append(f"{f}:{node.lineno} window over __pid")
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and re.search(r"\b__off\b", node.value)
+            ):
+                bad.append(f"{f}:{node.lineno} reads __off")
     assert not bad, bad
 
 

@@ -14,7 +14,7 @@ from pyspark.sql import Window
 
 from mongo_arrow_spark.operators import dedup, packing
 
-from conftest import SF_DIR
+from conftest import SF_DIR, shuffle_partitions
 
 
 @pytest.fixture(scope="module")
@@ -523,16 +523,16 @@ class TestBucketBatches:
     def test_partition_invariance(self, docs):
         from mongo_arrow_spark.operators.packing import bucket_batches
 
-        a = {
-            (r["doc_id"], r["len_bucket"], r["batch_id"])
-            for r in bucket_batches(docs, 600, num_partitions=1).collect()
-        }
-        b = {
-            (r["doc_id"], r["len_bucket"], r["batch_id"])
-            for r in bucket_batches(
-                docs.repartition(13), 600, num_partitions=29
-            ).collect()
-        }
+        with shuffle_partitions(docs.sparkSession, 1):
+            a = {
+                (r["doc_id"], r["len_bucket"], r["batch_id"])
+                for r in bucket_batches(docs, 600).collect()
+            }
+        with shuffle_partitions(docs.sparkSession, 29):
+            b = {
+                (r["doc_id"], r["len_bucket"], r["batch_id"])
+                for r in bucket_batches(docs.repartition(13), 600).collect()
+            }
         assert a == b
 
     def test_null_text_lands_in_bucket_zero(self, spark):

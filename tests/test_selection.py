@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from conftest import shuffle_partitions
 from mongo_arrow_spark.operators import selection
 
 SF = "/root/testdata/sf0.001"
@@ -53,18 +54,15 @@ def _budget_oracle(con, budget):
     )
 
 
-def _run_budget(docs, budget, nparts=None):
-    out = selection.select_token_budget(
-        docs,
-        budget,
-        score_col="n_chars",
-        id_col="doc_id",
-        num_partitions=nparts,
-    )
-    return sorted(
-        (r["doc_id"], r["n_tokens"], r["cum_tokens"])
-        for r in out.select("doc_id", "n_tokens", "cum_tokens").collect()
-    )
+def _run_budget(docs, budget, nparts=8):
+    with shuffle_partitions(docs.sparkSession, nparts):
+        out = selection.select_token_budget(
+            docs, budget, score_col="n_chars", id_col="doc_id"
+        )
+        return sorted(
+            (r["doc_id"], r["n_tokens"], r["cum_tokens"])
+            for r in out.select("doc_id", "n_tokens", "cum_tokens").collect()
+        )
 
 
 def test_token_budget_matches_oracle(docs, con):
@@ -92,6 +90,27 @@ def test_token_budget_edges(docs):
     assert len(_run_budget(docs, 10**12)) == n
     with pytest.raises(ValueError):
         selection.select_token_budget(docs, -1)
+
+
+def test_token_budget_null_text_counts_zero(spark):
+    """A NULL-text document counts 0 tokens and is kept at 1 and at 10
+    partitions, globally and per group: under ANSI ``size(NULL)`` is
+    NULL, and a window sum over only NULLs (a partition holding just
+    that row) is NULL, which the budget filter would drop."""
+    df = spark.createDataFrame(
+        [(1, "a b c", 3, "x"), (2, None, 2, "x"), (3, "d e", 1, "x")],
+        "doc_id long, text string, quality long, g string",
+    )
+    want = [(1, 3, 3), (2, 0, 3), (3, 2, 5)]
+    for nparts, group_col in ((1, None), (10, None), (10, "g")):
+        with shuffle_partitions(spark, nparts):
+            got = sorted(
+                (r["doc_id"], r["n_tokens"], r["cum_tokens"])
+                for r in selection.select_token_budget(
+                    df, 100, group_col=group_col
+                ).collect()
+            )
+        assert got == want, (nparts, group_col)
 
 
 def test_token_budget_boundary_doc_excluded(docs):
@@ -152,8 +171,8 @@ def test_cap_preserves_columns_and_rows_within_cap(docs):
 
 
 def test_budget_per_group_matches_oracle(docs, con):
-    out = selection.select_token_budget_per_group(
-        docs, 3000, "lang", score_col="n_chars", id_col="doc_id"
+    out = selection.select_token_budget(
+        docs, 3000, score_col="n_chars", id_col="doc_id", group_col="lang"
     )
     got = sorted(
         (r["lang"], r["doc_id"], r["cum_tokens"])
@@ -184,7 +203,7 @@ def test_budget_per_group_validates(docs):
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
-        selection.select_token_budget_per_group(docs, -5, "lang")
+        selection.select_token_budget(docs, -5, group_col="lang")
 
 
 # ------------------------------------------------ upsampling data recipes
@@ -349,13 +368,16 @@ def test_upsample_matches_python_reference_random(spark):
 def test_assign_global_rank_partitioning_independent(docs):
     """Exact global rank == the one-task window at any partition count;
     ranks are a dense 1..N permutation."""
-    from mongo_arrow_spark.operators.selection import assign_global_rank
+    from mongo_arrow_spark.operators.selection import assign_rank
 
     order = [F.length("text").desc(), F.col("doc_id").asc()]
-    a = assign_global_rank(docs, order, num_partitions=3)
-    b = assign_global_rank(docs.repartition(11), order, num_partitions=17)
-    ra = {r["doc_id"]: r["rank"] for r in a.collect()}
-    rb = {r["doc_id"]: r["rank"] for r in b.collect()}
+    with shuffle_partitions(docs.sparkSession, 3):
+        ra = {r["doc_id"]: r["rank"] for r in assign_rank(docs, order).collect()}
+    with shuffle_partitions(docs.sparkSession, 17):
+        rb = {
+            r["doc_id"]: r["rank"]
+            for r in assign_rank(docs.repartition(11), order).collect()
+        }
     assert ra == rb
     n = docs.count()
     assert sorted(ra.values()) == list(range(1, n + 1))
@@ -368,7 +390,7 @@ def test_prefix_sum_matches_one_task_window_at_scale(spark):
     went stale (caught by the sf0.1 gate: 8 divergent rows of 3004).
     Pinned here against Spark's own one-task window at 20k rows."""
     from mongo_arrow_spark.operators.selection import (
-        assign_global_rank,
+        assign_rank,
         select_token_budget,
     )
 
@@ -380,10 +402,8 @@ def test_prefix_sum_matches_one_task_window_at_scale(spark):
         (F.xxhash64(F.col("id")) % 1000).alias("score"),
     )
     order = [F.col("score").asc(), F.col("doc_id").asc()]
-    got = {
-        r["doc_id"]: r["rank"]
-        for r in assign_global_rank(df, order, num_partitions=24).collect()
-    }
+    with shuffle_partitions(spark, 24):
+        got = {r["doc_id"]: r["rank"] for r in assign_rank(df, order).collect()}
     w = Window.orderBy(*order)
     want = {
         r["doc_id"]: r["rank"]
@@ -394,14 +414,13 @@ def test_prefix_sum_matches_one_task_window_at_scale(spark):
     assert got == want
 
     budget = 30_000
-    got_b = {
-        (r["doc_id"], r["cum_tokens"])
-        for r in select_token_budget(
-            df, budget, score_col="score", num_partitions=24
-        )
-        .select("doc_id", "cum_tokens")
-        .collect()
-    }
+    with shuffle_partitions(spark, 24):
+        got_b = {
+            (r["doc_id"], r["cum_tokens"])
+            for r in select_token_budget(df, budget, score_col="score")
+            .select("doc_id", "cum_tokens")
+            .collect()
+        }
     from mongo_arrow_spark.operators.text import token_count
 
     w2 = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc()).rowsBetween(
@@ -544,7 +563,7 @@ def test_assign_group_rank_matches_one_task_window(spark):
     """Bit-identity of the grouped distributed prefix rank with
     ``row_number() OVER (PARTITION BY group ORDER BY ...)`` at any
     partition count (1 vs 97), NULL group keys included."""
-    from mongo_arrow_spark.operators.selection import assign_group_rank
+    from mongo_arrow_spark.operators.selection import assign_rank
 
     df = spark.range(5_000).select(
         F.col("id").alias("doc_id"),
@@ -562,40 +581,43 @@ def test_assign_group_rank_matches_one_task_window(spark):
         ).collect()
     }
     for nparts in (1, 97):
-        got = {
-            (r["doc_id"],): (r["grp"], r["rk"])
-            for r in assign_group_rank(
-                df, ["grp"], order, rank_col="rk", num_partitions=nparts
-            ).collect()
-        }
+        with shuffle_partitions(spark, nparts):
+            got = {
+                (r["doc_id"],): (r["grp"], r["rk"])
+                for r in assign_rank(df, order, "rk", ["grp"]).collect()
+            }
         assert got == want, f"nparts={nparts}"
 
 
 def test_grouped_prefix_hot_group_spans_partitions(spark):
-    """r8 verdict fix: a heavy-hitter group (95 % of rows) must SPAN
-    range partitions — the offsets frame carries multiple (group, pid)
-    rows for it — instead of streaming through one task the way a
-    plain ``Window.partitionBy(group)`` does."""
-    from mongo_arrow_spark.operators.selection import (
-        _grouped_prefix_offsets,
-    )
-
+    """A heavy-hitter group (95 % of rows) must SPAN range partitions
+    and be summed by many tasks, instead of streaming through one task
+    the way a plain ``Window.partitionBy(group)`` does. The running
+    window is keyed by (group, range partition), so the tasks it runs
+    in (AQE coalescing off, so one task per shuffle partition) show
+    both the span and the bound: at most ``nparts + n_groups − 1``
+    (group, partition) pairs."""
     df = spark.range(20_000).select(
         F.col("id").alias("doc_id"),
         F.when(F.col("id") % 20 == 0, F.lit("rare"))
         .otherwise(F.lit("english"))
         .alias("grp"),
     )
-    _ranged, off = _grouped_prefix_offsets(
-        df, ["grp"], [F.col("doc_id").asc()], 16, None
-    )
-    pids_per_group = {
-        r["grp"]: r["n"]
-        for r in off.groupBy("grp").agg(F.count("*").alias("n")).collect()
-    }
-    assert pids_per_group["english"] >= 8, pids_per_group
-    # offsets frame stays tiny: ≤ nparts + n_groups − 1 rows
-    assert sum(pids_per_group.values()) <= 16 + 2 - 1
+    no_coalesce = {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    with shuffle_partitions(spark, 16, no_coalesce):
+        pairs = (
+            selection.running_total(
+                df, [F.col("doc_id").asc()], group_cols=["grp"], out_col="rk"
+            )
+            .select("grp", F.spark_partition_id().alias("task"))
+            .distinct()
+            .collect()
+        )
+    tasks_per_group = {}
+    for r in pairs:
+        tasks_per_group[r["grp"]] = tasks_per_group.get(r["grp"], 0) + 1
+    assert tasks_per_group["english"] >= 8, tasks_per_group
+    assert len(pairs) <= 16 + 2 - 1
 
 
 def test_upsample_and_interleave_grouped_rank_invariance(spark):
@@ -632,12 +654,11 @@ def test_upsample_and_interleave_grouped_rank_invariance(spark):
         (r["doc_id"], r["pos"], r["vt"], r["train_order"])
         for r in interleave_sources(df, weights).collect()
     )
-    ib = sorted(
-        (r["doc_id"], r["pos"], r["vt"], r["train_order"])
-        for r in interleave_sources(
-            df.repartition(23), weights, num_partitions=7
-        ).collect()
-    )
+    with shuffle_partitions(spark, 7):
+        ib = sorted(
+            (r["doc_id"], r["pos"], r["vt"], r["train_order"])
+            for r in interleave_sources(df.repartition(23), weights).collect()
+        )
     assert ia == ib and len(ia) == 600
 
 
@@ -666,16 +687,16 @@ def test_ensemble_rank_matches_one_task_windows(docs):
     )
     want = {r["doc_id"]: (r["ra"], r["rb"], r["ws"], r["er"]) for r in naive.collect()}
     for nparts in (1, 17):
-        out = selection.ensemble_rank(
-            scored.repartition(5),
-            ["a", "b"],
-            weights=[3, 1],
-            num_partitions=nparts,
-        )
-        got = {
-            r["doc_id"]: (r["__rank_a"], r["__rank_b"], r["__wsum"], r["ens_rank"])
-            for r in out.collect()
-        }
+        with shuffle_partitions(docs.sparkSession, nparts):
+            out = selection.ensemble_rank(
+                scored.repartition(5), ["a", "b"], weights=[3, 1]
+            )
+            got = {
+                r["doc_id"]: (
+                    r["__rank_a"], r["__rank_b"], r["__wsum"], r["ens_rank"]
+                )
+                for r in out.collect()
+            }
         assert got == want
 
 
@@ -698,8 +719,9 @@ def test_ensemble_rank_no_single_partition_exchange(docs):
         F.coalesce(F.length("text"), F.lit(-1)).alias("a"),
         F.coalesce("n_chars", F.lit(-1)).alias("b"),
     )
-    out = selection.ensemble_rank(scored, ["a", "b"], num_partitions=4)
-    out.collect()
+    with shuffle_partitions(docs.sparkSession, 4):
+        out = selection.ensemble_rank(scored, ["a", "b"])
+        out.collect()
     assert "Exchange SinglePartition" not in plan_string(out)
 
 
@@ -719,12 +741,12 @@ def test_ensemble_rank_property_random_frames(spark):
         ]
         w = [rng.randint(1, 4), rng.randint(1, 4)]
         df = spark.createDataFrame(rows, "doc_id long, a long, b long")
-        got = {
-            r["doc_id"]: (r["__rank_a"], r["__rank_b"], r["ens_rank"])
-            for r in selection.ensemble_rank(
-                df, ["a", "b"], weights=w, num_partitions=rng.choice([1, 7])
-            ).collect()
-        }
+        with shuffle_partitions(spark, rng.choice([1, 7])):
+            got = {
+                r["doc_id"]: (r["__rank_a"], r["__rank_b"], r["ens_rank"])
+                for r in selection.ensemble_rank(df, ["a", "b"], weights=w)
+                .collect()
+            }
         # brute python Borda
         ra = {
             d: i + 1
