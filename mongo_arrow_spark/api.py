@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mongo_arrow_spark.errors import ArrowWriteError, MQLTranslationError
+from mongo_arrow_spark.execution import local_frame
 from mongo_arrow_spark.mql import apply_pipeline, translate_match
 from mongo_arrow_spark.mql.expressions import translate_expr
 from mongo_arrow_spark.mql.pipeline import _sort_cols
@@ -373,8 +374,11 @@ def write(
     """Bulk write (reference api.py:602-713). The reference batches BSON
     inserts under byte/count caps; Spark writers batch per partition task and
     the commit protocol replaces the offset-rebasing error dance. Accepts a
-    DataFrame or any tabular (arrow Table / pandas / dict-of-ndarray), which
-    is converted via the Arrow path first.
+    DataFrame or any tabular (arrow Table / pandas / dict-of-ndarray /
+    polars). A tabular enters Spark through ``execution.local_frame``: an
+    Arrow local relation cut into one slice, hence one write task and one
+    part file, per ``WRITE_MAX_BYTES`` (48 MB - 16 KB, the reference's
+    batch cap) of input — a 6,000-row frame is one task, not one per core.
 
     ``auto_convert`` mirrors api.py:626-648 (pre-write type normalization);
     ``exclude_none`` mirrors api.py:553-575 (skip null fields — honored by
@@ -441,16 +445,16 @@ def _as_dataframe(tabular, spark) -> DataFrame:
     import pyarrow as pa
 
     if isinstance(tabular, pa.Table):
-        return spark.createDataFrame(tabular.to_pandas())
+        return local_frame(spark, tabular)
     if isinstance(tabular, pd.DataFrame):
         return _from_pandas(tabular, spark)
     if isinstance(tabular, dict):  # dict of ndarrays (reference api.py:602)
-        return spark.createDataFrame(pd.DataFrame(tabular))
+        return local_frame(spark, pd.DataFrame(tabular))
     try:
         import polars as pl
 
         if isinstance(tabular, pl.DataFrame):
-            return spark.createDataFrame(tabular.to_pandas())
+            return local_frame(spark, tabular.to_pandas())
     except ImportError:
         pass
     raise MQLTranslationError(f"unsupported tabular type: {type(tabular)}")
@@ -481,7 +485,7 @@ def _from_pandas(pdf, spark) -> DataFrame:
         pdf = pdf.assign(
             **{name: [None if na else conv(v) for v, na in zip(col, col.isna())]}
         )
-    df = spark.createDataFrame(pdf)
+    df = local_frame(spark, pdf)
     if not tagged:
         return df
     return df.withColumns(
@@ -719,11 +723,11 @@ def write_ipc(df: DataFrame, path: str) -> int:
 
 
 def read_ipc(spark, path: str) -> DataFrame:
-    """Read an Arrow IPC (Feather v2) file into a DataFrame (driver-side
-    Arrow load + parallelize; the symmetric interop source to
-    ``write_ipc``)."""
+    """Read an Arrow IPC (Feather v2) file into a DataFrame (a
+    driver-side Arrow load entering Spark through ``local_frame``; the
+    symmetric interop source to ``write_ipc``)."""
     import pyarrow.ipc as ipc
 
     with ipc.open_file(path) as r:
         table = r.read_all()
-    return spark.createDataFrame(table.to_pandas())
+    return local_frame(spark, table)

@@ -1,7 +1,8 @@
 """Execution policy: the runtime choices an operator makes about HOW its
 plan runs — fan-out (``spread``), prefix-sum partition count
-(``partition_count``), forced-broadcast budget (``broadcast_budget``)
-and materialization (``materialize`` / ``scope``) — kept in one place.
+(``partition_count``), forced-broadcast budget (``broadcast_budget``),
+materialization (``materialize`` / ``scope``) and how a driver-held
+table enters a plan (``local_frame``) — kept in one place.
 """
 
 from __future__ import annotations
@@ -11,11 +12,17 @@ from contextlib import contextmanager
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 # the least a forced broadcast may take even when the session lowers or
 # disables autoBroadcastJoinThreshold: such a broadcast is the
 # operator's own plan choice, not an auto-join decision
 BROADCAST_FLOOR_BYTES = 10 * 1024 * 1024
+
+# the reference's bulk-write batch cap, 48 MB - 16 KB (api.py:91-95): the
+# documents sink's part-file roll and the slice a driver-held table is
+# cut into when it enters Spark (``local_frame``)
+WRITE_MAX_BYTES = 48 * 1024 * 1024 - 16 * 1024
 
 _scopes = threading.local()
 
@@ -72,6 +79,46 @@ def broadcast_budget(spark) -> int:
     broadcast sides."""
     conf = spark._jsparkSession.sessionState().conf()
     return max(int(conf.autoBroadcastJoinThreshold()), BROADCAST_FLOOR_BYTES)
+
+
+def local_frame(spark, data, schema=None) -> DataFrame:
+    """A driver-held table as a DataFrame: a pyarrow Table, a pandas
+    DataFrame, or a list of row tuples with ``schema`` (a StructType or
+    DDL string), the rows built into Arrow against that schema first.
+
+    Spark takes an Arrow or pandas input as a ``LocalRelation``: no
+    Python task ever reads it (a list goes to ``createDataFrame`` as a
+    pickled Python RDD, unpickled by one forked Python worker per
+    partition), and its size statistics are exact, so a join against it
+    can broadcast. It spans at most one partition per
+    ``WRITE_MAX_BYTES`` of input (Arrow ``nbytes``, pandas deep memory
+    usage) and never more than ``createDataFrame`` gives: every task
+    downstream — a Python sink's above all — pays a fixed cost however
+    little it handles."""
+    import pandas as pd
+    import pyarrow as pa
+
+    if isinstance(data, pd.DataFrame):
+        nbytes, nrows = int(data.memory_usage(deep=True).sum()), len(data)
+    else:
+        if not isinstance(data, pa.Table):
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            if isinstance(schema, str):
+                schema = StructType.fromDDL(schema)
+            arrow_schema = to_arrow_schema(schema)
+            cols = list(zip(*data)) or [[] for _ in arrow_schema]
+            data = pa.Table.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema,
+            )
+        nbytes, nrows = data.nbytes, data.num_rows
+    df = spark.createDataFrame(data, schema)
+    n = -(-nbytes // WRITE_MAX_BYTES)
+    # a LocalRelation scans as min(rows, defaultParallelism) partitions
+    if n < min(nrows, spark.sparkContext.defaultParallelism):
+        df = df.coalesce(n)
+    return df
 
 
 def materialize(df: DataFrame) -> DataFrame:

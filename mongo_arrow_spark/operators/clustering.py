@@ -38,7 +38,7 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mongo_arrow_spark.execution import materialize
+from mongo_arrow_spark.execution import local_frame, materialize
 
 # int64 bounds for the JSON-literal fast path below: a quantized value
 # outside bigint range must take the expression-tree spelling (whose
@@ -287,7 +287,7 @@ def save_kmeans(spark, model: KMeansModel, path: str) -> None:
     artifact-round-trip contract as the selection-tier models."""
     meta = {"scale": model.scale, "iters": model.iters}
     rows = [(j, [int(v) for v in c]) for j, c in enumerate(model.centroids)]
-    sdf = spark.createDataFrame(rows, "cluster long, centroid array<long>")
+    sdf = local_frame(spark, rows, "cluster long, centroid array<long>")
     sdf.select(
         F.col("cluster").alias("cluster", metadata=meta), "centroid"
     ).write.mode("overwrite").parquet(path)

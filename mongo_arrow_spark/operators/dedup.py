@@ -16,10 +16,11 @@ Scale design notes (the part that matters at 100 TB):
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from mongo_arrow_spark.execution import broadcast_budget, materialize
+from mongo_arrow_spark.execution import broadcast_budget, local_frame, materialize
 from mongo_arrow_spark.operators.clustering import argmin_cluster, quantize_vec
 from mongo_arrow_spark.operators.selection import cap_per_group
 from mongo_arrow_spark.operators.text import bind, normalize_text, tokens
@@ -734,15 +735,18 @@ def connected_components(
     instead). Converges when a round changes no label; the iteration
     driver is Python but every data operation is a DataFrame op.
 
-    Size-gated fast path: when the (deduplicated) edge set is at most
-    ``local_threshold`` edges, a driver-side union-find answers in ONE
-    Arrow pull instead of O(log n) shuffle rounds — after max_df-capped
-    candidate generation, near-dup edge sets are routinely tiny even on
-    huge corpora, and a million long-id edges lands as two flat 8-byte
-    columns (~16 MB via toPandas; no per-row Row objects), far below one
-    loop round's scheduling cost. The label contract (min reachable id)
-    is identical on both paths — self-loop pairs are dropped up front on
-    both; set ``local_threshold=0`` to force the distributed loop.
+    Size-gated fast path: one ``limit(local_threshold + 1)`` Arrow pull
+    both picks the path and, when it holds at most ``local_threshold``
+    edges, answers it — a driver-side union-find instead of O(log n)
+    shuffle rounds. After max_df-capped candidate generation, near-dup
+    edge sets are routinely tiny even on huge corpora, and a million
+    long-id edges lands as two flat 8-byte columns (~16 MB; no per-row
+    Row objects), far below one loop round's scheduling cost. The labels
+    go back as an Arrow local relation (``execution.local_frame``): no
+    Python task reads them, and a join against them can broadcast. The
+    label contract (min reachable id) is identical on both paths —
+    self-loop pairs are dropped up front on both; set
+    ``local_threshold=0`` to force the distributed loop.
     """
     # normalize to CANONICAL (min, max) edges before the distinct (r14):
     # the previous both-directions union evaluated the pairs subtree —
@@ -756,11 +760,14 @@ def connected_components(
     # only edge was (a,a); the loop labeled it) — drop them up front so
     # both paths see the identical graph.
     a, b = F.col(a_col), F.col(b_col)
+    # lazy: the first action over the edges — the fast path's pull, or
+    # the loop's first round — fills the checkpoint, and the loop reads
+    # it back instead of re-evaluating the pairs subtree
     edges = (
         pairs.filter(a != b)
         .select(F.least(a, b).alias("src"), F.greatest(a, b).alias("dst"))
         .distinct()
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
     # labels derives from the checkpointed edges by one narrow distinct —
     # no checkpoint of its own (one less job per call; round 0's stages
@@ -769,37 +776,10 @@ def connected_components(
     # match the thresholded edge mass — measured: loop wall is identical
     # at 1 and 32 shuffle partitions once codegen is warm, so no manual
     # parallelism fiddling is warranted.
-    if local_threshold and edges.count() <= local_threshold:
-        # count() is a cached-scan over the checkpointed canonical
-        # edges. Pull them through Arrow (toPandas → two flat columns,
-        # ~16 bytes/edge for long ids — NOT a list of pyspark Rows,
-        # which cost hundreds of bytes each at this scale) and
-        # union-find with path compression on the driver.
-        pdf = edges.toPandas()
-        srcs = pdf["src"].tolist()
-        dsts = pdf["dst"].tolist()
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
-
-        for a0, b0 in zip(srcs, dsts):
-            a, b = find(a0), find(b0)
-            if a != b:
-                # min-id root keeps the label contract without a second pass
-                lo, hi = (a, b) if a < b else (b, a)
-                parent[hi] = lo
-        verts = set(srcs) | set(dsts)
-        rows = [(v, find(v)) for v in sorted(verts)]
-        schema = edges.select(
-            F.col("src").alias("id"), F.col("src").alias("component")
-        ).schema
-        return edges.sparkSession.createDataFrame(rows, schema)
+    if local_threshold:
+        pulled = edges.limit(local_threshold + 1).toArrow()
+        if pulled.num_rows <= local_threshold:
+            return _union_find(edges.sparkSession, pulled)
 
     # the propagation loop pulls labels across DIRECTED edges, so both
     # directions are re-derived from the checkpointed canonical halves —
@@ -814,6 +794,40 @@ def connected_components(
     )
     labels = _cc_loop(edges, labels, max_iter)
     return labels.select(F.col("v").alias("id"), F.col("comp").alias("component"))
+
+
+def _union_find(spark, edges) -> DataFrame:
+    """(id, component) of an Arrow ``src, dst`` edge table by union-find
+    with path compression on the driver; the root of a component is its
+    min id, so no second pass restores the label contract."""
+    srcs = edges.column("src").to_pylist()
+    dsts = edges.column("dst").to_pylist()
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != x:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a0, b0 in zip(srcs, dsts):
+        a, b = find(a0), find(b0)
+        if a != b:
+            lo, hi = (a, b) if a < b else (b, a)
+            parent[hi] = lo
+    ids = sorted(set(srcs) | set(dsts))
+    id_t = edges.schema.field("src").type
+    return local_frame(
+        spark,
+        pa.table(
+            {
+                "id": pa.array(ids, id_t),
+                "component": pa.array([find(v) for v in ids], id_t),
+            }
+        ),
+    )
 
 
 def _cc_loop(edges: DataFrame, labels: DataFrame, max_iter: int) -> DataFrame:

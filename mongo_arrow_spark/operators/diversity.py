@@ -44,6 +44,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mongo_arrow_spark.execution import local_frame
 from mongo_arrow_spark.operators.clustering import (
     const_array,
     quantize_vec,
@@ -150,8 +151,8 @@ def _exclude(cur: DataFrame, sel_ids: list) -> DataFrame:
     if len(sel_ids) <= 256:
         return cur.filter(~F.col("__id").isin(sel_ids))
     spark = cur.sparkSession
-    ids = spark.createDataFrame(
-        [(i,) for i in sel_ids], cur.select("__id").schema
+    ids = local_frame(
+        spark, [(i,) for i in sel_ids], cur.select("__id").schema
     )
     return cur.join(F.broadcast(ids), "__id", "left_anti")
 
@@ -239,7 +240,8 @@ def kcenter_select(
             new = dist if first else F.least("__dmin", dist)
             return frame.withColumn("__dmin", new)
         g_t = frame.schema["__g"].dataType.simpleString()
-        cdf = spark.createDataFrame(
+        cdf = local_frame(
+            spark,
             [(g, c) for g, c in centers.items()],
             f"__g {g_t}, __c array<bigint>",
         )
@@ -278,7 +280,7 @@ def kcenter_select(
     else:
         schema = f"{id_col} {id_t}, sel_rank long, gain long"
         rows = [(i, rk, gn) for (i, _g, rk, gn) in out]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def mmr_select(
@@ -366,6 +368,4 @@ def mmr_select(
         )
 
     id_t = df.schema[id_col].dataType.simpleString()
-    return spark.createDataFrame(
-        out, f"{id_col} {id_t}, sel_rank long, score long"
-    )
+    return local_frame(spark, out, f"{id_col} {id_t}, sel_rank long, score long")

@@ -37,6 +37,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mongo_arrow_spark.execution import local_frame
+
 __all__ = [
     "ExpectationError",
     "accepted_values",
@@ -537,7 +539,7 @@ def _check_by(
     if expected_groups is not None:
         spark = df.sparkSession
         strs = sorted({_group_str(g) for g in expected_groups})
-        exp_df = spark.createDataFrame([(s,) for s in strs], "group string")
+        exp_df = local_frame(spark, [(s,) for s in strs], "group string")
         missing = exp_df.join(
             base.select("group").distinct(), "group", "left_anti"
         )
@@ -547,7 +549,8 @@ def _check_by(
         ] + [
             (name, "*", int(r["min_rows"]), 0, 0.0) for name, r in post
         ]
-        tmpl_df = spark.createDataFrame(
+        tmpl_df = local_frame(
+            spark,
             tmpl,
             "rule string, column string, violations long,"
             " n_rows long, threshold double",

@@ -54,6 +54,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mongo_arrow_spark.execution import local_frame
+
 
 def pagerank(
     edges: DataFrame,
@@ -139,9 +141,7 @@ def pagerank(
     if reset_nodes is not None:
         if not reset_nodes:
             raise ValueError("reset_nodes must be non-empty when given")
-        seeds = spark.createDataFrame(
-            [(v,) for v in reset_nodes], nodes.schema
-        )
+        seeds = local_frame(spark, [(v,) for v in reset_nodes], nodes.schema)
         nodes = nodes.union(seeds).distinct()
     nodes = nodes.localCheckpoint(eager=True)
     n = nodes.count()

@@ -46,7 +46,7 @@ from collections import Counter
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from mongo_arrow_spark.execution import spread
+from mongo_arrow_spark.execution import local_frame, spread
 
 __all__ = [
     "LANG_SAMPLES",
@@ -496,7 +496,7 @@ def _profile_df(spark, profiles: dict[str, dict[str, float]]):
         for lang in sorted(profiles)
         for tg, w in sorted(profiles[lang].items())
     ]
-    return spark.createDataFrame(rows, "lang string, tg string, w double")
+    return local_frame(spark, rows, "lang string, tg string, w double")
 
 
 def identify_language(

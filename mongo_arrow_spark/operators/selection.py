@@ -38,7 +38,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mongo_arrow_spark.execution import partition_count
+from mongo_arrow_spark.execution import local_frame, partition_count
 from mongo_arrow_spark.operators.text import token_count
 
 
@@ -200,7 +200,7 @@ def running_total(
             T.StructField("__off", T.LongType()),
         ]
     )
-    off = spark.createDataFrame(offsets, schema)
+    off = local_frame(spark, offsets, schema)
     cond = ranged["__pid"] == off["__opid"]
     for g, k in zip(groups, gkeys):
         cond = cond & ranged[g].eqNullSafe(off[k])

@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mongo_arrow_spark.execution import materialize, spread
+from mongo_arrow_spark.execution import local_frame, materialize, spread
 from mongo_arrow_spark.operators.clustering import const_array
 
 
@@ -910,9 +910,7 @@ def save_pq(spark, model: PQModel, path: str) -> None:
             ),
         ]
     )
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path)
+    local_frame(spark, rows, schema).write.mode("overwrite").parquet(path)
 
 
 def load_pq(spark, path: str) -> PQModel:
@@ -1419,8 +1417,10 @@ def hard_negatives_ivf(
             for (l2, c) in present
             if l2 != lbl
         ]
-        elig = spark.createDataFrame(
-            eligible, f"anchor_label {lbl_type}, __cell int, __flbl {lbl_type}"
+        elig = local_frame(
+            spark,
+            eligible,
+            f"anchor_label {lbl_type}, __cell int, __flbl {lbl_type}",
         )
     else:
         eligible = [
@@ -1429,9 +1429,7 @@ def hard_negatives_ivf(
             for c in all_cells
             if any(l2 != lbl and (l2, c) in present for l2 in corpus_labels)
         ]
-        elig = spark.createDataFrame(
-            eligible, f"anchor_label {lbl_type}, __cell int"
-        )
+        elig = local_frame(spark, eligible, f"anchor_label {lbl_type}, __cell int")
     wprobe = Window.partitionBy(
         "anchor_id", *(["__flbl"] if probe_per_label else [])
     ).orderBy(F.col("__pos").asc())

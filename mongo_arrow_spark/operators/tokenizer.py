@@ -39,7 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mongo_arrow_spark.execution import materialize, spread
+from mongo_arrow_spark.execution import local_frame, materialize, spread
 from mongo_arrow_spark.operators.text import tokens
 
 END_OF_WORD = "</w>"
@@ -253,7 +253,7 @@ def save_bpe(model: BpeModel, spark, path: str) -> None:
         "min_pair_count": model.min_pair_count,
     }
     rows = [(i, a, b) for i, (a, b) in enumerate(model.merges)]
-    df = spark.createDataFrame(rows, "rank int, left string, right string")
+    df = local_frame(spark, rows, "rank int, left string, right string")
     df.select(
         F.col("rank").alias("rank", metadata=meta), "left", "right"
     ).write.mode("overwrite").parquet(path)

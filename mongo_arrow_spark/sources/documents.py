@@ -70,12 +70,12 @@ from pyspark.sql import types as T
 
 from mongo_arrow_spark.bson_types import METADATA_KEY as _BSON_TYPE_KEY
 from mongo_arrow_spark.errors import SchemaError
+from mongo_arrow_spark.execution import WRITE_MAX_BYTES
 
 DEFAULT_PARTITION_BYTES = 64 * 1024 * 1024
 DEFAULT_BATCH_SIZE = 4096
 DEFAULT_SAMPLE_SIZE = 1000
 # reference write caps: 48 MB - 16 KB and 100k ops (api.py:91-95)
-WRITE_MAX_BYTES = 48 * 1024 * 1024 - 16 * 1024
 WRITE_MAX_DOCS = 100_000
 
 
@@ -1400,9 +1400,18 @@ class DocumentsWriter(DataSourceArrowWriter):
                 arr = batch.column(0)
                 if isinstance(arr, pa.ChunkedArray):  # pragma: no cover
                     arr = arr.combine_chunks()
-                # per-line byte length (+1 for the newline), from offsets
-                lens = pc.binary_length(arr.cast(pa.binary())).to_numpy() + 1
-                csum = np.cumsum(lens)
+                # every line with its newline, as one Arrow data buffer:
+                # a slice of lines is a slice of that buffer, cut at the
+                # value offsets — no Python string per document
+                if not len(arr):
+                    continue
+                lined = pc.binary_join_element_wise(arr, "\n", "")
+                _, off_buf, data = lined.buffers()
+                width = np.int64 if pa.types.is_large_string(lined.type) else np.int32
+                offs = np.frombuffer(off_buf, dtype=width)[
+                    lined.offset : lined.offset + len(lined) + 1
+                ]
+                csum = offs[1:] - offs[0]
                 start = 0
                 while start < len(arr):
                     base = csum[start - 1] if start else 0
@@ -1413,10 +1422,8 @@ class DocumentsWriter(DataSourceArrowWriter):
                     stop = min(max(stop, start + 1), start + self.max_docs, len(arr))
                     # pad to a fresh file when the current one can't take
                     # even one more doc of this run
-                    sl = arr.slice(start, stop - start)
-                    blen = int(csum[stop - 1] - base)
-                    chunk = ("\n".join(sl.to_pylist()) + "\n").encode("utf-8")
-                    emit(chunk, blen, stop - start)
+                    chunk = memoryview(data)[offs[start] : offs[stop]]
+                    emit(chunk, int(csum[stop - 1] - base), stop - start)
                     start = stop
             elif self.file_format == "bson":
                 # mongodump-format sink: length-prefixed BSON documents

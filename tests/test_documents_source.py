@@ -196,6 +196,50 @@ def test_write_preserialized_roll_caps(spark, tmp_path):
     assert back.agg(F.sum("i")).first()[0] == 2000 * 1999 // 2
 
 
+def test_write_preserialized_lines_bytes(tmp_path):
+    """The pre-serialized sink writes each slice of lines as one cut of
+    the Arrow data buffer: every part file holds exactly the bytes the
+    row-at-a-time ``"\\n".join(lines) + "\\n"`` encoding gave —
+    multibyte UTF-8, empty objects, and two batches whose slices cross
+    the maxBytes and maxDocs rolls (the line counts per file are the
+    ones that encoding wrote)."""
+    import pyarrow as pa
+
+    from mongo_arrow_spark.sources.documents import (
+        PRESERIALIZED_COL,
+        DocumentsWriter,
+    )
+
+    vals = [
+        json.dumps({"t": "é✓日本🎉" * (i % 4)}, ensure_ascii=False)
+        if i % 3
+        else "{}"
+        for i in range(40)
+    ]
+    arr = pa.array(vals, pa.string())
+    schema = T.StructType([T.StructField(PRESERIALIZED_COL, T.StringType())])
+    w = DocumentsWriter(
+        schema,
+        {"path": str(tmp_path), "preserialized": "true", "maxbytes": "120", "maxdocs": "6"},
+        False,
+    )
+    res = w.write(
+        iter(
+            pa.record_batch([arr.slice(a, b)], [PRESERIALIZED_COL])
+            for a, b in ((0, 17), (17, 23))
+        )
+    )
+    assert res.docs == 40
+    got = [open(f, "rb").read() for f in res.files]
+    counts = [6, 5, 3, 3, 5, 3, 6, 4, 3, 2]
+    assert [g.count(b"\n") for g in got] == counts
+    start = 0
+    for g, n in zip(got, counts):
+        assert g == ("\n".join(vals[start : start + n]) + "\n").encode("utf-8")
+        assert len(g) <= 120
+        start += n
+
+
 def test_write_exclude_none_strips_nulls_jvm_side(spark, tmp_path):
     from mongo_arrow_spark.api import write
 

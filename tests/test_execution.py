@@ -7,6 +7,7 @@ import os
 import re
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from conftest import REPO, cache_entries
 from mongo_arrow_spark import execution
@@ -33,6 +34,27 @@ def test_no_cross_module_private_imports():
                     for a in node.names
                     if a.name.startswith("_")
                 ]
+    assert not bad, bad
+
+
+def test_driver_tables_enter_through_local_frame():
+    """No operator module, and not ``api.py``, calls ``createDataFrame``
+    itself: a driver-held table enters a plan through
+    ``execution.local_frame``, an Arrow local relation, never a pickled
+    Python RDD that forks a Python worker per partition to read it."""
+    paths = [os.path.join(OPERATORS, f) for f in sorted(os.listdir(OPERATORS))]
+    paths.append(os.path.join(REPO, "mongo_arrow_spark", "api.py"))
+    bad = []
+    for path in paths:
+        if not path.endswith(".py"):
+            continue
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        bad += [
+            f"{os.path.basename(path)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute) and node.attr == "createDataFrame"
+        ]
     assert not bad, bad
 
 
@@ -96,6 +118,90 @@ def test_broadcast_budget_reads_spark_parsed_threshold(spark):
         assert execution.broadcast_budget(spark) == execution.BROADCAST_FLOOR_BYTES
     finally:
         spark.conf.set(key, prev)
+
+
+def test_local_frame_round_trips(spark):
+    """Rows with a DDL or StructType schema, pandas and Arrow inputs all
+    come back value for value — NULLs and empty inputs included — as a
+    LocalRelation, never a Python RDD."""
+    import pandas as pd
+    import pyarrow as pa
+
+    ddl = "i long, s string, a array<bigint>, d double"
+    rows = [
+        (1, "x", [1, 2], 0.5),
+        (None, None, None, None),
+        (-(2**62), "ü✓", [], float("inf")),
+    ]
+    schema = T.StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist([dict(zip("isad", r)) for r in rows])
+    pdf = pd.DataFrame({"i": [1, 2], "s": ["a", None], "d": [0.5, None]})
+    for data, sch, want in (
+        (rows, ddl, rows),
+        (rows, schema, rows),
+        ([], ddl, []),
+        (table, None, rows),
+        (pdf, None, [(1, "a", 0.5), (2, None, None)]),
+    ):
+        df = execution.local_frame(spark, data, sch)
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan
+        if sch is not None:
+            assert df.schema == schema
+        assert [tuple(r) for r in df.collect()] == want
+
+
+def _doc_io_frame(n=6000):
+    """The shape of the benchmark's import table: numeric, string,
+    timestamp, struct, list and raw 12-byte ObjectId columns."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(3)
+    return pd.DataFrame(
+        {
+            "id": np.arange(n, dtype=np.int64),
+            "qty": rng.integers(0, 1000, n).astype(np.int32),
+            "x": np.round(rng.random(n) * 1000.0, 6),
+            "name": ["name-%d" % v for v in rng.integers(0, n // 2, n)],
+            "ts": (1_700_000_000_000_000 + rng.integers(0, 10**13, n)).astype(
+                "datetime64[us]"
+            ),
+            "sub": [{"a": int(a), "b": "b%d" % (a % 11)} for a in range(n)],
+            "tags": [["t%d" % j for j in range(i % 4)] for i in range(n)],
+            "oid": [bytes(r) for r in rng.integers(0, 256, (n, 12), dtype=np.uint8)],
+        }
+    )
+
+
+def _parts(path, suffix):
+    return [f for f in os.listdir(path) if f.startswith("part-") and f.endswith(suffix)]
+
+
+def test_write_one_task_per_slice(spark, tmp_path, monkeypatch):
+    """A 6,000-row frame is far below one ``WRITE_MAX_BYTES`` slice, so
+    ``api.write`` runs one write task: one part file for ``documents``
+    and one for ``parquet``. With the slice cut to 64 KB the same frame
+    spreads over several tasks and part files, with the same rows."""
+    from mongo_arrow_spark import api
+    from mongo_arrow_spark.sources import register
+
+    register(spark)
+    pdf = _doc_io_frame()
+
+    def written(fmt, suffix):
+        out = str(tmp_path / f"{fmt}-{execution.WRITE_MAX_BYTES}")
+        assert api.write(pdf, out, format=fmt, spark=spark).inserted_count == len(pdf)
+        back = spark.read.format(fmt).load(out)
+        ids = sorted(r[0] for r in back.select("id").collect())
+        assert ids == list(range(len(pdf)))
+        return len(_parts(out, suffix))
+
+    assert written("documents", ".jsonl") == 1
+    assert written("parquet", ".parquet") == 1
+    monkeypatch.setattr(execution, "WRITE_MAX_BYTES", 64 * 1024)
+    assert written("documents", ".jsonl") > 1
+    assert written("parquet", ".parquet") > 1
 
 
 def _curate_inputs(spark):

@@ -109,7 +109,10 @@ def test_rowwise_probe_matches_agg_probe(docs, spark):
 def test_cc_local_fastpath_matches_distributed_loop(spark):
     """connected_components' size-gated union-find must produce exactly
     the distributed loop's (id, component) labels — including when the
-    input carries self-loop pairs (dropped on both paths)."""
+    input carries self-loop pairs (dropped on both paths), when the
+    threshold sits exactly at or one below the edge count, for string
+    ids, and for no pairs at all. The fast path's labels enter the plan
+    as an Arrow local relation, never a Python RDD."""
     import random as _random
 
     from mongo_arrow_spark.operators.dedup import connected_components
@@ -119,11 +122,32 @@ def test_cc_local_fastpath_matches_distributed_loop(spark):
     pairs = [(a, b) if a < b else (b, a) for a, b in pairs if a != b]
     pairs += [(42, 42), (9999, 9999)]  # self-loops: no connectivity info
     df = spark.createDataFrame(pairs, "id_a bigint, id_b bigint")
-    local = connected_components(df).collect()
+    local = connected_components(df)
+    plan = local._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan
+    local = local.collect()
     dist = connected_components(df, local_threshold=0).collect()
     assert sorted(map(tuple, local)) == sorted(map(tuple, dist))
     ids = {r["id"] for r in local}
     assert 9999 not in ids  # a vertex with only a self-loop is no pair
+
+    n_edges = len({p for p in pairs if p[0] != p[1]})
+    for thr in (n_edges, n_edges - 1):  # fast path, then the loop
+        got = connected_components(df, local_threshold=thr).collect()
+        assert sorted(map(tuple, got)) == sorted(map(tuple, dist))
+
+    named = spark.createDataFrame(
+        [(f"d{a:03d}", f"d{b:03d}") for a, b in pairs], "id_a string, id_b string"
+    )
+    s_local = connected_components(named).collect()
+    s_dist = connected_components(named, local_threshold=0).collect()
+    assert sorted(map(tuple, s_local)) == sorted(map(tuple, s_dist))
+    assert len(s_local) == len(local)
+
+    empty = df.limit(0)
+    for thr in (1_000_000, 0):
+        none = connected_components(empty, local_threshold=thr)
+        assert none.columns == ["id", "component"] and none.collect() == []
 
 
 def test_probe_and_verify_exact(docs, spark):
