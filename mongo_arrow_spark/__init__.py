@@ -20,7 +20,11 @@ This engine supplies the same surface natively on Spark:
   multimodal column plumbing.
 """
 
-from mongo_arrow_spark.errors import (
+from mongo_arrow_spark.execution import guard_zip_imports
+
+guard_zip_imports()
+
+from mongo_arrow_spark.errors import (  # noqa: E402
     MongoArrowSparkError,
     MQLTranslationError,
     SchemaError,

@@ -1,12 +1,15 @@
 """Execution policy: the runtime choices an operator makes about HOW its
 plan runs — fan-out (``spread``), prefix-sum partition count
 (``partition_count``), forced-broadcast budget (``broadcast_budget``),
-materialization (``materialize`` / ``scope``) and how a driver-held
-table enters a plan (``local_frame``) — kept in one place.
+materialization (``materialize`` / ``scope``), how a driver-held
+table enters a plan (``local_frame``) and what a Python worker's import
+cache refresh costs (``guard_zip_imports``) — kept in one place.
 """
 
 from __future__ import annotations
 
+import os
+import sys
 import threading
 from contextlib import contextmanager
 
@@ -151,3 +154,50 @@ def scope():
         stack.pop()
         for df in held:
             df.unpersist()
+
+
+def guard_zip_imports() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only when
+    its ``(st_ino, st_size, st_mtime_ns)`` differs from the stamp taken
+    at the importer's last read. Installed once per process by the
+    package import; a no-op on CPython >= 3.12, whose invalidation is
+    lazy (gh-103200).
+
+    Spark runs ``importlib.invalidate_caches()`` at the start of every
+    Python task and planner call (``worker_util.setup_spark_files``);
+    on 3.11 that re-parses the whole directory of ``pyspark.zip`` and
+    the py4j zip each time (~0.1 s). An archive rewritten on disk is
+    still re-read. Importers that exist at install time are stamped
+    then: in a worker the package is imported while deserializing a
+    task, just after that task's ``setup_spark_files`` re-read them."""
+    import zipimport
+
+    cls = zipimport.zipimporter
+    if sys.version_info >= (3, 12) or hasattr(cls, "_reread"):
+        return
+
+    def stamp(path):
+        try:
+            st = os.stat(path)
+        except OSError:
+            return None
+        return st.st_ino, st.st_size, st.st_mtime_ns
+
+    def __init__(self, path):
+        # stamped before the read; a directory from the cache, or one
+        # behind a path into the archive, was read at an unknown time
+        pre = None if path in zipimport._zip_directory_cache else stamp(path)
+        init(self, path)
+        self._stamp = pre if self.archive == path else None
+
+    def invalidate_caches(self):
+        now = stamp(self.archive)
+        if now is None or now != getattr(self, "_stamp", None):
+            cls._reread(self)
+            self._stamp = now
+
+    init, cls.__init__ = cls.__init__, __init__
+    cls._reread, cls.invalidate_caches = cls.invalidate_caches, invalidate_caches
+    for imp in list(sys.path_importer_cache.values()):
+        if isinstance(imp, cls):
+            imp._stamp = stamp(imp.archive)

@@ -59,6 +59,14 @@ def q_cdc_apply(spark, sf_dir):
     return apply_changes(old, ev, id_col="o_orderkey")
 
 
+def changelog_dir(spark, sf_dir):
+    """Where ``q_cdc_watch`` caches its change log: one directory per
+    corpus AND per Spark application, so two sessions that replay the
+    same corpus at once never overwrite each other's log."""
+    key = f"{sf_dir}\0{spark.sparkContext.applicationId}"
+    return f"/tmp/mas_changelog_{hashlib.md5(key.encode()).hexdigest()[:10]}"
+
+
 @query(
     "cdc_watch_stream",
     """
@@ -78,8 +86,7 @@ def q_cdc_watch(spark, sf_dir):
     from mongo_arrow_spark.sources import register
     from mongo_arrow_spark.streaming.changes import diff_snapshots, watch
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    d = f"/tmp/mas_changelog_{tag}"
+    d = changelog_dir(spark, sf_dir)
     marker = os.path.join(d, "_READY")
     if not os.path.exists(marker):
         register(spark)

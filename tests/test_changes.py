@@ -246,3 +246,22 @@ def test_maintain_snapshot_converges_to_new(spark, tables, change_log, tmp_path)
     exp = change_log["new"].withColumnRenamed("o_orderkey", "_id")
     assert got.exceptAll(exp).count() == 0
     assert exp.exceptAll(got).count() == 0
+
+
+def test_cdc_watch_changelog_dir_per_application():
+    """The battery's ``cdc_watch_stream`` caches its change log per corpus
+    and per Spark application: two sessions replaying the same corpus at
+    once get different directories (one shared path let them overwrite
+    each other's log), and one application keeps one directory."""
+    from types import SimpleNamespace
+
+    from mongo_arrow_spark.queries_cdc import changelog_dir
+
+    def session(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    sf = "/data/sf0.1"
+    a, b = changelog_dir(session("local-1"), sf), changelog_dir(session("local-2"), sf)
+    assert a != b
+    assert changelog_dir(session("local-1"), sf) == a
+    assert changelog_dir(session("local-1"), "/data/sf1") != a

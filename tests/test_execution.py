@@ -1,10 +1,16 @@
 """The execution-policy module: scoped materialization, the broadcast
-budget, and the rule that operator modules share helpers only through
-public names."""
+budget, the zip-import guard, and the rule that operator modules share
+helpers only through public names."""
 
 import ast
+import importlib
 import os
 import re
+import sys
+import zipfile
+import zipimport
+
+import pytest
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -258,3 +264,111 @@ def test_curate_second_call_hits_codegen_cache(spark):
             assert _rows(curate_mod.curate(corpus, holdout, jaccard_threshold=0.3))
         compiled.append(metrics.METRIC_COMPILATION_TIME().getCount() - before)
     assert compiled[1] <= 10, compiled
+
+
+@pytest.fixture
+def zip_reads(monkeypatch):
+    """The archives ``zipimport`` reads a directory of, in call order."""
+    reads = []
+    real = zipimport._read_directory
+
+    def counted(archive):
+        reads.append(archive)
+        return real(archive)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counted)
+    return reads
+
+
+def _write_zip(path, modules):
+    with zipfile.ZipFile(path, "w") as zf:
+        for name in modules:
+            zf.writestr(f"{name}.py", f"NAME = {name!r}\n")
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 12), reason="the guard is inert on 3.12+")
+def test_zip_guard_rereads_only_a_changed_archive(tmp_path, monkeypatch, zip_reads):
+    """With the guard (installed by the package import) an unchanged zip
+    on ``sys.path`` keeps its directory across ``invalidate_caches()``;
+    the same zip rewritten with one more module is read once, and that
+    module imports."""
+    archive = str(tmp_path / "guarded.zip")
+    _write_zip(archive, ["zg_first"])
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert importlib.import_module("zg_first").NAME == "zg_first"
+        del zip_reads[:]
+        importlib.invalidate_caches()
+        importlib.invalidate_caches()
+        assert archive not in zip_reads
+        _write_zip(archive, ["zg_first", "zg_second"])
+        importlib.invalidate_caches()
+        assert zip_reads.count(archive) == 1
+        assert importlib.import_module("zg_second").NAME == "zg_second"
+        importlib.invalidate_caches()
+        assert zip_reads.count(archive) == 1
+    finally:
+        sys.modules.pop("zg_first", None)
+        sys.modules.pop("zg_second", None)
+        sys.path_importer_cache.pop(archive, None)
+
+
+def test_zip_guard_leaves_lazy_zipimport_alone(monkeypatch):
+    """On CPython >= 3.12, whose invalidation is already lazy, the guard
+    does not touch ``zipimport``."""
+
+    class Importer:
+        def invalidate_caches(self):
+            pass
+
+    before = dict(vars(Importer))
+    monkeypatch.setattr(zipimport, "zipimporter", Importer)
+    monkeypatch.setattr(sys, "version_info", (3, 12, 0, "final", 0))
+    execution.guard_zip_imports()
+    assert dict(vars(Importer)) == before
+
+
+def test_reused_worker_keeps_pyspark_zip_directory(spark):
+    """A Python worker that ran engine code keeps the guard for its later
+    tasks: there ``importlib.invalidate_caches()`` — what Spark's
+    ``setup_spark_files`` runs at the start of every task — reads no
+    ``pyspark.zip`` directory, although the worker imports pyspark
+    from that zip. The first task of a fresh worker may pay."""
+    import pyarrow as pa
+
+    def probe(batches):
+        import mongo_arrow_spark  # noqa: F401  (the engine import installs the guard)
+
+        zips = [
+            imp for imp in sys.path_importer_cache.values()
+            if isinstance(imp, zipimport.zipimporter)
+            and imp.archive.endswith("pyspark.zip")
+        ]
+        reads = []
+        real = zipimport._read_directory
+        zipimport._read_directory = lambda a: reads.append(a) or real(a)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict(
+            {
+                "pid": [os.getpid()],
+                "zips": [len(zips)],
+                "reads": [sum(a.endswith("pyspark.zip") for a in reads)],
+            }
+        )
+
+    schema = "pid long, zips long, reads long"
+    seen, later = set(), []
+    for _ in range(24):
+        (pid, zips, reads), = spark.range(1, numPartitions=1).mapInArrow(probe, schema).collect()
+        assert zips > 0  # the worker imports pyspark from the zip
+        if pid in seen:
+            later.append(reads)
+        seen.add(pid)
+        if len(later) >= 2:
+            break
+    assert later and later == [0] * len(later), later
