@@ -406,7 +406,7 @@ _DEMOTED = [
     #                     strictly richer; the raw-score form parks
     "text_bigram_logprob",
     #   compressed ingest → the whole-file bin-packed gz scan machinery
-    #                     (_pack_files/_FilesSplit → Arrow batches) is
+    #                     (sources/files.py FilesSplit → Arrow batches) is
     #                     now graded by q_scan_warc/q_scan_warc_html
     #                     (same split machinery, richer framing); the
     #                     BSON-dump framing keeps its exact oracle in

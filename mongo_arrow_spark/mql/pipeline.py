@@ -569,7 +569,10 @@ def _lookup(df, args, resolve):
     if args.get("hint") == "broadcast":
         foreign = F.broadcast(foreign)
     pipeline = args.get("pipeline")
-    if pipeline is not None and "localField" not in args:
+    if pipeline is None or "localField" in args:
+        local_key = F.col(args["localField"])
+        foreign_field, rest = args["foreignField"], pipeline or []
+    else:
         let = args.get("let", {})
         eq = _correlated_eq(pipeline, let)
         if eq is None:
@@ -584,46 +587,32 @@ def _lookup(df, args, resolve):
             )
             return df.crossJoin(F.broadcast(arr))
         local_expr, foreign_field, rest = eq
-        main, suffix = _split_cardinality_suffix(rest)
-        sub = apply_pipeline(foreign, main, resolve) if main else foreign
-        if suffix and not _suffix_translatable(suffix, sub):
-            # untranslatable trailing stages (missing sort field, mixed
-            # directions on non-numeric keys): fold them back into the
-            # pre-join pipeline and surface the semantics gap
-            sub = apply_pipeline(sub, [dict([s]) for s in suffix], resolve)
-            _warn_global_cardinality([n for n, _ in suffix])
-            suffix = []
-        # mid-pipeline cardinality stages (a $limit BEFORE a $project,
-        # say) still run once globally — per MQL they'd run per outer
-        # document. Trailing runs are handled exactly below; only the
-        # buried ones are left to warn about.
-        risky = [
-            next(iter(s))
-            for s in main
-            if isinstance(s, dict)
-            and next(iter(s), None) in ("$limit", "$skip", "$sample")
-        ]
-        if risky:
-            _warn_global_cardinality(risky)
-        grouped = sub.groupBy(
-            F.col(foreign_field).alias("__lk")
-        ).agg(F.collect_list(F.struct(*sub.columns)).alias(as_field))
-        joined = df.join(
-            grouped, translate_expr(local_expr) == grouped["__lk"], "left"
-        ).drop("__lk")
-        arr = F.coalesce(F.col(as_field), F.array())
-        return joined.withColumn(as_field, _apply_array_suffix(arr, suffix))
-    local, foreign_field = args["localField"], args["foreignField"]
-    main, suffix = _split_cardinality_suffix(pipeline or [])
+        local_key = translate_expr(local_expr)
+    main, suffix = _split_cardinality_suffix(rest)
     sub = apply_pipeline(foreign, main, resolve) if main else foreign
     if suffix and not _suffix_translatable(suffix, sub):
+        # untranslatable trailing stages (missing sort field, mixed
+        # directions on non-numeric keys): fold them back into the
+        # pre-join pipeline and surface the semantics gap
         sub = apply_pipeline(sub, [dict([s]) for s in suffix], resolve)
         _warn_global_cardinality([n for n, _ in suffix])
         suffix = []
+    # mid-pipeline cardinality stages (a $limit BEFORE a $project, say)
+    # still run once globally — per MQL they'd run per outer document.
+    # Trailing runs are handled exactly below; only the buried ones are
+    # left to warn about.
+    risky = [
+        next(iter(s))
+        for s in main
+        if isinstance(s, dict)
+        and next(iter(s), None) in ("$limit", "$skip", "$sample")
+    ]
+    if risky:
+        _warn_global_cardinality(risky)
     grouped = sub.groupBy(F.col(foreign_field).alias("__lk")).agg(
         F.collect_list(F.struct(*sub.columns)).alias(as_field)
     )
-    joined = df.join(grouped, F.col(local) == grouped["__lk"], "left").drop("__lk")
+    joined = df.join(grouped, local_key == grouped["__lk"], "left").drop("__lk")
     arr = F.coalesce(F.col(as_field), F.array())
     return joined.withColumn(as_field, _apply_array_suffix(arr, suffix))
 

@@ -40,7 +40,6 @@ scan lever at 100 TB (a date-partitioned corpus filtered to one day reads
 
 from __future__ import annotations
 
-import glob as _glob
 import json
 import math
 import os
@@ -51,9 +50,6 @@ from typing import Iterator
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
-    DataSourceReader,
-    DataSourceStreamReader,
-    DataSourceWriter,
     EqualTo,
     Filter,
     GreaterThan,
@@ -71,9 +67,15 @@ from pyspark.sql import types as T
 from mongo_arrow_spark.bson_types import METADATA_KEY as _BSON_TYPE_KEY
 from mongo_arrow_spark.errors import SchemaError
 from mongo_arrow_spark.execution import WRITE_MAX_BYTES
+from mongo_arrow_spark.sources.files import (
+    FileReader,
+    FileStreamReader,
+    FilesSplit,
+    Split,
+    byte_ranges,
+    expand,
+)
 
-DEFAULT_PARTITION_BYTES = 64 * 1024 * 1024
-DEFAULT_BATCH_SIZE = 4096
 DEFAULT_SAMPLE_SIZE = 1000
 # reference write caps: 48 MB - 16 KB and 100k ops (api.py:91-95)
 WRITE_MAX_DOCS = 100_000
@@ -114,9 +116,13 @@ def _require_zstd(paths) -> None:
             "the corpus with compression=gzip (SCALE.md 'zstd frame-level "
             "splits')"
         )
-#: conservative decompressed-size multiplier used only for bin-packing
-#: balance (JSON/BSON text compresses ~3-6x under gzip)
-_EXPANSION_ESTIMATE = 4
+
+
+#: file names the source lists in a directory: .jsonl / .bson, plain or
+#: compressed
+_SUFFIXES = tuple(
+    f".{base}{c}" for base in ("jsonl", "bson") for c in ("",) + _COMPRESSION_SUFFIXES
+)
 
 
 def _is_compressed(path: str) -> bool:
@@ -432,8 +438,9 @@ def infer_schema(
         elif metas[k] and not isinstance(fields[k], (T.BinaryType, T.ArrayType)):
             metas[k] = {}  # type diverged from the tagged carrier: drop tag
 
+    listed = expand(paths, _SUFFIXES)
     seen = 0
-    for path in _expand(paths):
+    for path in listed:
         if _is_bson(path):
             try:
                 from bson import decode_file_iter
@@ -479,7 +486,7 @@ def infer_schema(
     # type (the partition value overrides it at read, like Spark)
     pobserved: dict[str, list] = {}
     hroots = [base_path] if base_path else _hive_roots(paths)
-    for path in _expand(paths):
+    for path in listed:
         for k, v in _hive_parts(path, _root_for(path, hroots)).items():
             pobserved.setdefault(k, []).append(v)
     for k, vals in pobserved.items():
@@ -499,33 +506,6 @@ def infer_schema(
             for k, v in fields.items()
         ]
     )
-
-
-def _expand(paths) -> list[str]:
-    if isinstance(paths, str):
-        paths = [paths]
-    out: list[str] = []
-    pats = ["*.jsonl", "*.bson"] + [
-        f"*.{base}{c}"
-        for base in ("jsonl", "bson")
-        for c in _COMPRESSION_SUFFIXES
-    ]
-    for p in paths:
-        if os.path.isdir(p):
-            # recursive: hive-partitioned layouts nest part files under
-            # col=value/ directories
-            out.extend(
-                sorted(
-                    f
-                    for pat in pats
-                    for f in _glob.glob(
-                        os.path.join(p, "**", pat), recursive=True
-                    )
-                )
-            )
-        else:
-            out.extend(sorted(_glob.glob(p)) or [p])
-    return out
 
 
 # -------------------------------------------------- extended JSON (v2)
@@ -901,116 +881,33 @@ _SUPPORTED_FILTERS = (
 )
 
 
-@dataclass
-class _Split(InputPartition):
-    path: str
-    start: int
-    end: int
+class DocumentsReader(FileReader):
+    suffixes = _SUFFIXES
 
-
-@dataclass
-class _FilesSplit(InputPartition):
-    """A group of whole files decoded serially by one task — the shape for
-    compressed inputs, which cannot be byte-split. Files are bin-packed
-    into these by estimated decompressed size so many small ``.gz`` parts
-    still yield balanced parallelism."""
-
-    paths: tuple
-
-
-def _adaptive_pack_target(total_est: int, partition_bytes: int) -> int:
-    """Bytes-per-core pack/split target — Spark's own maxSplitBytes
-    shape (min(maxPartitionBytes, max(floor, total/parallelism))): a
-    flat ``partitionBytes`` target packed a whole small corpus into ONE
-    group, serializing the decode on one core (r14). Capped by
-    ``partitionBytes``, so on a cluster — where totals dwarf the cap —
-    this is exactly the old behavior; the 1 MB floor is the open-cost
-    analog that keeps a tiny corpus from shattering into per-file
-    confetti."""
-    try:
-        from pyspark import SparkContext
-
-        sc = SparkContext._active_spark_context
-        par = sc.defaultParallelism if sc is not None else None
-    except Exception:  # pragma: no cover - planning outside a JVM driver
-        par = None
-    if not par:
-        # Python DataSource planning can run in a worker with no
-        # gateway; the driver host's core count is the honest fallback
-        par = os.cpu_count() or 8
-    floor = 1 << 20
-    return max(1, min(partition_bytes, max(floor, -(-total_est // par))))
-
-
-def _pack_files(sized: list, target: int) -> list:
-    """First-fit-decreasing bin packing of (path, est_bytes) into groups
-    whose estimated total ≤ target (oversized files go alone)."""
-    bins: list[list] = []  # each: [paths, running_total]
-    for path, est in sorted(sized, key=lambda t: -t[1]):
-        for b in bins:
-            if b[1] + est <= target:
-                b[0].append(path)
-                b[1] += est
-                break
-        else:
-            bins.append([[path], est])
-    return [b[0] for b in bins]
-
-
-class DocumentsReader(DataSourceReader):
     def __init__(self, schema: T.StructType, options):
-        self.schema = schema
-        self.options = options
-        self.paths = _expand(options.get("path"))
+        super().__init__(schema, options)
         base = options.get("basepath")
         self.hive_roots = [base] if base else _hive_roots(options.get("path"))
         self.strict = str(options.get("mode", "PERMISSIVE")).upper() == "FAILFAST"
-        self.partition_bytes = int(
-            options.get("partitionbytes", DEFAULT_PARTITION_BYTES)
-        )
-        self.batch_size = int(options.get("batchsize", DEFAULT_BATCH_SIZE))
-        # corrupt-record policy for undecodable bytes / malformed JSON
-        # lines: "fail" (default — raise with file+offset context, the
-        # reference's truncated-stream behavior, test_bson.py:83-99) or
-        # "drop" (Spark JSON DROPMALFORMED analog — at corpus scale a few
-        # mangled lines must not kill a 10-hour job)
-        self.corrupt_mode = str(options.get("corruptmode", "fail")).lower()
-        if self.corrupt_mode not in ("fail", "drop"):
-            raise SchemaError(
-                f"corruptMode must be 'fail' or 'drop', got {self.corrupt_mode!r}"
-            )
         self.filters: list[Filter] = []
 
     def partitions(self):
         _require_zstd(self.paths)
-        splits: list[InputPartition] = []
-        compressed: list[tuple[str, int]] = []
-        for path in self.paths:
-            size = os.path.getsize(path)
-            if _is_compressed(path):
-                # not byte-splittable: decode whole, bin-pack for balance
-                compressed.append((path, size * _EXPANSION_ESTIMATE))
-                continue
-            if path.endswith(".bson"):
-                splits.append(_Split(path, 0, size))  # length-prefixed: no byte splits
-                continue
-            n = max(1, math.ceil(size / self.partition_bytes))
-            step = math.ceil(size / n) if size else 1
-            for i in range(n):
-                splits.append(_Split(path, i * step, min(size, (i + 1) * step)))
-        pack_target = _adaptive_pack_target(
-            sum(est for _, est in compressed), self.partition_bytes
-        )
-        for group in _pack_files(compressed, pack_target):
-            splits.append(_FilesSplit(tuple(group)))
-        return splits or [_Split("", 0, 0)]
+        return super().partitions()
+
+    def _ranges(self, path: str, size: int) -> int:
+        if _is_compressed(path):
+            return 0  # not byte-splittable: decode whole, bin-pack for balance
+        if path.endswith(".bson"):
+            return 1  # length-prefixed: no byte splits
+        return byte_ranges(size, self.partition_bytes)
 
     def read(self, part) -> Iterator:
         import pyarrow as pa
 
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        if isinstance(part, _Split) and not part.path:
+        if isinstance(part, Split) and not part.path:
             return
         arrow_schema = to_arrow_schema(self.schema)
         pred = _filter_fn(self.filters, self.schema)
@@ -1053,8 +950,8 @@ class DocumentsReader(DataSourceReader):
 
     def _docs_with_pvals(self, part) -> Iterator[tuple]:
         """(doc, partition-values) pairs for one split — pvals resolved
-        per FILE, since bin-packed _FilesSplit groups may span dirs."""
-        if isinstance(part, _FilesSplit):
+        per FILE, since bin-packed FilesSplit groups may span dirs."""
+        if isinstance(part, FilesSplit):
             for path in part.paths:
                 pv = self._pvals_for(path)
                 for doc in self._whole_file_docs(path):
@@ -1064,13 +961,9 @@ class DocumentsReader(DataSourceReader):
         for doc in self._raw_docs(part):
             yield doc, pv
 
-    def _raw_docs(self, part) -> Iterator[dict]:
+    def _raw_docs(self, part: Split) -> Iterator[dict]:
         """Raw document stream for one split, before filter/coerce."""
-        if isinstance(part, _FilesSplit):
-            for path in part.paths:
-                yield from self._whole_file_docs(path)
-            return
-        if _is_bson(part.path) or _is_compressed(part.path):
+        if _is_bson(part.path):
             yield from self._whole_file_docs(part.path)
             return
         # plain .jsonl byte-range. Binary mode: a byte-offset seek on a
@@ -1199,13 +1092,13 @@ class DocumentsPushdownReader(DocumentsReader):
 
         out: list[InputPartition] = []
         for s in splits:
-            if isinstance(s, _FilesSplit):
+            if isinstance(s, FilesSplit):
                 kept = tuple(p for p in s.paths if keep(p))
                 if kept:
-                    out.append(_FilesSplit(kept))
+                    out.append(FilesSplit(kept))
             elif keep(s.path):
                 out.append(s)
-        return out or [_Split("", 0, 0)]
+        return out or [Split("", 0, 0)]
 
 
 def _to_batch(pa, arrow_schema, cols):
@@ -1515,102 +1408,11 @@ def _ext_json_default(v):
     raise TypeError(f"unserializable {type(v)}")
 
 
-class DocumentsStreamReader(DataSourceStreamReader):
-    """Change-stream-shaped streaming source over a growing directory of
-    JSON-lines files (the streaming capability the reference lacks — it is
-    batch-only, SURVEY 2.E 'streaming' row).
+class DocumentsStreamReader(FileStreamReader):
+    """``spark.readStream.format("documents")`` over a drop directory
+    (see :class:`~mongo_arrow_spark.sources.files.FileStreamReader`)."""
 
-    Offsets carry the SET of seen file names (not positions in a sorted
-    listing): a late-arriving file whose name sorts before already
-    committed ones would shift positional indexes and make the next
-    microbatch skip or re-read files. With name sets, each microbatch
-    processes exactly ``end.seen − start.seen`` — replayable and
-    exactly-once on retry (same offset pair → same files), regardless of
-    arrival order. This mirrors Spark's own FileStreamSource, which also
-    tracks a seen-files map; offset size grows with file count, which the
-    checkpoint log compacts. One partition per new file keeps microbatch
-    parallelism = arrival rate.
-    """
-
-    def __init__(self, schema: T.StructType, options):
-        self.schema = schema
-        self.options = options
-        self.dir = options.get("path")
-        self.strict = str(options.get("mode", "PERMISSIVE")).upper() == "FAILFAST"
-        self.batch_size = int(options.get("batchsize", DEFAULT_BATCH_SIZE))
-
-    def _listing(self) -> list[str]:
-        # recursive: arrivals may land in hive col=value/ partition dirs
-        pats = [
-            f"*.{base}{c}"
-            for base in ("jsonl", "bson")
-            for c in ("",) + _COMPRESSION_SUFFIXES
-        ]
-        return sorted(
-            f
-            for pat in pats
-            for f in _glob.glob(
-                os.path.join(self.dir, "**", pat), recursive=True
-            )
-        )
-
-    def initialOffset(self):
-        return {"seen": []}
-
-    def latestOffset(self):
-        # offsets key on RELATIVE paths (not basenames): partition dirs
-        # may hold same-named part files in different subdirectories
-        return {
-            "seen": [os.path.relpath(f, self.dir) for f in self._listing()]
-        }
-
-    def partitions(self, start, end):
-        start_seen = start.get("seen")
-        if start_seen is None and "index" in start:
-            # legacy {"index": N} offsets (pre-r6 format): translate as
-            # the first N names of the sorted listing so an existing
-            # checkpoint upgrades without reprocessing every committed
-            # file once (exactly-once across the format change; the old
-            # format already assumed append-only sorted arrivals)
-            listing = [
-                os.path.relpath(f, self.dir) for f in self._listing()
-            ]
-            n = int(start["index"])
-            if len(listing) < n:
-                # the historical prefix is gone (committed files deleted
-                # or renamed since the checkpoint): a silent prefix map
-                # would re-process or skip records — fail loudly so the
-                # operator repairs the checkpoint or the directory
-                raise ValueError(
-                    f"legacy streaming offset index={n} exceeds the "
-                    f"current listing ({len(listing)} files) of "
-                    f"{self.dir}: committed files were deleted or "
-                    "renamed since the checkpoint, so the prefix "
-                    "translation is ambiguous. Restore the files or "
-                    "reset the checkpoint."
-                )
-            import warnings
-
-            warnings.warn(
-                f"translating legacy streaming offset index={n} as the "
-                f"first {n} names of the CURRENT sorted listing of "
-                f"{self.dir}; this is only exactly-once if no committed "
-                "file was deleted or renamed since the checkpoint"
-            )
-            start_seen = listing[:n]
-        new = sorted(set(end.get("seen", ())) - set(start_seen or ()))
-        files = [os.path.join(self.dir, name) for name in new]
-        _require_zstd(files)
-        return [
-            _Split(path, 0, os.path.getsize(path)) for path in files
-        ] or [_Split("", 0, 0)]
-
-    def read(self, part: _Split) -> Iterator:
-        reader = DocumentsReader(self.schema, self.options)
-        yield from reader.read(part)
-
-    def commit(self, end):
-        pass
+    batch_reader = DocumentsReader
 
 
 _DDL_TYPES = {
@@ -1687,8 +1489,12 @@ def _parse_ddl(ddl: str) -> T.StructType:
 
 class DocumentsDataSource(DataSource):
     """``spark.read.format("documents")`` — register with
-    :func:`register`. Options: path, mode=PERMISSIVE|FAILFAST,
-    sampleSize, partitionBytes, batchSize; writer adds excludeNone,
+    :func:`register`. Options: path, basePath, mode=PERMISSIVE|FAILFAST,
+    corruptMode=fail|drop, pushdown, declaredSchema, sampleSize,
+    partitionBytes, batchSize; ``readStream`` adds stableFileMs (admit a
+    drop-directory file once its mtime is ≥ N ms old or its size/mtime
+    held still across two listings; default 0, the atomic-rename
+    contract); writer adds excludeNone,
     maxBytes, maxDocs, fileFormat=jsonl|bson, compression=none|gzip|
     bz2|xz, extendedJson=true|false. Inputs may be ``.jsonl`` /
     ``.bson``, optionally suffixed ``.gz`` / ``.bz2`` / ``.xz``

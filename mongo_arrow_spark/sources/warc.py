@@ -24,8 +24,9 @@ materialize as Python row objects.
 
 Reference parity note: the reference's connector role is a byte-stream
 → Arrow decoder for BSON dumps (lib.pyx); this is the same role for
-the crawl-archive format, built on the identical split/bin-pack/Arrow
-machinery.
+the crawl-archive format. Listing, split planning, bin-packing and the
+drop-directory stream reader are the file layer both sources share
+(``files.py``); this module is the WARC decoder and its split rule.
 
 Reader options:
 
@@ -59,10 +60,11 @@ Reader options:
   ingest case) sets true. Truncated/undecodable bodies follow
   ``corruptMode`` (fail raises with file+offset; drop skips that
   record only).
-- ``stableFileMs`` — (streaming only) admit a drop-directory archive
-  once its mtime is ≥ N ms old or its size/mtime held still across two
-  listings. Default 0: producers write to a temp name and atomically
-  rename in (Spark's own file-source contract).
+- ``stableFileMs`` — (streaming only; the documents stream honors it
+  too) admit a drop-directory archive once its mtime is ≥ N ms old or
+  its size/mtime held still across two listings. Default 0: producers
+  write to a temp name and atomically rename in (Spark's own
+  file-source contract).
 - ``useIndex`` — consult ``<archive>.cdxj`` sidecar indexes (written
   by ``write_warc(index=True)``: one JSON line per record with its
   exact raw offset, CDX-style) to position each split directly on its
@@ -75,26 +77,19 @@ from __future__ import annotations
 
 import gzip
 import os
-import time
 import zlib
 from typing import Iterator
 
 from pyspark.sql import types as T
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource
 
 from mongo_arrow_spark.errors import SchemaError
-from mongo_arrow_spark.sources.documents import (
-    DEFAULT_BATCH_SIZE,
-    DEFAULT_PARTITION_BYTES,
-    _adaptive_pack_target,
-    _EXPANSION_ESTIMATE,
-    _FilesSplit,
-    _pack_files,
-    _Split,
+from mongo_arrow_spark.sources.files import (
+    FileReader,
+    FileStreamReader,
+    FilesSplit,
+    Split,
+    byte_ranges,
 )
 
 __all__ = [
@@ -132,36 +127,6 @@ WARC_SCHEMA = T.StructType(
         T.StructField("source_offset", T.LongType()),
     ]
 )
-
-def _expand_warc(paths) -> list[str]:
-    """Glob/directory expansion for warc inputs (the documents
-    source's ``_expand`` only knows jsonl/bson patterns — reusing it
-    here made ``.load(archive_dir)`` silently read as empty)."""
-    import glob as _glob
-
-    if isinstance(paths, str):
-        paths = [paths]
-    out: list[str] = []
-    for p in paths or []:
-        if os.path.isdir(p):
-            out.extend(
-                sorted(
-                    f
-                    for pat in (
-                        "*.warc",
-                        "*.warc.gz",
-                        "*.warc.wet",
-                        "*.warc.wet.gz",
-                    )
-                    for f in _glob.glob(
-                        os.path.join(p, "**", pat), recursive=True
-                    )
-                )
-            )
-        else:
-            out.extend(sorted(_glob.glob(p)) or [p])
-    return out
-
 
 class WarcCorruptError(SchemaError):
     pass
@@ -815,14 +780,11 @@ def _is_gz(path: str) -> bool:
     return path.endswith(".gz")
 
 
-class WarcReader(DataSourceReader):
+class WarcReader(FileReader):
+    suffixes = (".warc", ".warc.gz", ".warc.wet", ".warc.wet.gz")
+
     def __init__(self, schema: T.StructType, options):
-        self.schema = schema
-        self.paths = _expand_warc(options.get("path"))
-        self.partition_bytes = int(
-            options.get("partitionbytes", DEFAULT_PARTITION_BYTES)
-        )
-        self.batch_size = int(options.get("batchsize", DEFAULT_BATCH_SIZE))
+        super().__init__(schema, options)
         self.strip_http = str(options.get("striphttp", "true")).lower() == "true"
         self.split_gz = str(options.get("splitgz", "true")).lower() == "true"
         # Was splitGz set by the USER (vs defaulted)? The documented
@@ -847,12 +809,6 @@ class WarcReader(DataSourceReader):
             str(options.get("decodecontentencoding", "false")).lower()
             == "true"
         )
-        self.corrupt_mode = str(options.get("corruptmode", "fail")).lower()
-        if self.corrupt_mode not in ("fail", "drop"):
-            raise SchemaError(
-                f"corruptMode must be 'fail' or 'drop', got "
-                f"{self.corrupt_mode!r}"
-            )
         types = str(options.get("warctypes", "response"))
         self.warc_types = (
             None
@@ -860,15 +816,11 @@ class WarcReader(DataSourceReader):
             else {t.strip().lower() for t in types.split(",") if t.strip()}
         )
 
-    def partitions(self):
-        splits = []
-        gz: list[tuple[str, int]] = []
-        for path in self.paths:
-            size = os.path.getsize(path)
+    def _ranges(self, path: str, size: int) -> int:
+        if _is_gz(path):
             split_this = self.split_gz
             if (
-                _is_gz(path)
-                and split_this
+                split_this
                 and not self.split_gz_explicit
                 and self.corrupt_mode == "drop"
                 and not os.path.exists(_index_path(path))
@@ -878,36 +830,24 @@ class WarcReader(DataSourceReader):
                 # (existence only here; the owning TASK validates the
                 # index chain, never the driver)
                 split_this = False
-            if _is_gz(path) and (
-                size <= self.partition_bytes or not split_this
-            ):
+            if size <= self.partition_bytes or not split_this:
                 # small archives (or splitGz=false): whole-file decode,
                 # bin-packed into balanced groups by estimated
                 # decompressed size
-                gz.append((path, size * _EXPANSION_ESTIMATE))
-                continue
-            # plain .warc AND large .warc.gz byte-split into ranges: a
-            # 1 GB Common Crawl archive (per-record gzip members)
-            # parallelizes WITHIN the file — each task seeks to the
-            # first validated boundary (record marker / member magic)
-            # at/after its range start and owns what STARTS inside it.
-            # A single-member gz (no boundaries to find) degrades to
-            # one productive task, same as the whole-file path.
-            n = max(1, -(-size // self.partition_bytes))
-            step = -(-size // n) if size else 1
-            for i in range(n):
-                splits.append(_Split(path, i * step, min(size, (i + 1) * step)))
-        pack_target = _adaptive_pack_target(
-            sum(est for _, est in gz), self.partition_bytes
-        )
-        for group in _pack_files(gz, pack_target):
-            splits.append(_FilesSplit(tuple(group)))
-        return splits or [_Split("", 0, 0)]
+                return 0
+        # plain .warc AND large .warc.gz byte-split into ranges: a 1 GB
+        # Common Crawl archive (per-record gzip members) parallelizes
+        # WITHIN the file — each task seeks to the first validated
+        # boundary (record marker / member magic) at/after its range
+        # start and owns what STARTS inside it. A single-member gz (no
+        # boundaries to find) degrades to one productive task, same as
+        # the whole-file path.
+        return byte_ranges(size, self.partition_bytes)
 
     def read(self, part) -> Iterator:
         import pyarrow as pa
 
-        if isinstance(part, _Split) and not part.path:
+        if isinstance(part, Split) and not part.path:
             return
         names = [f.name for f in WARC_SCHEMA.fields]
         atypes = [
@@ -980,7 +920,7 @@ class WarcReader(DataSourceReader):
         split. Plain files seek to their validated range start;
         byte-split gz yields one stream per OWNED member; small gz
         files decode whole-file."""
-        if isinstance(part, _FilesSplit):
+        if isinstance(part, FilesSplit):
             for path in part.paths:
                 # base=None: record offsets are the decompressed stream
                 # positions _iter_records reports
@@ -1074,113 +1014,11 @@ class WarcReader(DataSourceReader):
                     )
 
 
-class WarcStreamReader(DataSourceStreamReader):
-    """Streaming WARC ingest: ``spark.readStream.format("warc")`` over
-    an archive DROP DIRECTORY — each newly arrived ``.warc[.gz]`` file
-    becomes (part of) a microbatch, so ``curate_stream``/``ingest_gate``
-    run directly off the crawler's output directory.
+class WarcStreamReader(FileStreamReader):
+    """``spark.readStream.format("warc")`` over an archive drop
+    directory (see :class:`~mongo_arrow_spark.sources.files.FileStreamReader`)."""
 
-    Offset discipline is the documents stream reader's seen-file-set
-    (documents.py): offsets carry the SET of relative file names, so a
-    late-arriving archive whose name sorts early cannot shift positional
-    indexes — each microbatch processes exactly ``end.seen − start.seen``,
-    replayable and exactly-once on retry. Within a microbatch, new
-    archives go through the SAME split planning as the batch reader
-    (byte-split large files at validated boundaries, bin-pack small gz),
-    so one huge arrival still parallelizes."""
-
-    def __init__(self, schema: T.StructType, options):
-        self.schema = schema
-        self.options = options
-        self.dir = options.get("path")
-        # admission contract: by default producers MUST write to a temp
-        # name and atomically rename into the drop directory (Spark's
-        # own FileStreamSource discipline) — a half-written file that is
-        # listed gets ingested ONCE, truncated, and the seen-file-set
-        # offset model never revisits it. For producers that can't
-        # rename atomically, stableFileMs=N admits a file only once its
-        # mtime is ≥ N ms old OR its (size, mtime) pair is unchanged
-        # since a previous listing (r11 ADVICE fix). Residual caveat:
-        # the offsets API gives latestOffset no view of the restored
-        # checkpoint, so a checkpointed file that is UNSTABLE at the
-        # exact first post-restart listing emits one regressed offset
-        # and re-ingests once when it stabilizes — the window is one
-        # microbatch and only for files touched within stableFileMs of
-        # a driver restart; atomic-rename producers (the default
-        # contract) are unaffected.
-        self.stable_ms = int(options.get("stablefilems", 0))
-        self._last_stat: dict[str, tuple[int, float]] = {}
-        # Offsets must be MONOTONE: once a name has been emitted in an
-        # offset (hence possibly ingested), it must never leave — a
-        # file appended/touched after ingest goes unstable, and if it
-        # dropped out of `seen` it would re-enter once stable, making
-        # partitions(start, end)'s set difference re-ingest the whole
-        # file (duplicate records; r12 ADVICE fix). Seeded from offset
-        # payloads in partitions() so a restarted driver (fresh
-        # in-memory set) inherits everything the checkpoint admitted.
-        self._admitted: set[str] = set()
-
-    def _listing(self) -> list[str]:
-        return _expand_warc(self.dir)
-
-    def _bare_reader(self) -> "WarcReader":
-        """A WarcReader with the ``path`` option stripped: the batch
-        reader's __init__ would otherwise re-glob the WHOLE drop
-        directory (driver: before its paths are overwritten; executor:
-        once per partition per microbatch, pure waste on a directory
-        that has accumulated 100k archives — r11 review fix)."""
-        opts = {
-            k: v for k, v in dict(self.options).items() if k != "path"
-        }
-        return WarcReader(self.schema, opts)
-
-    def initialOffset(self):
-        return {"seen": []}
-
-    def latestOffset(self):
-        if self.stable_ms <= 0:
-            return {
-                "seen": [
-                    os.path.relpath(f, self.dir) for f in self._listing()
-                ]
-            }
-        now = time.time()
-        stable: set[str] = set()
-        cur: dict[str, tuple[int, float]] = {}
-        for f in self._listing():
-            rel = os.path.relpath(f, self.dir)
-            try:
-                st = os.stat(f)
-            except OSError:
-                continue  # vanished between listing and stat
-            cur[rel] = (st.st_size, st.st_mtime)
-            if (now - st.st_mtime) * 1000.0 >= self.stable_ms or (
-                self._last_stat.get(rel) == cur[rel]
-            ):
-                stable.add(rel)
-        self._last_stat = cur
-        # monotone union: a name never leaves the offset once admitted
-        self._admitted |= stable
-        return {"seen": sorted(self._admitted)}
-
-    def partitions(self, start, end):
-        # seed the monotone set from the checkpointed offsets too — a
-        # restarted driver starts with an empty in-memory _admitted,
-        # and without this a file ingested before the restart that is
-        # mid-append at restart time would drop out of the next offset
-        # and be re-ingested when it stabilizes
-        self._admitted |= set(start.get("seen", ()))
-        self._admitted |= set(end.get("seen", ()))
-        new = sorted(set(end.get("seen", ())) - set(start.get("seen", ())))
-        reader = self._bare_reader()
-        reader.paths = [os.path.join(self.dir, name) for name in new]
-        return reader.partitions()
-
-    def read(self, part) -> Iterator:
-        yield from self._bare_reader().read(part)
-
-    def commit(self, end):
-        pass
+    batch_reader = WarcReader
 
 
 class WarcDataSource(DataSource):
@@ -1208,7 +1046,8 @@ def register_warc(spark) -> None:
 def read_warc_stream(spark, path: str, **options):
     """``readStream`` over a WARC drop directory (see
     :class:`WarcStreamReader`). Options are the batch reader's
-    (``warcTypes``/``stripHttp``/``corruptMode``/``partitionBytes``)."""
+    (``warcTypes``/``stripHttp``/``corruptMode``/``partitionBytes``),
+    plus ``stableFileMs``."""
     register_warc(spark)
     reader = spark.readStream.format("warc").option("path", path)
     for k, v in options.items():

@@ -453,33 +453,6 @@ def test_probe_bloom_non_string_and_null_keys(spark):
     assert got[None] is True  # NULL was inserted on the build side
 
 
-def test_stream_offsets_survive_late_sorting_file(tmp_path):
-    """Name-set offsets: a file that sorts BEFORE already-committed ones
-    must be picked up as new, and committed files must not be re-read
-    (positional offsets skipped/re-read on re-sorted listings)."""
-    from pyspark.sql import types as T
-
-    from mongo_arrow_spark.sources.documents import DocumentsStreamReader
-
-    d = tmp_path / "stream"
-    d.mkdir()
-    (d / "m.jsonl").write_text('{"k": 1}\n')
-    schema = T.StructType([T.StructField("k", T.LongType())])
-    reader = DocumentsStreamReader(schema, {"path": str(d)})
-    start = reader.initialOffset()
-    mid = reader.latestOffset()
-    first = [p.path for p in reader.partitions(start, mid)]
-    assert [os.path.basename(p) for p in first] == ["m.jsonl"]
-    # late-arriving file that sorts before m.jsonl
-    (d / "a.jsonl").write_text('{"k": 2}\n')
-    end = reader.latestOffset()
-    second = [p.path for p in reader.partitions(mid, end)]
-    assert [os.path.basename(p) for p in second] == ["a.jsonl"]
-    # replay of the first range is unchanged by the new arrival
-    replay = [p.path for p in reader.partitions(start, mid)]
-    assert replay == first
-
-
 # ------------------------------------------------------- r7 advisor fixes
 
 
@@ -494,9 +467,10 @@ def test_zst_listed_and_fails_loudly_without_wheel(spark, tmp_path):
     with open(d / "a.jsonl", "w") as fh:
         fh.write(json.dumps({"i": 1}) + "\n")
     (d / "b.jsonl.zst").write_bytes(b"\x28\xb5\x2f\xfd")  # zstd magic
-    from mongo_arrow_spark.sources.documents import _HAS_ZSTD, _expand
+    from mongo_arrow_spark.sources.documents import _HAS_ZSTD, DocumentsReader
+    from mongo_arrow_spark.sources.files import expand
 
-    listed = _expand(str(d))
+    listed = expand(str(d), DocumentsReader.suffixes)
     assert any(p.endswith(".zst") for p in listed)  # never omitted
     if not _HAS_ZSTD:
         register(spark)
@@ -523,75 +497,6 @@ def test_hive_parts_relative_to_base_path(spark, tmp_path):
     assert "exp" not in df.columns
     row = df.collect()[0]
     assert row["year"] == 2024 and row["i"] == 1
-
-
-def test_stream_offset_legacy_index_migration(tmp_path):
-    """A pre-r6 {"index": N} checkpoint offset translates to the first N
-    names of the sorted listing — committed files are NOT reprocessed
-    across the offset-format upgrade."""
-    from pyspark.sql import types as T
-
-    from mongo_arrow_spark.sources.documents import DocumentsStreamReader
-
-    d = tmp_path / "arrivals"
-    d.mkdir()
-    for name in ("0001.jsonl", "0002.jsonl"):
-        with open(d / name, "w") as fh:
-            fh.write(json.dumps({"i": int(name[:4])}) + "\n")
-    reader = DocumentsStreamReader(
-        T.StructType([T.StructField("i", T.LongType())]), {"path": str(d)}
-    )
-    end = reader.latestOffset()
-    parts = reader.partitions({"index": 1}, end)
-    paths = [p.path for p in parts if p.path]
-    assert paths == [str(d / "0002.jsonl")]  # only the uncommitted file
-    # and a fully-caught-up legacy offset yields no work
-    parts2 = reader.partitions({"index": 2}, end)
-    assert [p.path for p in parts2 if p.path] == []
-
-
-def test_stream_offset_legacy_index_too_short_fails_loudly(tmp_path):
-    """r8 ADVICE fix: if committed files were deleted/renamed since a
-    pre-r6 {"index": N} checkpoint, the prefix translation is ambiguous
-    — fail loudly instead of silently re-processing/skipping records."""
-    from pyspark.sql import types as T
-
-    from mongo_arrow_spark.sources.documents import DocumentsStreamReader
-
-    d = tmp_path / "arrivals"
-    d.mkdir()
-    with open(d / "0002.jsonl", "w") as fh:
-        fh.write(json.dumps({"i": 2}) + "\n")
-    reader = DocumentsStreamReader(
-        T.StructType([T.StructField("i", T.LongType())]), {"path": str(d)}
-    )
-    end = reader.latestOffset()
-    with pytest.raises(ValueError, match="legacy streaming offset"):
-        reader.partitions({"index": 2}, end)  # checkpoint saw 2 files
-
-
-def test_stream_offset_legacy_index_translation_warns(tmp_path):
-    """The successful legacy translation announces its assumption."""
-    import warnings as w
-
-    from pyspark.sql import types as T
-
-    from mongo_arrow_spark.sources.documents import DocumentsStreamReader
-
-    d = tmp_path / "arrivals"
-    d.mkdir()
-    for name in ("0001.jsonl", "0002.jsonl"):
-        with open(d / name, "w") as fh:
-            fh.write(json.dumps({"i": int(name[:4])}) + "\n")
-    reader = DocumentsStreamReader(
-        T.StructType([T.StructField("i", T.LongType())]), {"path": str(d)}
-    )
-    end = reader.latestOffset()
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        parts = reader.partitions({"index": 1}, end)
-    assert any("legacy streaming offset" in str(x.message) for x in caught)
-    assert [p.path for p in parts if p.path] == [str(d / "0002.jsonl")]
 
 
 def test_canonical_survivors_no_forced_broadcast(spark):
@@ -717,89 +622,6 @@ def test_hits_renorm_overflow_guard(spark):
 
 
 # ------------------------------------------------------- r12 advisor fixes
-
-
-def test_stream_stable_offset_monotone(tmp_path):
-    """r12 ADVICE fix (medium): with stableFileMs>0 the offset is
-    MONOTONE — a file already admitted (hence possibly ingested) that
-    is later appended/touched must NOT drop out of `seen` while
-    unstable, or its re-entry once stable would make
-    partitions(start, end)'s set difference re-ingest the whole file
-    (duplicate records)."""
-    import time as _t
-
-    from mongo_arrow_spark.sources.warc import (
-        WARC_SCHEMA,
-        WarcStreamReader,
-        build_warc_record,
-    )
-
-    d = tmp_path / "drop"
-    d.mkdir()
-    f = d / "a.warc"
-    f.write_bytes(build_warc_record("<urn:mas:m1>", "https://x/1", b"b1"))
-
-    rdr = WarcStreamReader(
-        WARC_SCHEMA, {"path": str(d), "stablefilems": "60000"}
-    )
-    start = rdr.initialOffset()
-    rdr.latestOffset()  # first sight: held back
-    mid = rdr.latestOffset()  # stat held still -> admitted
-    assert mid["seen"] == ["a.warc"]
-    assert len(rdr.partitions(start, mid)) >= 1  # ingested once
-    # producer appends to the already-ingested file -> stat changes, the
-    # file is momentarily unstable — but it must STAY in the offset
-    _t.sleep(0.02)
-    with open(f, "ab") as fh:
-        fh.write(build_warc_record("<urn:mas:m2>", "https://x/2", b"b2"))
-    end = rdr.latestOffset()
-    assert "a.warc" in end["seen"], "admitted file dropped out of offset"
-    # and the set difference re-ingests nothing (only the empty
-    # placeholder split Spark requires)
-    assert [p.path for p in rdr.partitions(mid, end) if p.path] == []
-    # once stable again it still re-enters nothing new
-    end2 = rdr.latestOffset()
-    assert "a.warc" in end2["seen"]
-    assert [p.path for p in rdr.partitions(end, end2) if p.path] == []
-
-
-def test_stream_stable_offset_monotone_across_restart(tmp_path):
-    """A RESTARTED driver (fresh in-memory state): a checkpointed file
-    that is stable at the first post-restart listing re-enters the
-    offset (excluded from the diff by the checkpoint), and when it is
-    touched AFTERWARDS it must stay in every later offset — the
-    monotone set rebuilds from the stable listing plus the offsets
-    partitions() sees, so no re-ingest."""
-    import time as _t
-
-    from mongo_arrow_spark.sources.warc import (
-        WARC_SCHEMA,
-        WarcStreamReader,
-        build_warc_record,
-    )
-
-    d = tmp_path / "drop"
-    d.mkdir()
-    f = d / "a.warc"
-    f.write_bytes(build_warc_record("<urn:mas:r1>", "https://x/1", b"b1"))
-    os.utime(f, (_t.time() - 120, _t.time() - 120))  # old -> stable
-    checkpointed = {"seen": ["a.warc"]}  # admitted before the restart
-
-    fresh = WarcStreamReader(
-        WARC_SCHEMA, {"path": str(d), "stablefilems": "60000"}
-    )
-    end = fresh.latestOffset()
-    assert end["seen"] == ["a.warc"]  # stable at restart -> re-listed
-    assert [
-        p.path for p in fresh.partitions(checkpointed, end) if p.path
-    ] == []  # excluded by the checkpoint diff
-    # producer touches the already-ingested file post-restart
-    _t.sleep(0.02)
-    with open(f, "ab") as fh:
-        fh.write(build_warc_record("<urn:mas:r2>", "https://x/2", b"b2"))
-    end2 = fresh.latestOffset()
-    assert "a.warc" in end2["seen"]  # monotone across the restart
-    assert [p.path for p in fresh.partitions(end, end2) if p.path] == []
 
 
 def test_warc_header_value_crlf_sanitized(tmp_path):

@@ -468,11 +468,8 @@ def test_writer_gzip_compression_roundtrip(spark, tmp_path):
 def test_compressed_files_bin_packed_partitions(spark, tmp_path):
     """Many small .gz parts pack into few size-balanced partitions
     instead of one task per file; a file above the target gets its own."""
-    from mongo_arrow_spark.sources.documents import (
-        DocumentsReader,
-        _FilesSplit,
-        _pack_files,
-    )
+    from mongo_arrow_spark.sources.documents import DocumentsReader
+    from mongo_arrow_spark.sources.files import FilesSplit, _pack_files
 
     d = tmp_path / "many"
     d.mkdir()
@@ -483,7 +480,7 @@ def test_compressed_files_bin_packed_partitions(spark, tmp_path):
         {"path": str(d), "partitionbytes": str(1 << 30)},
     )
     parts = reader.partitions()
-    assert all(isinstance(p, _FilesSplit) for p in parts)
+    assert all(isinstance(p, FilesSplit) for p in parts)
     assert len(parts) == 1 and len(parts[0].paths) == 12
     # oversized lone file: its own bin; smalls share
     groups = _pack_files(

@@ -1,6 +1,6 @@
 """The execution-policy module: scoped materialization, the broadcast
-budget, the zip-import guard, and the rule that operator modules share
-helpers only through public names."""
+budget, the zip-import guard, and the rule that operator modules (and
+source modules) share helpers only through public names."""
 
 import ast
 import importlib
@@ -19,27 +19,32 @@ from conftest import REPO, cache_entries
 from mongo_arrow_spark import execution
 
 OPERATORS = os.path.join(REPO, "mongo_arrow_spark", "operators")
+SOURCES = os.path.join(REPO, "mongo_arrow_spark", "sources")
 
 
 def test_no_cross_module_private_imports():
     """No operator module imports an ``_``-prefixed name from another
-    operator module: a helper two modules share is public, or lives in
-    ``mongo_arrow_spark.execution``."""
-    mods = {f[:-3] for f in os.listdir(OPERATORS) if f.endswith(".py")}
+    operator module, and no source module from another source module: a
+    helper two modules share is public, or lives in
+    ``mongo_arrow_spark.execution`` (operators) or
+    ``mongo_arrow_spark.sources.files`` (file sources)."""
     bad = []
-    for mod in sorted(mods):
-        with open(os.path.join(OPERATORS, f"{mod}.py")) as fh:
-            tree = ast.parse(fh.read())
-        for node in ast.walk(tree):
-            if not isinstance(node, ast.ImportFrom) or not node.module:
-                continue
-            pkg, _, src = node.module.rpartition(".")
-            if pkg == "mongo_arrow_spark.operators" and src != mod:
-                bad += [
-                    f"{mod}.py:{node.lineno} {src}.{a.name}"
-                    for a in node.names
-                    if a.name.startswith("_")
-                ]
+    for pkg_dir in (OPERATORS, SOURCES):
+        pkg = "mongo_arrow_spark." + os.path.basename(pkg_dir)
+        mods = {f[:-3] for f in os.listdir(pkg_dir) if f.endswith(".py")}
+        for mod in sorted(mods):
+            with open(os.path.join(pkg_dir, f"{mod}.py")) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.ImportFrom) or not node.module:
+                    continue
+                parent, _, src = node.module.rpartition(".")
+                if parent == pkg and src != mod:
+                    bad += [
+                        f"{mod}.py:{node.lineno} {src}.{a.name}"
+                        for a in node.names
+                        if a.name.startswith("_")
+                    ]
     assert not bad, bad
 
 

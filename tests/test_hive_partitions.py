@@ -14,11 +14,11 @@ from pyspark.sql import functions as F
 from mongo_arrow_spark.sources import register
 from mongo_arrow_spark.sources.documents import (
     DocumentsPushdownReader,
-    _FilesSplit,
     _hive_encode,
     _hive_parts,
     infer_schema,
 )
+from mongo_arrow_spark.sources.files import FilesSplit
 
 
 @pytest.fixture(scope="module")
@@ -108,7 +108,7 @@ def test_partition_pruning_skips_files(spark, part_dir):
     pruned = reader.partitions()
     assert 0 < len(pruned) < total
     for s in pruned:
-        paths = s.paths if isinstance(s, _FilesSplit) else (s.path,)
+        paths = s.paths if isinstance(s, FilesSplit) else (s.path,)
         for p in paths:
             assert _hive_parts(p)["lang"] == "en"
 
@@ -135,7 +135,7 @@ def test_filter_correctness_with_and_without_pushdown(spark, part_dir):
 
 
 def test_partitioned_compressed_round_trip(spark, tmp_path):
-    """Compressed parts inside partition dirs: bin-packed _FilesSplit
+    """Compressed parts inside partition dirs: bin-packed FilesSplit
     groups may span dirs, so partition values resolve per FILE."""
     df = spark.createDataFrame(
         [(i, f"t{i}", "ab"[i % 2]) for i in range(40)],
@@ -197,7 +197,7 @@ def test_in_filter_pushdown_regression(spark, part_dir):
     assert list(reader.pushFilters([In(("lang",), ("en", "fr"))])) == []
     pruned = reader.partitions()
     for s in pruned:
-        paths = s.paths if isinstance(s, _FilesSplit) else (s.path,)
+        paths = s.paths if isinstance(s, FilesSplit) else (s.path,)
         for p in paths:
             assert _hive_parts(p)["lang"] in ("en", "fr")
     want = sorted(

@@ -2972,6 +2972,31 @@ def test_lookup_localfield_pipeline_trailing_limit_per_row(spark):
     assert by_id[2] == [20]
 
 
+def test_lookup_localfield_pipeline_warns_on_mid_pipeline_cardinality(spark):
+    """MQL runs a localField + pipeline subpipeline per outer document
+    too, so a BURIED $limit warns there as in the correlated form."""
+    import warnings as w
+
+    from mongo_arrow_spark.api import aggregate
+
+    users = spark.createDataFrame([(1,)], "uid long")
+    posts = spark.createDataFrame(
+        [(10, 1), (11, 1), (12, 1)], "_id long, user_id long"
+    )
+    with w.catch_warnings(record=True) as caught:
+        w.simplefilter("always")
+        aggregate(
+            users,
+            [{"$lookup": {"from": "p", "localField": "uid",
+                          "foreignField": "user_id",
+                          "pipeline": [{"$limit": 2},
+                                       {"$project": {"_id": 1, "user_id": 1}}],
+                          "as": "hits"}}],
+            collections={"p": posts},
+        )
+    assert any("whole foreign collection" in str(x.message) for x in caught)
+
+
 def test_correlated_lookup_mixed_sort_null_desc_lands_last(spark):
     """r8 ADVICE fix: under a DESCENDING key in a mixed-direction suffix
     sort, NULL values must land LAST (server semantics) — naive key

@@ -267,3 +267,309 @@ def test_pq_encode_streaming_parity(spark, tmp_path):
     want = {r["vec_id"]: list(r["pq_codes"])
             for r in pq_encode(batch_df, model).collect()}
     assert got == want and len(got) == 60
+
+
+# ------------------------------------------- drop-directory stream reader
+#
+# One reader (sources/files.py FileStreamReader) serves both file
+# sources; the behaviours they share run over both.
+
+
+class _Source:
+    """A file source as its stream tests see it: the stream reader, a
+    schema, and the bytes of one small file holding record ``i``."""
+
+    def __init__(self, name):
+        from pyspark.sql import types as T
+
+        self.name = name
+        if name == "documents":
+            from mongo_arrow_spark.sources.documents import DocumentsStreamReader
+
+            self.reader = DocumentsStreamReader
+            self.schema = T.StructType([T.StructField("k", T.LongType())])
+            self.ext = ".jsonl"
+        else:
+            from mongo_arrow_spark.sources.warc import WARC_SCHEMA, WarcStreamReader
+
+            self.reader = WarcStreamReader
+            self.schema = WARC_SCHEMA
+            self.ext = ".warc"
+
+    def record(self, i):
+        if self.name == "documents":
+            return (json.dumps({"k": i}) + "\n").encode()
+        from mongo_arrow_spark.sources.warc import build_warc_record
+
+        return build_warc_record(f"<urn:mas:{i}>", f"https://x/{i}", b"b%d" % i)
+
+    def open(self, d, **opts):
+        return self.reader(self.schema, {"path": str(d), **opts})
+
+
+@pytest.fixture(params=["documents", "warc"])
+def source(request):
+    return _Source(request.param)
+
+
+def test_stream_offsets_survive_late_sorting_file(source, tmp_path):
+    """Name-set offsets: a file that sorts BEFORE already-committed ones
+    must be picked up as new, and committed files must not be re-read
+    (positional offsets skipped/re-read on re-sorted listings)."""
+    import os
+
+    d = tmp_path / "stream"
+    d.mkdir()
+    (d / f"m{source.ext}").write_bytes(source.record(1))
+    reader = source.open(d)
+    start = reader.initialOffset()
+    mid = reader.latestOffset()
+    first = [p.path for p in reader.partitions(start, mid)]
+    assert [os.path.basename(p) for p in first] == [f"m{source.ext}"]
+    # late-arriving file that sorts before m
+    (d / f"a{source.ext}").write_bytes(source.record(2))
+    end = reader.latestOffset()
+    second = [p.path for p in reader.partitions(mid, end)]
+    assert [os.path.basename(p) for p in second] == [f"a{source.ext}"]
+    # replay of the first range is unchanged by the new arrival
+    replay = [p.path for p in reader.partitions(start, mid)]
+    assert replay == first
+
+
+def test_stream_offset_legacy_index_migration(tmp_path):
+    """A legacy {"index": N} checkpoint offset translates to the first N
+    names of the sorted listing — committed files are NOT reprocessed
+    across the offset-format upgrade."""
+    from pyspark.sql import types as T
+
+    from mongo_arrow_spark.sources.documents import DocumentsStreamReader
+
+    d = tmp_path / "arrivals"
+    d.mkdir()
+    for name in ("0001.jsonl", "0002.jsonl"):
+        with open(d / name, "w") as fh:
+            fh.write(json.dumps({"i": int(name[:4])}) + "\n")
+    reader = DocumentsStreamReader(
+        T.StructType([T.StructField("i", T.LongType())]), {"path": str(d)}
+    )
+    end = reader.latestOffset()
+    parts = reader.partitions({"index": 1}, end)
+    paths = [p.path for p in parts if p.path]
+    assert paths == [str(d / "0002.jsonl")]  # only the uncommitted file
+    # and a fully-caught-up legacy offset yields no work
+    parts2 = reader.partitions({"index": 2}, end)
+    assert [p.path for p in parts2 if p.path] == []
+
+
+def test_stream_offset_legacy_index_too_short_fails_loudly(tmp_path):
+    """If committed files were deleted/renamed since a legacy
+    {"index": N} checkpoint, the prefix translation is ambiguous
+    — fail loudly instead of silently re-processing/skipping records."""
+    from pyspark.sql import types as T
+
+    from mongo_arrow_spark.sources.documents import DocumentsStreamReader
+
+    d = tmp_path / "arrivals"
+    d.mkdir()
+    with open(d / "0002.jsonl", "w") as fh:
+        fh.write(json.dumps({"i": 2}) + "\n")
+    reader = DocumentsStreamReader(
+        T.StructType([T.StructField("i", T.LongType())]), {"path": str(d)}
+    )
+    end = reader.latestOffset()
+    with pytest.raises(ValueError, match="legacy streaming offset"):
+        reader.partitions({"index": 2}, end)  # checkpoint saw 2 files
+
+
+def test_stream_offset_legacy_index_translation_warns(tmp_path):
+    """The successful legacy translation announces its assumption."""
+    import warnings as w
+
+    from pyspark.sql import types as T
+
+    from mongo_arrow_spark.sources.documents import DocumentsStreamReader
+
+    d = tmp_path / "arrivals"
+    d.mkdir()
+    for name in ("0001.jsonl", "0002.jsonl"):
+        with open(d / name, "w") as fh:
+            fh.write(json.dumps({"i": int(name[:4])}) + "\n")
+    reader = DocumentsStreamReader(
+        T.StructType([T.StructField("i", T.LongType())]), {"path": str(d)}
+    )
+    end = reader.latestOffset()
+    with w.catch_warnings(record=True) as caught:
+        w.simplefilter("always")
+        parts = reader.partitions({"index": 1}, end)
+    assert any("legacy streaming offset" in str(x.message) for x in caught)
+    assert [p.path for p in parts if p.path] == [str(d / "0002.jsonl")]
+
+
+def test_stream_stable_file_admission(source, tmp_path):
+    """stableFileMs: a freshly-written (possibly still-growing) file is
+    NOT admitted until its mtime is old enough or its (size, mtime) held
+    still across two listings — so a producer mid-write can't have its
+    tail permanently lost to the seen-file-set offset model."""
+    import os
+    import time as _t
+
+    a, b, c = (f"{n}{source.ext}" for n in "abc")
+    d = tmp_path / "drop"
+    d.mkdir()
+    (d / a).write_bytes(source.record(1))
+
+    rdr = source.open(d, stablefilems="60000")
+    # first listing: file is brand new (mtime age < 60s), never seen -> held back
+    assert rdr.latestOffset() == {"seen": []}
+    # second listing, unchanged stat -> admitted
+    assert rdr.latestOffset() == {"seen": [a]}
+    # a file that keeps growing between listings stays held back
+    g = d / b
+    g.write_bytes(source.record(2)[:8])
+    assert b not in rdr.latestOffset()["seen"]
+    _t.sleep(0.02)
+    g.write_bytes(source.record(2))
+    assert b not in rdr.latestOffset()["seen"]  # stat changed
+    assert b in rdr.latestOffset()["seen"]  # now stable
+    # old files (mtime age >= threshold) admit on first sight
+    h = d / c
+    h.write_bytes(source.record(3))
+    os.utime(h, (_t.time() - 120, _t.time() - 120))
+    fresh = source.open(d, stablefilems="60000")
+    assert c in fresh.latestOffset()["seen"]
+    # default (0) keeps the atomic-rename contract: everything lists
+    dflt = source.open(d)
+    assert sorted(dflt.latestOffset()["seen"]) == [a, b, c]
+
+
+def test_stream_stable_offset_monotone(source, tmp_path):
+    """With stableFileMs>0 the offset is MONOTONE — a file already
+    admitted (hence possibly ingested) that is later appended/touched
+    must NOT drop out of `seen` while unstable, or its re-entry once
+    stable would make partitions(start, end)'s set difference re-ingest
+    the whole file (duplicate records)."""
+    import time as _t
+
+    a = f"a{source.ext}"
+    d = tmp_path / "drop"
+    d.mkdir()
+    f = d / a
+    f.write_bytes(source.record(1))
+
+    rdr = source.open(d, stablefilems="60000")
+    start = rdr.initialOffset()
+    rdr.latestOffset()  # first sight: held back
+    mid = rdr.latestOffset()  # stat held still -> admitted
+    assert mid["seen"] == [a]
+    assert len(rdr.partitions(start, mid)) >= 1  # ingested once
+    # producer appends to the already-ingested file -> stat changes, the
+    # file is momentarily unstable — but it must STAY in the offset
+    _t.sleep(0.02)
+    with open(f, "ab") as fh:
+        fh.write(source.record(2))
+    end = rdr.latestOffset()
+    assert a in end["seen"], "admitted file dropped out of offset"
+    # and the set difference re-ingests nothing (only the empty
+    # placeholder split Spark requires)
+    assert [p.path for p in rdr.partitions(mid, end) if p.path] == []
+    # once stable again it still re-enters nothing new
+    end2 = rdr.latestOffset()
+    assert a in end2["seen"]
+    assert [p.path for p in rdr.partitions(end, end2) if p.path] == []
+
+
+def test_stream_stable_offset_monotone_across_restart(source, tmp_path):
+    """A RESTARTED driver (fresh in-memory state): a checkpointed file
+    that is stable at the first post-restart listing re-enters the
+    offset (excluded from the diff by the checkpoint), and when it is
+    touched AFTERWARDS it must stay in every later offset — the
+    monotone set rebuilds from the stable listing plus the offsets
+    partitions() sees, so no re-ingest."""
+    import os
+    import time as _t
+
+    a = f"a{source.ext}"
+    d = tmp_path / "drop"
+    d.mkdir()
+    f = d / a
+    f.write_bytes(source.record(1))
+    os.utime(f, (_t.time() - 120, _t.time() - 120))  # old -> stable
+    checkpointed = {"seen": [a]}  # admitted before the restart
+
+    fresh = source.open(d, stablefilems="60000")
+    end = fresh.latestOffset()
+    assert end["seen"] == [a]  # stable at restart -> re-listed
+    assert [
+        p.path for p in fresh.partitions(checkpointed, end) if p.path
+    ] == []  # excluded by the checkpoint diff
+    # producer touches the already-ingested file post-restart
+    _t.sleep(0.02)
+    with open(f, "ab") as fh:
+        fh.write(source.record(2))
+    end2 = fresh.latestOffset()
+    assert a in end2["seen"]  # monotone across the restart
+    assert [p.path for p in fresh.partitions(end, end2) if p.path] == []
+
+
+def _rows(reader, parts):
+    return [
+        row
+        for part in parts
+        for batch in reader.read(part)
+        for row in batch.to_pylist()
+    ]
+
+
+def test_documents_stream_read_lists_nothing(tmp_path, monkeypatch):
+    """Reading a planned documents stream partition globs nothing: the
+    task decodes the files the driver planned instead of re-listing the
+    whole drop directory."""
+    import glob
+
+    from mongo_arrow_spark.sources.documents import DocumentsStreamReader
+    from pyspark.sql import types as T
+
+    d = tmp_path / "drop"
+    d.mkdir()
+    (d / "a.jsonl").write_text('{"k": 1}\n{"k": 2}\n')
+    reader = DocumentsStreamReader(
+        T.StructType([T.StructField("k", T.LongType())]), {"path": str(d)}
+    )
+    parts = reader.partitions(reader.initialOffset(), reader.latestOffset())
+    calls = []
+    real = glob.glob
+    monkeypatch.setattr(
+        glob, "glob", lambda *a, **k: calls.append(a) or real(*a, **k)
+    )
+    assert _rows(reader, parts) == [{"k": 1}, {"k": 2}]
+    assert calls == []
+
+
+def test_documents_stream_splits_big_arrival(tmp_path):
+    """Arrivals go through the batch reader's split planning: with a
+    small partitionBytes a big ``.jsonl`` byte-splits inside its
+    micro-batch and the splits together read exactly its rows once;
+    small ``.gz`` arrivals bin-pack into one task."""
+    import gzip
+
+    from mongo_arrow_spark.sources.documents import DocumentsStreamReader
+    from pyspark.sql import types as T
+
+    d = tmp_path / "drop"
+    d.mkdir()
+    with open(d / "big.jsonl", "w") as fh:
+        fh.writelines(json.dumps({"k": i}) + "\n" for i in range(500))
+    schema = T.StructType([T.StructField("k", T.LongType())])
+    reader = DocumentsStreamReader(schema, {"path": str(d), "partitionbytes": "1024"})
+    start, mid = reader.initialOffset(), reader.latestOffset()
+    parts = reader.partitions(start, mid)
+    assert len(parts) > 1 and {p.path for p in parts} == {str(d / "big.jsonl")}
+    assert sorted(r["k"] for r in _rows(reader, parts)) == list(range(500))
+    for i in range(3):
+        (d / f"s{i}.jsonl.gz").write_bytes(
+            gzip.compress(json.dumps({"k": 1000 + i}).encode() + b"\n")
+        )
+    end = reader.latestOffset()
+    small = reader.partitions(mid, end)
+    assert [len(p.paths) for p in small] == [3]
+    assert sorted(r["k"] for r in _rows(reader, small)) == [1000, 1001, 1002]

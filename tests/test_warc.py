@@ -1107,46 +1107,6 @@ def test_folded_header_value_is_joined(tmp_path):
     assert body == b"BODY"
 
 
-def test_stream_stable_file_admission(tmp_path):
-    """stableFileMs: a freshly-written (possibly still-growing) archive
-    is NOT admitted until its mtime is old enough or its (size, mtime)
-    held still across two listings — so a crawler mid-write can't have
-    its tail permanently lost to the seen-file-set offset model."""
-    import time as _t
-
-    from mongo_arrow_spark.sources.warc import WARC_SCHEMA, WarcStreamReader
-
-    d = tmp_path / "drop"
-    d.mkdir()
-    f = d / "a.warc"
-    f.write_bytes(build_warc_record("<urn:mas:s1>", "https://x/1", b"b1"))
-
-    rdr = WarcStreamReader(WARC_SCHEMA, {"path": str(d), "stablefilems": "60000"})
-    # first listing: file is brand new (mtime age < 60s), never seen -> held back
-    assert rdr.latestOffset() == {"seen": []}
-    # second listing, unchanged stat -> admitted
-    assert rdr.latestOffset() == {"seen": ["a.warc"]}
-    # a file that keeps growing between listings stays held back
-    g = d / "b.warc"
-    g.write_bytes(b"WARC/1.0\r\n")
-    assert "b.warc" not in rdr.latestOffset()["seen"]
-    _t.sleep(0.02)
-    g.write_bytes(build_warc_record("<urn:mas:s2>", "https://x/2", b"b2"))
-    assert "b.warc" not in rdr.latestOffset()["seen"]  # stat changed
-    assert "b.warc" in rdr.latestOffset()["seen"]      # now stable
-    # old files (mtime age >= threshold) admit on first sight
-    h = d / "c.warc"
-    h.write_bytes(build_warc_record("<urn:mas:s3>", "https://x/3", b"b3"))
-    os.utime(h, (_t.time() - 120, _t.time() - 120))
-    fresh = WarcStreamReader(
-        WARC_SCHEMA, {"path": str(d), "stablefilems": "60000"}
-    )
-    assert "c.warc" in fresh.latestOffset()["seen"]
-    # default (0) keeps the atomic-rename contract: everything lists
-    dflt = WarcStreamReader(WARC_SCHEMA, {"path": str(d)})
-    assert sorted(dflt.latestOffset()["seen"]) == ["a.warc", "b.warc", "c.warc"]
-
-
 def _embedded_archive_fixture(tmp_path, n_outer=8):
     """Outer member-per-record archive where one record's PAYLOAD is a
     complete inner .warc.gz, and the outer member is compressed with
