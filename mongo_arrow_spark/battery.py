@@ -305,7 +305,7 @@ _DEMOTED = [
     #                     oracles cover mql_search_text
     #   kNN join        → graded sim_bruteforce_topk + mql_vector_search
     #                     cover sim_knn_join (same cosine machinery;
-    #                     bucketed corpus×corpus form pinned in pytest)
+    #                     its broadcast query side pinned in test_plans)
     #   text scoring    → graded text_quality/text_token_stats pin the
     #                     map-only projection+agg shape of
     #                     text_repetition

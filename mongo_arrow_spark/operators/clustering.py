@@ -103,6 +103,17 @@ class KMeansModel(NamedTuple):
         return len(self.centroids[0])
 
 
+def valid_vector(col: Column | str, dim: int | None = None) -> Column:
+    """True for a usable vector: not NULL, no NULL element and, when
+    ``dim`` is given, exactly ``dim`` elements. The one corrupt-vector
+    predicate every fit, assignment and mining path filters on."""
+    v = F.col(col) if isinstance(col, str) else col
+    ok = v.isNotNull()
+    if dim is not None:
+        ok = ok & (F.size(v) == dim)
+    return ok & F.forall(v, lambda x: x.isNotNull())
+
+
 def quantize_vec(col: Column | str, scale: int = 10_000) -> Column:
     """float array → long array via ``floor(x*scale + 0.5)``: the one
     rounding spelling that is bit-identical in Spark and DuckDB (both
@@ -203,10 +214,7 @@ def kmeans_fit(
     """
     if k < 1 or iters < 0:
         raise ValueError("k must be >= 1 and iters >= 0")
-    q = df.filter(
-        F.col(vec_col).isNotNull()
-        & F.forall(F.col(vec_col), lambda x: x.isNotNull())
-    ).select(
+    q = df.filter(valid_vector(vec_col)).select(
         F.col(id_col).alias("__id"), quantize_vec(vec_col, scale).alias("__q")
     )
     # persist-before-action (the r7 fit-stage discipline): the fit runs
@@ -268,16 +276,12 @@ def kmeans_assign(
     Vectors that are NULL, contain a NULL element, or whose length
     differs from the model's get a NULL cluster (never a silent
     cluster 0 — NULL distances would win nulls-first struct ordering)."""
-    v = F.col(vec_col)
     q = quantize_vec(vec_col, model.scale)
-    valid = (
-        v.isNotNull()
-        & (F.size(v) == model.dim)
-        & F.forall(v, lambda x: x.isNotNull())
-    )
     return df.withColumn(
         out_col,
-        F.when(valid, argmin_cluster(q, model.centroids)).cast("long"),
+        F.when(
+            valid_vector(vec_col, model.dim), argmin_cluster(q, model.centroids)
+        ).cast("long"),
     )
 
 
@@ -364,12 +368,6 @@ def random_projection(
         dim = len(first[0])
     d = int(dim)
     q = quantize_vec(vec_col, scale)
-    v = F.col(vec_col)
-    valid = (
-        v.isNotNull()
-        & (F.size(v) == d)
-        & F.forall(v, lambda x: x.isNotNull())
-    )
     comps = [
         F.aggregate(
             F.zip_with(
@@ -387,4 +385,4 @@ def random_projection(
         )
         for j in range(out_dim)
     ]
-    return df.withColumn(out_col, F.when(valid, F.array(*comps)))
+    return df.withColumn(out_col, F.when(valid_vector(vec_col, d), F.array(*comps)))

@@ -760,9 +760,13 @@ def connected_components(
     # only edge was (a,a); the loop labeled it) — drop them up front so
     # both paths see the identical graph.
     a, b = F.col(a_col), F.col(b_col)
-    # lazy: the first action over the edges — the fast path's pull, or
-    # the loop's first round — fills the checkpoint, and the loop reads
-    # it back instead of re-evaluating the pairs subtree
+    # eager=False is only half lazy under AQE: building the checkpoint
+    # RDD runs every shuffle map stage and broadcast below it at call
+    # time (9 jobs on a banded-Jaccard pairs input, by the status
+    # tracker; 2 with AQE off). Only the final stage waits for the first
+    # action over the edges — the fast path's pull, or the loop's first
+    # round — which fills the checkpoint; the loop reads it back instead
+    # of re-evaluating the pairs subtree
     edges = (
         pairs.filter(a != b)
         .select(F.least(a, b).alias("src"), F.greatest(a, b).alias("dst"))

@@ -49,6 +49,7 @@ from mongo_arrow_spark.operators.clustering import (
     const_array,
     quantize_vec,
     sq_dist,
+    valid_vector,
 )
 
 
@@ -79,11 +80,8 @@ def _clean(df: DataFrame, id_col: str, vec_col: str, scale: int, extra):
     vectors dropped — the ``kmeans_fit`` corrupt-vector contract (a NULL
     id would poison the tie-break ordering). Dimension filtering happens
     next, against ``_resolve_dim``'s contract — BEFORE any seeding."""
-    v = F.col(vec_col)
     return df.filter(
-        F.col(id_col).isNotNull()
-        & v.isNotNull()
-        & F.forall(v, lambda x: x.isNotNull())
+        F.col(id_col).isNotNull() & valid_vector(vec_col)
     ).select(
         F.col(id_col).alias("__id"),
         *extra,

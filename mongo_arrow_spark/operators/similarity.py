@@ -2,8 +2,19 @@
 
 Baseline: brute-force cosine top-k — one narrow scan, dot products in JVM
 higher-order functions, TakeOrdered for the top-k (no global sort).
-Scale path: sign-bucket (random hyperplane) LSH pruning — deterministic
-seeded projections, candidates restricted to the query's bucket ring.
+
+Every approximate path is one candidate generator followed by a
+ranking scan over the survivors:
+- sign-bucket (random hyperplane) LSH — deterministic seeded
+  projections, candidates restricted to the query's bucket ring
+  (``_ring_distance``), ranked by exact cosine;
+- IVF cells — a deterministic Lloyd's fit on an ids-sorted sample,
+  candidates restricted to the cells nearest the query (``_ivf_route``),
+  ranked by exact cosine (``ivf_topk``) or by the PQ asymmetric
+  distance (``ivf_pq_topk``; persisted as ``build_ivf_pq_index``).
+Query×corpus joins broadcast the query side (``knn_join``,
+``hard_negatives``); corpus×corpus mining routes through IVF cells
+(``hard_negatives_ivf``).
 """
 
 from __future__ import annotations
@@ -17,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mongo_arrow_spark.execution import local_frame, materialize, spread
-from mongo_arrow_spark.operators.clustering import const_array
+from mongo_arrow_spark.operators.clustering import const_array, valid_vector
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -89,6 +100,21 @@ def sign_buckets(v: Column, bits: int, dim: int = 64, seed: int = 42) -> Column:
     return acc
 
 
+def _ring_distance(
+    vec_col: str, query: list[float], bits: int, seed: int
+) -> Column:
+    """Hamming distance between each row's sign bucket and the query's —
+    the ring both LSH paths filter on. The query's bucket is computed on
+    the driver with the same seeded hyperplanes as ``sign_buckets``."""
+    q = [float(x) for x in query]
+    qbits = 0
+    for i, plane in enumerate(_hyperplanes(len(q), bits, seed)):
+        if sum(a * b for a, b in zip(q, plane)) >= 0:
+            qbits |= 1 << i
+    bucket = sign_buckets(F.col(vec_col), bits, len(q), seed)
+    return F.bit_count(bucket.bitwiseXOR(F.lit(qbits)))
+
+
 def cosine_topk_lsh(
     df: DataFrame,
     query_vec: list[float],
@@ -103,18 +129,10 @@ def cosine_topk_lsh(
     ``max_hamming`` bits of the query's bucket are scored. Bucketing is a
     pushable filter over a precomputable column — at scale, persist the
     bucket id as a partition column and this becomes partition pruning."""
-    dim = len(query_vec)
-    q = [float(x) for x in query_vec]
-    planes = _hyperplanes(dim, bits, seed)
-    qbits = 0
-    for i, plane in enumerate(planes):
-        if sum(a * b for a, b in zip(q, plane)) >= 0:
-            qbits |= 1 << i
-    bucket = sign_buckets(F.col(vec_col), bits, dim, seed)
     candidates = df.filter(
-        F.bit_count(bucket.bitwiseXOR(F.lit(qbits))) <= max_hamming
+        _ring_distance(vec_col, query_vec, bits, seed) <= max_hamming
     )
-    return cosine_topk(candidates, q, k, id_col, vec_col)
+    return cosine_topk(candidates, query_vec, k, id_col, vec_col)
 
 
 def prune_candidates_lsh(
@@ -135,16 +153,7 @@ def prune_candidates_lsh(
     pruned scan ``bit_count(bucket ⊕ qbucket) ≤ radius``. At corpus scale,
     persist the bucket id as a partition column and pass (2) becomes
     partition pruning; pass (1) runs on the tiny bucket-stats table."""
-    dim = len(query_vec)
-    q = [float(x) for x in query_vec]
-    planes = _hyperplanes(dim, bits, seed)
-    qbits = 0
-    for i, plane in enumerate(planes):
-        if sum(a * b for a, b in zip(q, plane)) >= 0:
-            qbits |= 1 << i
-    dist = F.bit_count(
-        sign_buckets(F.col(vec_col), bits, dim, seed).bitwiseXOR(F.lit(qbits))
-    )
+    dist = _ring_distance(vec_col, query_vec, bits, seed)
     hist = {
         r["__d"]: r["count"]
         for r in df.select(dist.alias("__d")).groupBy("__d").count().collect()
@@ -171,7 +180,7 @@ def fit_ivf_centroids(
     """Deterministic Lloyd's on a driver-side sample: seeded choice of
     initial centroids, fixed iteration count, ties to the lowest cell,
     left-to-right float accumulation — every step replayable in pure
-    Python (test_no_oracle_hardening pins the full output).
+    Python (tests/test_similarity.py pins the full output).
 
     The hot loop runs through numpy when available (r14: the pure-Python
     fit was 2.2 s of the benched IVF key at a 2000×32×64 sample and
@@ -183,7 +192,7 @@ def fit_ivf_centroids(
     ``np.sum``'s pairwise reduction which is NOT used here. ``np.argmin``
     returns the first minimum — the same strict-< tie rule as
     ``_nearest_cell`` (early abandonment never changes the winner, only
-    the op count). ``tests/test_similarity_fit.py`` pins numpy == scalar
+    the op count). ``tests/test_similarity.py`` pins numpy == scalar
     on adversarial near-tie fixtures; ragged samples keep the scalar
     path (zip-truncation semantics have no rectangular equivalent)."""
     import random
@@ -323,6 +332,64 @@ def _cell_expr(vec_col: str, centroids: list[list[float]]):
     return F.when(m["d"].isNotNull(), m["j"]).cast("int")
 
 
+def _fit_ivf_from_df(
+    df: DataFrame,
+    n_clusters: int,
+    seed: int,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+) -> list[list[float]]:
+    """Deterministic IVF fit from an ids-sorted driver sample — the one
+    fit behind ``_ivf_route``, ``build_ivf_pq_index`` and
+    ``hard_negatives_ivf``, so the in-plan and persisted routes derive
+    IDENTICAL cells (the artifact round-trip parity contract). Full
+    corrupt-vector filter: a NULL element would crash the float() pull,
+    a wrong-dim row would silently skew the fit."""
+    sample = [
+        [float(x) for x in r[0]]
+        for r in df.select(vec_col)
+        .filter(valid_vector(vec_col, dim))
+        .orderBy(F.col(id_col).asc())
+        .limit(IVF_FIT_SAMPLE)
+        .collect()
+    ]
+    return fit_ivf_centroids(sample, n_clusters, seed)
+
+
+def _probe_cells(
+    centroids: list[list[float]], query_vec: list, n_probe: int
+) -> list[int]:
+    q = [float(x) for x in query_vec]
+    ranked = sorted(
+        range(len(centroids)),
+        key=lambda j: (
+            sum((a - b) * (a - b) for a, b in zip(centroids[j], q)),
+            j,
+        ),
+    )
+    return [int(j) for j in ranked[: max(1, n_probe)]]
+
+
+def _ivf_route(
+    df: DataFrame,
+    query: list,
+    n_clusters: int,
+    n_probe: int,
+    seed: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """IVF candidate generation shared by ``ivf_topk`` and
+    ``ivf_pq_topk``: fit the cells on the ids-sorted sample of valid
+    ``len(query)``-dim rows, keep only rows whose cell is among the
+    ``n_probe`` (at least 1) nearest the query. Corrupt vectors have no
+    cell, so they are never candidates."""
+    centroids = _fit_ivf_from_df(df, n_clusters, seed, id_col, vec_col, len(query))
+    probe = _probe_cells(centroids, query, n_probe)
+    return df.filter(_cell_expr(vec_col, centroids).isin(probe))
+
+
 def ivf_topk(
     df: DataFrame,
     query_vec: list[float],
@@ -333,115 +400,16 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF-style approximate top-k: partition the corpus into KMeans
-    cells (deterministic seeded Lloyd's fit on an ids-sorted driver
-    sample — r7, replacing opaque Spark-ML model state), score only the
-    ``n_probe`` cells nearest the query.
+    """IVF-style approximate top-k: route the query to its ``n_probe``
+    nearest cells (``_ivf_route``) and rank the survivors by exact
+    cosine.
 
     At corpus scale the cell id is persisted as a partition column, so
     probing = partition pruning (scan shrinks n_clusters/n_probe-fold);
     here the assignment runs inline as one JVM-side projection. Centroids
     are tiny (n_clusters × dim) — the only driver-side state."""
-    sample = [
-        [float(x) for x in r[0]]
-        for r in df.select(vec_col)
-        .orderBy(F.col(id_col).asc())
-        .limit(IVF_FIT_SAMPLE)
-        .collect()
-    ]
-    centroids = fit_ivf_centroids(sample, n_clusters, seed)
-    q = [float(x) for x in query_vec]
-
-    def dist2(c) -> float:
-        d = 0.0
-        for a, b in zip(c, q):
-            d += (a - b) * (a - b)
-        return d
-
-    probe = sorted(range(len(centroids)), key=lambda i: (dist2(centroids[i]), i))[
-        :n_probe
-    ]
-    assigned = df.withColumn("__cell", _cell_expr(vec_col, centroids))
-    candidates = assigned.filter(F.col("__cell").isin(probe)).drop("__cell")
-    return cosine_topk(candidates, q, k, id_col, vec_col)
-
-
-def build_ann_index(
-    df: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    bits: int = 8,
-    dim: int | None = None,
-    seed: int = 42,
-) -> None:
-    """Persist the corpus partitioned by its sign-bucket id — the 100 TB
-    form of ANN search: the bucket computation runs ONCE at index-build
-    time, and every later query prunes partitions instead of scanning the
-    corpus (``ann_index_topk``). A manifest records bits/dim/seed so
-    queries derive the same hyperplanes."""
-    import json
-    import os
-
-    if dim is None:
-        dim = len(df.select(vec_col).first()[0])
-    bucket = sign_buckets(F.col(vec_col), bits, dim, seed)
-    (
-        df.withColumn("__bucket", bucket)
-        .write.mode("overwrite")
-        .partitionBy("__bucket")
-        .parquet(path)
-    )
-    with open(os.path.join(path, "_ann_index.json"), "w") as fh:
-        json.dump({"bits": bits, "dim": dim, "seed": seed, "vec_col": vec_col}, fh)
-
-
-def ann_index_topk(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    num_candidates: int | None = None,
-    max_hamming: int | None = None,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Approximate top-k over a ``build_ann_index`` directory.
-
-    The Hamming-ring predicate is a deterministic function of the
-    ``__bucket`` partition column, so Catalyst evaluates it against the
-    partition listing — non-matching buckets are never read
-    (PartitionFilters in the scan node). Ring radius comes from
-    ``max_hamming`` directly, or is derived from ``num_candidates`` using
-    per-bucket row counts read off the partition listing's parquet
-    metadata (a counts-only scan, no data columns)."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_ann_index.json")) as fh:
-        meta = json.load(fh)
-    bits, dim, seed = meta["bits"], meta["dim"], meta["seed"]
-    vec_col = meta["vec_col"]
-    q = [float(x) for x in query_vec]
-    planes = _hyperplanes(dim, bits, seed)
-    qbits = 0
-    for i, plane in enumerate(planes):
-        if sum(a * b for a, b in zip(q, plane)) >= 0:
-            qbits |= 1 << i
-    df = spark.read.parquet(path)
-    dist = F.bit_count(F.col("__bucket").bitwiseXOR(F.lit(qbits)))
-    if max_hamming is None:
-        target = num_candidates if num_candidates is not None else 20 * k
-        hist = {
-            r["__d"]: r["count"]
-            for r in df.groupBy(dist.alias("__d")).count().collect()
-        }
-        cum, max_hamming = 0, bits
-        for r in range(bits + 1):
-            cum += hist.get(r, 0)
-            if cum >= target:
-                max_hamming = r
-                break
-    candidates = df.filter(dist <= max_hamming).drop("__bucket")
-    return cosine_topk(candidates, q, k, id_col, vec_col)
+    routed = _ivf_route(df, query_vec, n_clusters, n_probe, seed, id_col, vec_col)
+    return cosine_topk(routed, query_vec, k, id_col, vec_col)
 
 
 def knn_join(
@@ -451,29 +419,17 @@ def knn_join(
     left_id: str = "vec_id",
     right_id: str = "vec_id",
     vec_col: str = "embedding",
-    broadcast_side: str | None = "left",
 ) -> DataFrame:
     """For each left row, its k nearest right rows by cosine (brute-force
     block-nested join + per-left-row window top-k).
 
-    ``broadcast_side`` ("left" | "right" | None) is the scale knob: the
-    kNN-join convention puts the query set on the left, which is normally
-    orders of magnitude smaller than the corpus — broadcasting it turns
-    the cartesian into a BroadcastNestedLoopJoin that streams the corpus
-    once with no shuffle. None falls back to Catalyst/AQE — with two
-    corpus-sized inputs that is a silent O(|L|·|R|) shuffled cartesian,
-    so it warns; use :func:`knn_join_bucketed` for corpus×corpus."""
+    The left side is the query set and is broadcast: the kNN-join
+    convention puts the (small) queries on the left, so the cartesian
+    plans as a BroadcastNestedLoopJoin that streams the corpus once with
+    no shuffle. There is no corpus×corpus kNN join: corpus-sized
+    candidate generation runs through IVF cells in
+    :func:`hard_negatives_ivf` (cross-label mining)."""
     from pyspark.sql import Window
-
-    if broadcast_side is None:
-        import warnings
-
-        warnings.warn(
-            "knn_join with broadcast_side=None plans an unguarded cartesian "
-            "product; with two large inputs this is O(|left|*|right|) "
-            "shuffle. Broadcast the small side, or use knn_join_bucketed "
-            "(sign-bucket-blocked equi-join) for corpus-scale inputs."
-        )
 
     def unit(df, id_name, out_id, out_vec):
         # normalize BEFORE the join: norm is computed once per row (as a
@@ -490,99 +446,9 @@ def knn_join(
             ),
         )
 
-    a = unit(left, left_id, "lid", "lv")
+    a = F.broadcast(unit(left, left_id, "lid", "lv"))
     b = unit(right, right_id, "rid", "rv")
-    if broadcast_side == "left":
-        a = F.broadcast(a)
-    elif broadcast_side == "right":
-        b = F.broadcast(b)
     scored = a.crossJoin(b).select(
-        "lid", "rid", dot(F.col("lv"), F.col("rv")).cast("double").alias("score")
-    )
-    w = Window.partitionBy("lid").orderBy(F.col("score").desc(), F.col("rid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("lid", "rid", "score", "rank")
-    )
-
-
-def _ring_masks(bits: int, max_hamming: int) -> list[int]:
-    """All XOR masks with popcount ≤ max_hamming over ``bits`` bits —
-    the probe set for a Hamming-ring bucket join."""
-    from itertools import combinations
-
-    masks = []
-    for h in range(max_hamming + 1):
-        for combo in combinations(range(bits), h):
-            m = 0
-            for b in combo:
-                m |= 1 << b
-            masks.append(m)
-    return masks
-
-
-def knn_join_bucketed(
-    left: DataFrame,
-    right: DataFrame,
-    k: int = 5,
-    left_id: str = "vec_id",
-    right_id: str = "vec_id",
-    vec_col: str = "embedding",
-    bits: int = 8,
-    max_hamming: int = 2,
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate kNN join for corpus×corpus inputs: candidates must
-    share a sign-bucket within ``max_hamming`` bits — an EQUI-join on the
-    bucket id, never a cartesian product.
-
-    Plan: both sides bucket once (``bits`` seeded hyperplane projections);
-    each left row explodes into its Hamming ring (``Σ C(bits,i), i ≤
-    max_hamming`` probe buckets — 37 at the 8/2 default), then a plain
-    shuffle equi-join on the bucket id scores only co-bucketed pairs and
-    a per-left-row window keeps the top k. Cost is
-    O(ring · |L| + pairs-in-shared-buckets) instead of O(|L|·|R|); the
-    ring size is the recall/cost dial (recall@k vs the exact
-    :func:`knn_join` is pinned ≥ 0.9 in tests at the defaults).
-
-    Probe buckets are distinct per left row and each right row hashes to
-    exactly one bucket, so no candidate pair duplicates — no distinct
-    pass needed before the window."""
-    from pyspark.sql import Window
-
-    if dim is None:
-        dim = len(left.select(vec_col).first()[0])
-    masks = _ring_masks(bits, max_hamming)
-
-    def unit(df, id_name, out_id, out_vec):
-        return df.select(
-            F.col(id_name).alias(out_id),
-            F.col(vec_col).alias("__v"),
-            norm(F.col(vec_col)).alias("__n"),
-        ).select(
-            out_id,
-            F.transform("__v", lambda x: x.cast("double") / F.col("__n")).alias(
-                out_vec
-            ),
-        )
-
-    a = (
-        unit(left, left_id, "lid", "lv")
-        .withColumn("__b0", sign_buckets(F.col("lv"), bits, dim, seed))
-        .withColumn(
-            "__bucket",
-            F.explode(
-                F.array(*[F.col("__b0").bitwiseXOR(F.lit(m)) for m in masks])
-            ),
-        )
-        .drop("__b0")
-    )
-    b = unit(right, right_id, "rid", "rv").withColumn(
-        "__bucket", sign_buckets(F.col("rv"), bits, dim, seed)
-    )
-    scored = a.join(b, "__bucket").select(
         "lid", "rid", dot(F.col("lv"), F.col("rv")).cast("double").alias("score")
     )
     w = Window.partitionBy("lid").orderBy(F.col("score").desc(), F.col("rid"))
@@ -755,7 +621,7 @@ def fit_pq(
     if dim is None:
         first = (
             df.select(id_col, vec_col)
-            .filter(v.isNotNull() & F.forall(v, lambda x: x.isNotNull()))
+            .filter(valid_vector(v))
             .orderBy(F.col(id_col).asc())
             .first()
         )
@@ -765,12 +631,7 @@ def fit_pq(
     if dim % m != 0:
         raise ValueError(f"dim={dim} not divisible into m={m} subspaces")
     dsub = dim // m
-    valid = (
-        v.isNotNull()
-        & (F.size(v) == dim)
-        & F.forall(v, lambda x: x.isNotNull())
-    )
-    base = df.filter(valid).select(
+    base = df.filter(valid_vector(v, dim)).select(
         F.col(id_col).alias("__id"),
         *[
             F.slice(v, j * dsub + 1, dsub).alias(f"__s{j}")
@@ -811,14 +672,8 @@ def pq_encode(
     dim) get a NULL code array — the ``kmeans_assign`` contract."""
     from mongo_arrow_spark.operators.clustering import argmin_cluster, quantize_vec
 
-    v = F.col(vec_col)
     dsub, m = model.dsub, model.m
     q = quantize_vec(vec_col, model.scale)
-    valid = (
-        v.isNotNull()
-        & (F.size(v) == model.dim)
-        & F.forall(v, lambda x: x.isNotNull())
-    )
     codes = F.array(
         *[
             argmin_cluster(
@@ -827,7 +682,7 @@ def pq_encode(
             for j in range(m)
         ]
     )
-    return df.withColumn(out_col, F.when(valid, codes))
+    return df.withColumn(out_col, F.when(valid_vector(vec_col, model.dim), codes))
 
 
 def pq_topk(
@@ -963,65 +818,13 @@ def ivf_pq_topk(
     Input needs the raw vectors (for cell assignment — persist the cell
     id instead at scale) and either precomputed ``codes_col`` or the
     vectors to encode on the fly."""
-    cols = set(df.columns)
-    if codes_col not in cols:
+    if codes_col not in df.columns:
         df = pq_encode(df, pq_model, id_col=id_col, vec_col=vec_col,
                        out_col=codes_col)
-    centroids = _fit_ivf_from_df(
-        df, n_clusters, seed, id_col, vec_col, pq_model.dim
-    )
-    probe = _probe_cells(centroids, query_vec, n_probe)
-    routed = df.filter(
-        _cell_expr(vec_col, centroids).isin([int(j) for j in probe])
-    )
+    routed = _ivf_route(df, query_vec, n_clusters, n_probe, seed, id_col, vec_col)
     return pq_topk(
-        routed, pq_model, query_vec, k=k, id_col=id_col,
-        codes_col=codes_col,
+        routed, pq_model, query_vec, k=k, id_col=id_col, codes_col=codes_col
     )
-
-
-def _fit_ivf_from_df(
-    df: DataFrame,
-    n_clusters: int,
-    seed: int,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-) -> list[list[float]]:
-    """Deterministic IVF fit from an ids-sorted driver sample — shared
-    by the in-plan ``ivf_pq_topk`` and the persisted
-    ``build_ivf_pq_index`` so both derive IDENTICAL cells (the artifact
-    round-trip parity contract). Full corrupt-vector filter: a NULL
-    element would crash the float() pull, a wrong-dim row would
-    silently skew the fit."""
-    v = F.col(vec_col)
-    sample = [
-        [float(x) for x in r[0]]
-        for r in df.select(vec_col)
-        .filter(
-            v.isNotNull()
-            & (F.size(v) == dim)
-            & F.forall(v, lambda x: x.isNotNull())
-        )
-        .orderBy(F.col(id_col).asc())
-        .limit(IVF_FIT_SAMPLE)
-        .collect()
-    ]
-    return fit_ivf_centroids(sample, n_clusters, seed)
-
-
-def _probe_cells(
-    centroids: list[list[float]], query_vec: list, n_probe: int
-) -> list[int]:
-    q = [float(x) for x in query_vec]
-    ranked = sorted(
-        range(len(centroids)),
-        key=lambda j: (
-            sum((a - b) * (a - b) for a, b in zip(centroids[j], q)),
-            j,
-        ),
-    )
-    return [int(j) for j in ranked[: max(1, n_probe)]]
 
 
 def build_ivf_pq_index(
@@ -1041,7 +844,7 @@ def build_ivf_pq_index(
     ONCE at build time, and every later query reads only its
     ``n_probe`` cell DIRECTORIES — probing is partition pruning against
     the listing, not a filter over a full scan (``ivf_pq_index_topk``;
-    the ``build_ann_index`` / ``pack_shards`` layout precedent).
+    the ``pack_shards`` layout precedent).
 
     Layout: ``path/__cell=J/…`` parquet carrying ONLY ``(id, codes)``
     — 8 small ints per row at the default m=8, never the raw vectors —
@@ -1124,14 +927,11 @@ def _hn_side(
     NULL or corrupt vector / wrong dim rows are excluded."""
     from mongo_arrow_spark.operators.clustering import quantize_vec
 
-    v = F.col(vec_col)
     extra = [F.col(vec_col).alias("__v")] if keep_vec else []
     return df.filter(
         F.col(id_col).isNotNull()
         & F.col(label_col).isNotNull()
-        & v.isNotNull()
-        & (F.size(v) == dim)
-        & F.forall(v, lambda x: x.isNotNull())
+        & valid_vector(vec_col, dim)
     ).select(
         F.col(id_col).alias(out_id),
         *extra,
@@ -1205,9 +1005,8 @@ def hard_negatives(
     rewrites into a map-side-partial ``WindowGroupLimit`` — each input
     partition pre-cuts to k rows per anchor before the one shuffle on
     the anchor id, so no anchor group ever streams corpus-sized data
-    through one task. For corpus×corpus mining use the sign-bucketed
-    candidate generation (``knn_join_bucketed``) and apply the label
-    filter to its candidate pairs instead.
+    through one task. For corpus×corpus mining use the IVF-routed
+    :func:`hard_negatives_ivf`.
     """
     a = _hn_side(
         anchors, id_col, vec_col, label_col, dim, scale,
@@ -1243,7 +1042,6 @@ def hard_negatives_ivf(
     max_qdot: int | None = None,
     probe_per_label: bool = False,
     target_cell_rows: int = 256,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """Corpus×corpus hard-negative mining — the scale path when the
     anchor set is itself corpus-sized (every doc mines its own
@@ -1311,30 +1109,10 @@ def hard_negatives_ivf(
     broadcast of the tiny presence table."""
     from pyspark.sql import Window
 
-    if centroids is None:
-        if n_clusters == "auto":
-            n_rows = corpus.count()
-            n_clusters = min(
-                1024, max(8, -(-n_rows // int(target_cell_rows)))
-            )
-        centroids = _fit_ivf_from_df(
-            corpus, n_clusters, seed, id_col, vec_col, dim
-        )
-    # pre-fit centroids (r10): repeated mining over the same corpus —
-    # per-epoch refresh, per-shard mining, the n_probe dial sweep —
-    # re-pays the bounded driver fit each call unless the caller passes
-    # the fit back in (fit once via fit_ivf_centroids/_fit_ivf_from_df,
-    # mine many). n_clusters/seed are ignored when centroids is given.
-    # A dim mismatch would NULL every distance via zip_with padding and
-    # surface as an unrelated int(None) crash (or a silent empty
-    # result) — reject it here instead.
-    if not centroids:
-        raise ValueError("centroids must be non-empty")
-    bad_dim = [len(c) for c in centroids if len(c) != dim]
-    if bad_dim:
-        raise ValueError(
-            f"centroid dims {sorted(set(bad_dim))} != dim={dim}"
-        )
+    if n_clusters == "auto":
+        n_rows = corpus.count()
+        n_clusters = min(1024, max(8, -(-n_rows // int(target_cell_rows))))
+    centroids = _fit_ivf_from_df(corpus, n_clusters, seed, id_col, vec_col, dim)
     n_probe = min(max(1, n_probe), len(centroids))
 
     # Self-mining (anchors IS the corpus frame — the contrastive-
@@ -1347,7 +1125,10 @@ def hard_negatives_ivf(
     # occur, the fields are built by ``F.struct`` over non-null-safe
     # exprs), so one materialized pass carries ``__sorted`` and both
     # sides project from it instead of re-running the n_clusters × dim
-    # distance fold over the same rows twice.
+    # distance fold over the same rows twice. Under AQE each
+    # ``localCheckpoint(eager=False)`` below still runs the spread's
+    # shuffle map stage at call time (1 job, by the status tracker); the
+    # first action over the frame fills the checkpoint.
     self_mine = anchors is corpus
     if self_mine:
         base = (

@@ -283,7 +283,7 @@ def q_sim_bruteforce(spark, sf_dir):
 def q_sim_lsh(spark, sf_dir):
     """16-bit sign-bucket LSH, hamming<=6 probe: scores ~23% of the corpus
     (sum C(16,i)/2^16, i<=6) for ~0.6 recall@10 on the random-vector test
-    embeddings — recall floor pinned in test_no_oracle_hardening."""
+    embeddings — recall floor pinned in tests/test_similarity.py."""
     emb = _t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     return similarity.cosine_topk_lsh(

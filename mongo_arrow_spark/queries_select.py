@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from mongo_arrow_spark.operators import packing as packing_ops
 from mongo_arrow_spark.operators import selection, tokenizer
+from mongo_arrow_spark.operators.clustering import valid_vector
 from mongo_arrow_spark.queries import _t, query
 from mongo_arrow_spark.queries_ops import _md5_bucket_sql
 
@@ -952,10 +953,7 @@ def q_select_mmr(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     qrow = (
         emb.filter(
-            F.col("embedding").isNotNull()
-            & F.col("vec_id").isNotNull()
-            & F.forall("embedding", lambda x: x.isNotNull())
-            & (F.size("embedding") == _DIM)
+            F.col("vec_id").isNotNull() & valid_vector("embedding", _DIM)
         )
         .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
         .select("embedding")

@@ -5,7 +5,7 @@ bit-identical replay) and a regression in versioning/decontaminate/
 novelty composition fails it loudly. Run as a real subprocess so it
 proves the example works exactly as a user would invoke it.
 
-The four subprocesses start when collection ends (the ``subprocess_gate``
+The five subprocesses start when collection ends (the ``subprocess_gate``
 marker, tests/conftest.py) and overlap the rest of the suite; the tests
 only join and assert."""
 
@@ -51,3 +51,12 @@ def test_contract_workflow_example_runs(gate_output):
     contract audit trail (r11), as a real subprocess."""
     assert "gate refused a broken release" in gate_output
     assert "shipped UNGATED" in gate_output
+
+
+@_example("diversity_ranking_tour.py")
+def test_diversity_ranking_tour_example_runs(gate_output):
+    """Coreset → MMR → PQ → IVF×PQ → centrality → shards, as a real
+    subprocess; the script itself asserts ``ivf_pq_topk == pq_topk``
+    when every cell is probed."""
+    assert "coreset: " in gate_output
+    assert "pq top-5: [(" in gate_output

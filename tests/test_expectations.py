@@ -230,19 +230,6 @@ def test_check_by_expected_groups_flags_vanished_group(spark):
         E.check(df, [E.not_null("text")], expected_groups=["en"])
 
 
-def test_hard_negatives_ivf_rejects_bad_centroids(spark):
-    from mongo_arrow_spark.operators import similarity as S
-
-    emb = spark.createDataFrame(
-        [(1, [0.0] * 4, "a"), (2, [1.0] * 4, "b")],
-        "vec_id long, embedding array<double>, label string",
-    )
-    with pytest.raises(ValueError, match="dim"):
-        S.hard_negatives_ivf(emb, emb, dim=4, centroids=[[0.0] * 8])
-    with pytest.raises(ValueError, match="non-empty"):
-        S.hard_negatives_ivf(emb, emb, dim=4, centroids=[])
-
-
 def test_ungated_retry_clears_orphaned_contract(spark, tmp_path):
     import os
 

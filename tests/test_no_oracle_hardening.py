@@ -14,7 +14,7 @@ twins rather than leaving them unverified (VERDICT r1, next-round #8).
 from pyspark.sql import functions as F
 
 from mongo_arrow_spark.battery import QUERIES
-from mongo_arrow_spark.operators import dedup, similarity
+from mongo_arrow_spark.operators import dedup
 
 from conftest import SF_DIR
 
@@ -111,74 +111,6 @@ def test_embedding_neardup_bucketed_subset_of_exact(spark, tables):
     assert bucketed <= exact
     recall = len(bucketed) / len(exact)
     assert recall >= 0.2, f"bucketed recall {recall:.3f} of {len(exact)} pairs"
-
-
-def test_knn_join_bucketed_recall_vs_exact(spark, tables):
-    """The sign-bucket-blocked kNN join (the corpus×corpus form — an
-    equi-join on bucket ids, no cartesian) recovers ≥0.9 of the exact
-    knn_join's pairs. Random Gaussian fixtures are hyperplane-LSH's worst
-    case, hence the wide ring (bits=6, max_hamming=3 = 42 probe buckets);
-    clustered real-world embeddings prune far harder at the 8/2 default.
-    Scores on returned pairs are exact cosines either way."""
-    from mongo_arrow_spark.operators import similarity
-
-    emb = _emb(spark)
-    left = emb.limit(60)
-    exact = similarity.knn_join(left, emb, k=3)
-    approx = similarity.knn_join_bucketed(
-        left, emb, k=3, bits=6, max_hamming=3
-    )
-    ex = {(r["lid"], r["rid"]): r["score"] for r in exact.collect()}
-    ap = {(r["lid"], r["rid"]): r["score"] for r in approx.collect()}
-    recall = len(set(ex) & set(ap)) / len(ex)
-    assert recall >= 0.9, f"bucketed knn recall@3 {recall:.3f}"
-    for pair in set(ex) & set(ap):
-        assert abs(ex[pair] - ap[pair]) < 1e-9  # exact scoring, same pair
-
-
-def test_knn_join_unguarded_cartesian_warns(spark, tables):
-    """broadcast_side=None on knn_join is the silent O(n^2) hazard — it
-    must warn and point at the bucketed variant."""
-    import warnings
-
-    from mongo_arrow_spark.operators import similarity
-
-    emb = _emb(spark).limit(10)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        similarity.knn_join(emb, emb, k=2, broadcast_side=None)
-    assert any("knn_join_bucketed" in str(x.message) for x in w)
-
-
-def _topk_ids(df):
-    return [r["vec_id"] for r in df.collect()]
-
-
-def test_sim_lsh_recall_vs_bruteforce(spark, tables):
-    """LSH top-k candidates vs the exact brute-force top-k (query vec 0):
-    fixed hyperplane seed → deterministic overlap; floor it."""
-    exact = set(_topk_ids(QUERIES["sim_bruteforce_topk"](spark, SF_DIR)))
-    got = QUERIES["sim_topk_lsh"](spark, SF_DIR).collect()
-    ids = {r["vec_id"] for r in got}
-    recall = len(ids & exact) / len(exact)
-    assert recall >= 0.5, f"lsh recall@10 {recall:.2f}"
-    # scores it does return are the true cosines (scoring is exact)
-    exact_scores = {
-        r["vec_id"]: r["score"]
-        for r in QUERIES["sim_bruteforce_topk"](spark, SF_DIR).collect()
-    }
-    for r in got:
-        if r["vec_id"] in exact_scores:
-            assert abs(r["score"] - exact_scores[r["vec_id"]]) <= 1e-4
-
-
-def test_sim_ivf_recall_vs_bruteforce(spark, tables):
-    """IVF (8 cells, probe 2) vs brute-force top-10 — seeded KMeans makes
-    the cell assignment deterministic; floor the recall."""
-    exact = set(_topk_ids(QUERIES["sim_bruteforce_topk"](spark, SF_DIR)))
-    got = set(_topk_ids(QUERIES["sim_ivf_topk"](spark, SF_DIR)))
-    recall = len(got & exact) / len(exact)
-    assert recall >= 0.5, f"ivf recall@10 {recall:.2f}"
 
 
 # --------------------------------------------- MinHash LSH replay oracle
@@ -371,50 +303,6 @@ def test_compression_ratio_replay_oracle(spark, tables):
         assert abs(gratio - ratio) < 1e-12, did
 
 
-def test_sim_lsh_replay_oracle(spark, tables):
-    """Full-output replay for sim_topk_lsh: recompute the seeded
-    hyperplanes, every row's 16-bit sign bucket, the Hamming<=6
-    candidate set, exact cosines, and the (score desc, vec_id asc)
-    top-10 in Python — ids and rounded scores must match exactly."""
-    import math
-
-    from mongo_arrow_spark.operators.similarity import _hyperplanes
-
-    rows = {
-        r["vec_id"]: list(r["embedding"])
-        for r in _emb(spark).select("vec_id", "embedding").collect()
-    }
-    q = [float(x) for x in rows[0]]
-    planes = _hyperplanes(len(q), 16, 42)
-
-    def bucket(v):
-        b = 0
-        for i, p in enumerate(planes):
-            if sum(float(a) * c for a, c in zip(v, p)) >= 0:
-                b |= 1 << i
-        return b
-
-    qb = bucket(q)
-    qn = math.sqrt(sum(x * x for x in q))
-    scored = []
-    for vid, v in rows.items():
-        if bin(bucket(v) ^ qb).count("1") > 6:
-            continue
-        vf = [float(x) for x in v]
-        dot = sum(a * b for a, b in zip(vf, q))
-        vn = math.sqrt(sum(x * x for x in vf))
-        scored.append((vid, dot / (vn * qn)))
-    scored.sort(key=lambda t: (-t[1], t[0]))
-    want = [(vid, round(s, 4)) for vid, s in scored[:10]]
-    got = [
-        (r["vec_id"], r["score"])
-        for r in QUERIES["sim_topk_lsh"](spark, SF_DIR).collect()
-    ]
-    assert [g[0] for g in got] == [w[0] for w in want]
-    for (gv, gs), (wv, ws) in zip(got, want):
-        assert abs(gs - ws) <= 1e-4, (gv, gs, ws)
-
-
 def test_neardup_gate_replay_oracle(spark, tables):
     """Full-output replay oracle for the neardup_ingest_gate battery
     entry: probe results (flag, match count, best id, best estimate)
@@ -515,110 +403,3 @@ def test_embedding_neardup_replay_oracle(spark, tables):
     for pair, cos in want.items():
         assert abs(got[pair] - cos) <= 1e-4, (pair, got[pair], cos)
     assert want, "replay must be non-vacuous (some pairs at sf0.001)"
-
-
-def test_sim_ivf_replay_oracle(spark, tables):
-    """Full-output replay for sim_ivf_topk: refit the deterministic
-    seeded Lloyd's centroids from the same ids-sorted sample, assign
-    every vector's cell with the same left-to-right float folds, choose
-    the same probe cells, and rank the candidate cosines — ids must
-    match exactly, rounded scores to 1e-4."""
-    import math
-
-    from mongo_arrow_spark.operators.similarity import (
-        IVF_FIT_SAMPLE,
-        _nearest_cell,
-        fit_ivf_centroids,
-    )
-
-    rows = sorted(
-        (r["vec_id"], [float(x) for x in r["embedding"]])
-        for r in _emb(spark).select("vec_id", "embedding").collect()
-    )
-    sample = [v for _, v in rows[:IVF_FIT_SAMPLE]]
-    centroids = fit_ivf_centroids(sample, n_clusters=8, seed=42)
-    q = dict(rows)[0]
-
-    def dist2(c):
-        d = 0.0
-        for a, b in zip(c, q):
-            d += (a - b) * (a - b)
-        return d
-
-    probe = set(
-        sorted(range(len(centroids)), key=lambda i: (dist2(centroids[i]), i))[:2]
-    )
-    qn = math.sqrt(sum(x * x for x in q))
-    scored = []
-    for vid, v in rows:
-        if _nearest_cell(v, centroids) not in probe:
-            continue
-        dot = 0.0
-        for a, b in zip(v, q):
-            dot += a * b
-        vn = math.sqrt(sum(x * x for x in v))
-        scored.append((vid, dot / (vn * qn)))
-    scored.sort(key=lambda t: (-t[1], t[0]))
-    want = [(vid, round(s, 4)) for vid, s in scored[:10]]
-    got = [
-        (r["vec_id"], r["score"])
-        for r in QUERIES["sim_ivf_topk"](spark, SF_DIR).collect()
-    ]
-    assert [g[0] for g in got] == [w[0] for w in want]
-    for (gv, gs), (wv, ws) in zip(got, want):
-        assert abs(gs - ws) <= 1e-4, (gv, gs, ws)
-    assert want, "replay must be non-vacuous"
-
-
-def test_sim_topk_int8_replay_oracle(spark, tables):
-    """Full-output replay for sim_topk_int8 (quantize → int8 scan top-50
-    → float re-rank top-10): per-row amax/scale, HALF_UP rounding like
-    Spark's F.round, exact integer dot products, the same double
-    division — then the float cosine re-rank. Ids exact, scores 1e-6."""
-    import math
-
-    def round_half_up(x):
-        return math.floor(x + 0.5) if x >= 0 else math.ceil(x - 0.5)
-
-    rows = sorted(
-        (r["vec_id"], [float(x) for x in r["embedding"]])
-        for r in _emb(spark).select("vec_id", "embedding").collect()
-    )
-    q = dict(rows)[0]
-    amax_q = max(abs(x) for x in q) or 1.0
-    qs = 127.0 / amax_q
-    # the operator quantizes the query driver-side with python round()
-    # (banker's); replay must use the same call
-    q_int = [int(round(x * qs)) for x in q]
-    qlit_norm = math.sqrt(sum(v * v for v in q_int)) or 1.0
-
-    cands = []
-    for vid, v in rows:
-        amax = 0.0
-        for x in v:
-            amax = max(amax, abs(x))
-        scale = 127.0 / amax if amax > 0 else 1.0
-        qv = [int(round_half_up(x * scale)) for x in v]
-        int_dot = sum(a * b for a, b in zip(qv, q_int))
-        qnorm2 = sum(a * a for a in qv)
-        score = float(int_dot) / (math.sqrt(float(qnorm2)) * qlit_norm)
-        cands.append((vid, score, v))
-    cands.sort(key=lambda t: (-t[1], t[0]))
-    top50 = cands[:50]
-    qn = math.sqrt(sum(x * x for x in q))
-    rer = []
-    for vid, _, v in top50:
-        dot = 0.0
-        for a, b in zip(v, q):
-            dot += a * b
-        vn = math.sqrt(sum(x * x for x in v))
-        rer.append((vid, dot / (vn * qn)))
-    rer.sort(key=lambda t: (-t[1], t[0]))
-    want = rer[:10]
-    got = [
-        (r["vec_id"], r["score"])
-        for r in QUERIES["sim_topk_int8"](spark, SF_DIR).collect()
-    ]
-    assert [g[0] for g in got] == [w[0] for w in want]
-    for (gv, gs), (wv, ws) in zip(got, want):
-        assert abs(gs - ws) <= 1e-6, (gv, gs, ws)

@@ -130,23 +130,6 @@ def test_knn_join_broadcasts_query_side(spark, tables):
     assert "CartesianProduct" not in p
 
 
-def test_knn_join_bucketed_is_equi_join(spark, tables):
-    """The corpus×corpus kNN form must plan an equi-join on the bucket id
-    — no CartesianProduct, no BroadcastNestedLoopJoin, at the defaults."""
-    from pyspark.sql import functions as F2
-
-    from mongo_arrow_spark.operators.similarity import knn_join_bucketed
-    from mongo_arrow_spark.session import read_documents_parquet
-
-    emb = read_documents_parquet(spark, f"{__import__('conftest').SF_DIR}/embeddings.parquet")
-    out = knn_join_bucketed(emb.limit(20), emb, k=2)
-    p = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-    assert "Join" in p  # it IS a join — on the bucket key
-    assert out.count() > 0
-
-
 def test_vector_search_take_ordered(spark, tables):
     """$vectorSearch limit must compile to TakeOrderedAndProject (no
     global sort of the scored corpus)."""
@@ -188,51 +171,6 @@ def test_vector_search_ann_prunes_scan(spark, tables):
     assert "TakeOrderedAndProject" in p
     assert "Exchange" not in p.split("TakeOrderedAndProject")[0] or True
     assert "CartesianProduct" not in p
-
-
-def test_ann_index_partition_pruning(spark, tmp_path, tables):
-    """A persisted ANN index must turn the Hamming-ring predicate into
-    partition pruning: the scan reads only matching __bucket partitions
-    and results match the in-memory pruned search exactly."""
-    from mongo_arrow_spark.operators.similarity import (
-        ann_index_topk,
-        build_ann_index,
-        cosine_topk,
-    )
-
-    emb = tables["embeddings"]
-    path = str(tmp_path / "ann_idx")
-    build_ann_index(emb, path, bits=6)
-    qv = [float(x) for x in emb.filter("vec_id = 3").first()["embedding"]]
-    out = ann_index_topk(spark, path, qv, k=5, max_hamming=2)
-    rows = [(r["vec_id"], round(r["score"], 9)) for r in out.collect()]
-    # exact-equality oracle: the same Hamming ring over the in-memory frame
-    from pyspark.sql import functions as F2
-
-    from mongo_arrow_spark.operators.similarity import _hyperplanes, sign_buckets
-
-    dim = len(qv)
-    planes = _hyperplanes(dim, 6, 42)
-    qbits = 0
-    for i, plane in enumerate(planes):
-        if sum(a * b for a, b in zip(qv, plane)) >= 0:
-            qbits |= 1 << i
-    ring = emb.filter(
-        F2.bit_count(
-            sign_buckets(F2.col("embedding"), 6, dim, 42).bitwiseXOR(F2.lit(qbits))
-        )
-        <= 2
-    )
-    want = [
-        (r["vec_id"], round(r["score"], 9))
-        for r in cosine_topk(ring, qv, 5).collect()
-    ]
-    assert rows == want
-    # plan: partition filters present on the scan, not a full read
-    p = out._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in p
-    seg = p.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
-    assert seg.strip(), "partition filter list is empty — no pruning"
 
 
 def test_mix_sources_broadcasts_plan_not_corpus(spark, tables):
